@@ -172,10 +172,10 @@ def crash_template(spark, tmp_path_factory, request):
     return world, seeds, base, snap_ref, lin_ref, tmpl, dedup
 
 
-# Round-1 write order in the driver: scheduled -> seen_bloom ->
-# documents -> [doc_dedup_state] -> mentions -> page_stats -> products
-# -> frontier(r=2) -> lineage (commit marker). Each window = crash right
-# after one of those writes; the dirs present are exactly the prefix.
+# Round-1 writes in the driver: scheduled -> seen_bloom -> documents,
+# then frontier(r=2) on one chain while [doc_dedup_state] -> mentions ->
+# page_stats -> products run on the other; lineage (commit marker) lands
+# after both. Each window = a crash that left exactly the listed dirs.
 # (The former scheduled-vs-seen window no longer exists: seen is derived
 # from scheduled, so the two can never disagree.) The doc_dedup window
 # only exists in the dedup_on half of the matrix.
@@ -279,10 +279,91 @@ def test_lineage_mixed_writer_rounds_read_as_one(spark, tmp_path_factory):
     # round 1 via the LOCAL writer (how r7 writes it)
     row1 = dict(row0, round=1, fetched=3)
     cat.write_round_local([row1], "lineage", 1, schemas.LINEAGE)
-    df = cat.read_all("lineage")
-    assert [f.dataType.simpleString() for f in df.schema.fields] == [
-        f.dataType.simpleString() for f in schemas.LINEAGE.fields
-    ]
-    got = sorted((r["round"], r["fetched"]) for r in df.collect())
-    assert got == [(0, 2), (1, 3)]
+    # the writing catalog reads with the schema it remembers; a fresh
+    # one (as on resume) infers it from the two writers' footers
+    for reader in (cat, Catalog(spark, cat.base)):
+        df = reader.read_all("lineage")
+        assert [f.dataType.simpleString() for f in df.schema.fields] == [
+            f.dataType.simpleString() for f in schemas.LINEAGE.fields
+        ]
+        got = sorted((r["round"], r["fetched"]) for r in df.collect())
+        assert got == [(0, 2), (1, 3)]
     assert cat.max_committed_round() == 1
+
+
+def _jobs_of(spark, fn):
+    """(result of fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"probe-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_remembered_schema_reads_match_inference(spark, tmp_path_factory):
+    """The catalog remembers the schema of what it wrote, so its reads
+    skip the footer-inference job; rows and schema must equal a fresh
+    catalog's inferring read — for plain rounds, the derived seen table,
+    a band-partitioned frontier_q round and an EMPTY frontier_q delta."""
+    from webcrawlerfull_spark.streaming import delta_frontier as dfq
+
+    root = str(tmp_path_factory.mktemp("schema_mem"))
+    cat = Catalog(spark, root)
+    # (url, host, domain, depth, priority, discovery_seq, salt_bucket,
+    #  round, pos, band)
+    q = spark.createDataFrame(
+        [
+            ("https://h/a", "h", "h", 0, 1, 0, 3, 0, 0, 0),
+            ("https://h/b", "h", "h", 1, 2, 5, 9, 0, 7, 1),
+        ],
+        schema=dfq.QUEUE,
+    )
+    cat.write_round(q, "frontier_q", 0, partition_by=["band"])
+    cat.write_round(q.limit(0), "frontier_q", 1, partition_by=["band"])
+    sched = q.drop("band").withColumn("fetch_round", F.lit(0))
+    cat.write_round(sched, "scheduled", 0)
+    cat.write_round(
+        spark.range(3).select(F.col("id").alias("n"), F.lit("x").alias("s")),
+        "products", 0,
+    )
+    fresh = Catalog(spark, root)
+    reads = {
+        "products": lambda c: c.read_round("products", 0),
+        "products_all": lambda c: c.read_all("products"),
+        "seen": lambda c: c.read_all("seen"),
+        "q0": lambda c: c.read_round("frontier_q", 0),
+        "q_all": lambda c: c.read_all_with_round("frontier_q"),
+        "q1_empty": lambda c: c.read_round("frontier_q", 1, schema=dfq.QUEUE),
+    }
+    for name, read in reads.items():
+        mem, mem_jobs = _jobs_of(spark, lambda: read(cat))
+        inf = read(fresh)
+        assert mem.schema == inf.schema, name
+        assert sorted(map(tuple, mem.collect())) == sorted(
+            map(tuple, inf.collect())
+        ), name
+        assert mem_jobs == 0, name
+    _, jobs = _jobs_of(
+        spark, lambda: Catalog(spark, root).read_round("products", 0)
+    )
+    assert jobs >= 1  # a fresh catalog pays the inference job
+
+
+def test_schema_changing_write_falls_back_to_inference(spark, tmp_path_factory):
+    """A later write whose schema differs (nullability aside) drops the
+    remembered schema: reads infer again and see the new column."""
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("schema_chg")))
+    base = spark.range(2).select(F.col("id").alias("n"))
+    cat.write_round(base, "mentions", 0)
+    # same shape, different nullability: the remembered schema stays
+    cat.write_round(base.withColumn("n", F.lit(5).cast("long")), "mentions", 1)
+    _, jobs = _jobs_of(spark, lambda: cat.read_round("mentions", 1))
+    assert jobs == 0
+    cat.write_round(base.withColumn("extra", F.lit("e")), "mentions", 2)
+    df, jobs = _jobs_of(spark, lambda: cat.read_round("mentions", 2))
+    assert jobs >= 1
+    assert df.columns == ["n", "extra"]
+    assert {r["extra"] for r in df.collect()} == {"e"}

@@ -134,46 +134,140 @@ def test_delta_resume_converges(spark, tmp_path_factory):
     assert _snap(again) == _snap(ref)
 
 
-_DELTA_WINDOWS = {
-    # round-1 write order in delta mode: scheduled -> seen_bloom ->
-    # documents -> mentions -> page_stats -> products -> frontier_q(r=2)
-    # -> frontier_cursor(r=2) -> lineage (commit marker)
-    "after_scheduled": ("scheduled",),
-    "after_documents": ("scheduled", "seen_bloom", "documents"),
-    "after_frontier_q": (
-        "scheduled", "seen_bloom", "documents", "mentions", "page_stats",
-        "products", "frontier_q",
-    ),
-}
-
-
-@pytest.mark.parametrize("window", sorted(_DELTA_WINDOWS))
-def test_delta_mid_round_crash_window(spark, tmp_path_factory, window):
-    """Every partial-write window inside a delta-mode round (including a
-    landed frontier_q delta whose cursor update never committed) resumes
-    to the uninterrupted run's state."""
+@pytest.fixture(scope="module")
+def delta_crash_template(spark, tmp_path_factory):
+    """Shared inputs for the delta-mode crash tests, built once per
+    doc_dedup setting: ``template(dedup)`` returns the world, the config,
+    the uninterrupted run's seen set, product set and lineage counts, and
+    a 2-round catalog snapshot each window test copies and mutilates."""
     world = World(seed=42, n_hosts=4, base_pages=40)
-    kw = dict(politeness_budget=4, use_bloom=True, frontier_mode="delta")
-    ref, _ = _crawl(spark, str(tmp_path_factory.mktemp("wref")), world, **kw)
-    root = str(tmp_path_factory.mktemp(f"w_{window}"))
-    cat = Catalog(spark, root)
-    cfg = CrawlConfig(max_depth=2, shuffle_partitions=8, **kw)
-    crawl(spark, world.seeds(), cfg, world, cat, max_rounds=2)
-    present = _DELTA_WINDOWS[window]
-    shutil.rmtree(cat._dir("lineage", 1))
-    shutil.rmtree(cat._dir("frontier_cursor", 2), ignore_errors=True)
-    for t in (
-        "seen_bloom", "documents", "mentions", "page_stats", "products",
-        "frontier_q",
-    ):
-        if t not in present:
-            shutil.rmtree(cat._dir(t, 2 if t == "frontier_q" else 1),
-                          ignore_errors=True)
-    assert cat.max_committed_round() == 0
+    built = {}
+
+    def template(dedup: bool):
+        if dedup not in built:
+            cfg = CrawlConfig(
+                max_depth=2, shuffle_partitions=8, politeness_budget=4,
+                use_bloom=True, frontier_mode="delta",
+                doc_dedup=dedup, dedup_k=16, dedup_bands=4,
+            )
+            ref = crawl(
+                spark, world.seeds(), cfg, world,
+                Catalog(spark, str(tmp_path_factory.mktemp("wref"))),
+            )
+            tmpl = str(tmp_path_factory.mktemp("wtmpl"))
+            crawl(spark, world.seeds(), cfg, world, Catalog(spark, tmpl),
+                  max_rounds=2)
+            built[dedup] = world, cfg, _snap(ref), _lineage(ref), tmpl
+        return built[dedup]
+
+    return template
+
+
+def _lineage(res):
+    return sorted(
+        (r["round"], r["fetched"], r["products"], r["docs_deduped"])
+        for r in res.lineage.collect()
+    )
+
+
+def _assert_resumes_to(spark, world, cfg, cat, snap_ref, lin_ref):
     res = crawl(spark, world.seeds(), cfg, world, cat)
-    assert _snap(res) == _snap(ref)
+    assert _snap(res) == snap_ref
+    assert _lineage(res) == lin_ref
     dup = res.seen.groupBy("url").count().where(F.col("count") > 1)
     assert dup.count() == 0
+
+
+# Round-1 writes in delta mode: scheduled -> [seen_bloom] -> documents,
+# then two chains in flight together: frontier_q(r=2) ->
+# frontier_cursor(r=2), and doc_dedup_state -> mentions -> page_stats ->
+# products; lineage (the commit marker) lands after both. Each window is
+# a set of landed writes a crash can leave behind; with doc-dedup off,
+# doc_dedup_state is never written, so it is absent from every window.
+_DELTA_WINDOWS = {
+    "after_scheduled": ("scheduled",),
+    "after_documents": ("scheduled", "seen_bloom", "documents"),
+    # the frontier chain landed, doc-dedup and the products chain did not
+    "after_frontier_chain": (
+        "scheduled", "seen_bloom", "documents", "frontier_q",
+        "frontier_cursor",
+    ),
+    "after_frontier_q": (
+        "scheduled", "seen_bloom", "documents", "doc_dedup_state",
+        "mentions", "page_stats", "products", "frontier_q",
+    ),
+}
+_NEXT_ROUND_TABLES = ("frontier_q", "frontier_cursor")
+_DELTA_CASES = [(d, w) for d in (False, True) for w in sorted(_DELTA_WINDOWS)]
+
+
+@pytest.mark.parametrize(
+    "dedup,window",
+    _DELTA_CASES,
+    ids=[f"dedup_on-{w}" if d else w for d, w in _DELTA_CASES],
+)
+def test_delta_mid_round_crash_window(
+    spark, tmp_path_factory, delta_crash_template, dedup, window
+):
+    """Every partial-write window inside a delta-mode round (including a
+    landed frontier_q delta whose cursor update never committed, and a
+    landed frontier chain whose sibling dedup/products chain did not)
+    resumes to the uninterrupted run's state, with doc-dedup off and on."""
+    world, cfg, snap_ref, lin_ref, tmpl = delta_crash_template(dedup)
+    root = str(tmp_path_factory.mktemp(f"w_{window}"))
+    shutil.rmtree(root)
+    shutil.copytree(tmpl, root)
+    cat = Catalog(spark, root)
+    present = set(_DELTA_WINDOWS[window])
+    if not dedup:
+        present.discard("doc_dedup_state")
+    shutil.rmtree(cat._dir("lineage", 1))
+    for t in (
+        "seen_bloom", "documents", "doc_dedup_state", "mentions",
+        "page_stats", "products", *_NEXT_ROUND_TABLES,
+    ):
+        if t not in present and (dedup or t != "doc_dedup_state"):
+            shutil.rmtree(cat._dir(t, 2 if t in _NEXT_ROUND_TABLES else 1))
+    assert cat.max_committed_round() == 0
+    for t in ("frontier_q", "frontier_cursor", "doc_dedup_state",
+              "mentions", "products"):
+        rnd = 2 if t in _NEXT_ROUND_TABLES else 1
+        assert cat.has_round(t, rnd) == (t in present), t
+    _assert_resumes_to(spark, world, cfg, cat, snap_ref, lin_ref)
+
+
+def test_chain_failure_joins_threads_and_resumes(
+    spark, tmp_path_factory, delta_crash_template, monkeypatch
+):
+    """A doc-dedup write that fails in round 1 while the next-frontier
+    chain is in flight: the failure propagates, the round's pool leaves
+    no thread alive, and a resume on the same catalog converges to the
+    uninterrupted run with no URL fetched twice."""
+    import threading
+
+    world, cfg, snap_ref, lin_ref, _ = delta_crash_template(True)
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("chain_fail")))
+    write_round = Catalog.write_round
+    frontier_started = threading.Event()
+
+    def failing_write(self, df, table, round_id, *a, **kw):
+        if table == "frontier_q" and round_id == 2:
+            frontier_started.set()
+        if table == "doc_dedup_state" and round_id == 1:
+            assert frontier_started.wait(120)
+            raise RuntimeError("injected doc_dedup_state failure")
+        return write_round(self, df, table, round_id, *a, **kw)
+
+    monkeypatch.setattr(Catalog, "write_round", failing_write)
+    with pytest.raises(RuntimeError, match="injected doc_dedup_state"):
+        crawl(spark, world.seeds(), cfg, world, cat)
+    monkeypatch.undo()
+    assert frontier_started.is_set()
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("crawl-chain")
+    ]
+    assert cat.max_committed_round() == 0
+    _assert_resumes_to(spark, world, cfg, cat, snap_ref, lin_ref)
 
 
 def test_delta_compaction_transparent(spark, tmp_path_factory):

@@ -267,3 +267,42 @@ def test_first_touch_products_matches_generic(spark):
     assert fast.schema["depth"].dataType.simpleString() == "int"
     # absurd depth -> generic fallback signal
     assert first_touch_products(m, 1 << 60) is None
+
+
+def test_first_touch_products_falls_back_past_four_parsers(
+    spark, tmp_path, monkeypatch
+):
+    """parser_rank rides in 2 bits of the packed attribution key: with a
+    fifth cascade parser the specialization must decline, and the
+    products chain must attribute through the generic first_touch (a
+    packed rank 4 would alias to rank 0, 'simple')."""
+    from webcrawlerfull_spark.config import CrawlConfig
+    from webcrawlerfull_spark.operators import cascade
+    from webcrawlerfull_spark.operators.attribution import first_touch_products
+    from webcrawlerfull_spark.sources.catalog import Catalog
+    from webcrawlerfull_spark.streaming.driver import _products_chain
+
+    five = dict(cascade.PARSER_RANK, extra=4)
+    m = spark.createDataFrame(
+        [
+            ("d/pg0", "h", "d", 1, 0, "u/x", "extra", 4),
+            ("d/pg1", "h", "d", 1, 1, "u/x", "simple", 0),
+            ("d/pg1", "h", "d", 1, 1, "u/y", "simple", 0),
+        ],
+        "page_url string, host string, domain string, depth int, "
+        "queue_pos long, url string, parser string, parser_rank int",
+    )
+    assert first_touch_products(m, 3) is not None
+    monkeypatch.setattr(cascade, "PARSER_RANK", five)
+    assert first_touch_products(m, 3) is None
+
+    cat = Catalog(spark, str(tmp_path))
+    stats = spark.createDataFrame([("d/pg0", 1)], "page_url string, n int")
+    # m stands in for the cascade's page_arrays base too
+    n = _products_chain(cat, CrawlConfig(max_depth=3), m, stats, m, 0)
+    got = {
+        r["url"]: (r["parser"], r["depth"])
+        for r in cat.read_round("products", 0).collect()
+    }
+    assert n == 2
+    assert got == {"u/x": ("extra", 1), "u/y": ("simple", 1)}

@@ -7,7 +7,7 @@ stack; this package replaces it with DataFrame-resident state:
 - ``operators.parse_spans``   — HTML → interleaved spans (the input_hint payload)
 - ``functions.urlnorm``       — URL normalization as native Spark columns
 - ``functions.predicates``    — pagination / product / category predicates
-- ``plans.round``             — one crawl round as a pure DataFrame function
+- ``plans.round``             — schedule-side round operators (politeness, robots)
 - ``streaming.driver``        — micro-batch crawl loop with resume
 - ``operators.bloom``         — partitioned bloom URL-seen filter
 - ``oracle``                  — vendored single-process reference semantics

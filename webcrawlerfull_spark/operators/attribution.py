@@ -36,8 +36,10 @@ def first_touch_products(
     every mention partition was the products stage's dominant cost).
 
     Returns (domain, url, parser, depth) of each (domain, url)'s first
-    mention, or None when ``max_depth`` is too large for the packing
-    (caller falls back to the generic ``first_touch``).
+    mention, or None when ``max_depth`` is too large for the packing or
+    the cascade has more than four parsers (parser_rank gets 2 bits; a
+    fifth rank would silently alias) — the caller then falls back to the
+    generic ``first_touch``.
 
     Equivalence: within one page (queue_pos) a product url appears in at
     most ONE parser array (config_only/ai_only/seq_arr are disjoint from
@@ -48,8 +50,10 @@ def first_touch_products(
     winning row's parser_rank and depth ride in the low bits as payload
     (depth <= max_depth and parser_rank < 4 bound the fields; queue_pos
     is a within-round row position, far below the remaining 2^45+)."""
+    from webcrawlerfull_spark.operators.cascade import PARSER_RANK
+
     depth_bits = max(4, int(max_depth).bit_length() + 1)
-    if depth_bits + 2 + 45 > 63:
+    if depth_bits + 2 + 45 > 63 or len(PARSER_RANK) > 4:
         return None
     shift_rank = depth_bits
     shift_pos = depth_bits + 2
@@ -62,8 +66,6 @@ def first_touch_products(
         F.min(packed).alias("_p")
     )
     rank = F.shiftright(F.col("_p"), shift_rank).bitwiseAND(F.lit(3))
-    from webcrawlerfull_spark.operators.cascade import PARSER_RANK
-
     parser = F.lit(None).cast("string")
     for name, r in PARSER_RANK.items():
         parser = F.when(rank == F.lit(r), F.lit(name)).otherwise(parser)

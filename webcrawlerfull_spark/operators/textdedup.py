@@ -545,6 +545,33 @@ def dedup_scheme(k: int, bands: int, family: str) -> str:
     return f"dedup:minhash-{family}:k={k}:b={bands}:v1"
 
 
+def check_dedup_scheme(state: DataFrame, k: int, bands: int, family: str) -> None:
+    """Raise unless persisted dedup state was written under this run's
+    scheme. Band hashes are only comparable within one (family, k,
+    bands) tuple — probing state written under another silently misses
+    every near-dup (the bloom HASH_SCHEME hazard). Unlike bloom state,
+    band state CANNOT be rebuilt (the source text may be gone), so a
+    mismatch is a hard error, not a rebuild."""
+    expect = dedup_scheme(k, bands, family)
+    found = {
+        r["status"]
+        for r in state.where(F.col("kind") == "meta")
+        .select("status")
+        .distinct()
+        .collect()
+    } or {"<unstamped legacy state>"}
+    if found != {expect}:
+        raise ValueError(
+            "persisted doc_dedup_state was written under scheme(s) "
+            f"{sorted(found)} but this run uses {expect!r}; resume with "
+            "the original dedup_family/dedup_k/dedup_bands or start a "
+            "fresh catalog. (State that predates the scheme marker is "
+            "intentionally unresumable: its family/k/bands cannot be "
+            "validated, and probing it under the wrong scheme would "
+            "silently miss every near-duplicate.)"
+        )
+
+
 def incremental_dedup_delta(
     docs: DataFrame,
     state: DataFrame | None,

@@ -1,13 +1,11 @@
-"""One crawl round as a pure DataFrame function (SURVEY.md §7 step 2).
+"""Schedule-side round operators the crawl driver
+(streaming/driver.py) composes into a round:
 
-round(frontier, seen) →
-    scheduled   (politeness top-k per host, J1 anti-join vs seen)
-    pages       (fetch+parse mapInPandas over the synthetic world)
-    mentions    (parser cascade + sequential generation, with page-level
-                 attribution metadata)
-    stats       (per-page parser counts → lineage aggregates)
-    next frontier (O2/O3 construction)
-    seen delta  (the scheduled slice — marked before fetch, tasks.py:438-440)
+- ``politeness_schedule`` — the per-host per-round fetch quota
+  (scheduled slice + deferred rest) of the merged frontier layout;
+- ``apply_robots`` — robots gating of a frontier or candidate slice;
+- ``merge_deferred`` — carries the deferred rows into the next merged
+  frontier.
 
 In parity mode (politeness_budget=None) one round == one reference BFS
 depth and the schedule order is exactly the reference's frontier order.
@@ -17,27 +15,8 @@ round and the rest of the frontier carries over — the scale path.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from webcrawlerfull_spark import config as C
-from webcrawlerfull_spark.operators import bloom
-from webcrawlerfull_spark.operators import cascade as casc
-from webcrawlerfull_spark.operators import frontier as fr
-from webcrawlerfull_spark.operators.parse_spans import fetch_and_parse
-from webcrawlerfull_spark.synthgen import World
-
-
-@dataclass
-class RoundOutput:
-    scheduled: DataFrame      # (url, …, queue_pos) — becomes the seen delta
-    pages: DataFrame          # PARSED_PAGE + queue_pos
-    mentions: DataFrame       # one row per product/seq mention (cascade order)
-    page_stats: DataFrame     # per-page parser found-counts (A1 inputs)
-    page_arrays: DataFrame    # shared cascade base (persist for the round)
-    next_frontier: DataFrame
 
 
 def politeness_schedule(
@@ -121,53 +100,6 @@ def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
             lambda p: path.startswith(p),
         )
     return joined.where(~blocked).drop(*extra)
-
-
-def run_round(
-    frontier: DataFrame,
-    seen: DataFrame,
-    world: World,
-    cfg: C.CrawlConfig,
-    round_id: int,
-    robots: DataFrame | None = None,
-    seen_filters: DataFrame | None = None,
-) -> RoundOutput:
-    frontier = apply_robots(frontier, robots)
-    # J1 — no re-fetch of seen URLs (batch filter, tasks.py:436); with a
-    # bloom state only the maybe-seen slice touches the exact seen table.
-    # Runs BEFORE the budget so per-host slots never go to seen URLs.
-    unseen = bloom.seen_anti_join(
-        frontier, seen, seen_filters, cfg.bloom_buckets,
-        cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
-    )
-    scheduled, deferred = politeness_schedule(
-        unseen, cfg.politeness_budget, cfg.salt_partitions
-    )
-
-    # spread the fetch uniformly (url-hash) so a hot host doesn't pin a task
-    to_fetch = scheduled.repartition(cfg.shuffle_partitions, F.xxhash64("url"))
-    pages = fetch_and_parse(to_fetch, world, extra_cols=["queue_pos"])
-
-    # one narrow pass: cascade + sequential generation + per-page stats,
-    # all as array expressions over the spans column (no shuffle)
-    mentions, page_stats, page_arrays = casc.run_cascade(pages)
-    mentions = mentions.withColumn("round", F.lit(round_id))
-
-    next_frontier = fr.build_next_frontier(
-        pages, scheduled, seen, cfg.max_depth, round_id, cfg.frontier_cap,
-        seen_filters=seen_filters, cfg=cfg,
-    )
-    if cfg.politeness_budget is not None:
-        next_frontier = merge_deferred(next_frontier, deferred)
-
-    return RoundOutput(
-        scheduled=scheduled,
-        pages=pages,
-        mentions=mentions,
-        page_stats=page_stats,
-        page_arrays=page_arrays,
-        next_frontier=next_frontier,
-    )
 
 
 def merge_deferred(next_frontier: DataFrame, deferred: DataFrame) -> DataFrame:

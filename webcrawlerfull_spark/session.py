@@ -32,6 +32,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # every broadcast hash relation and every sort/hash-aggregate map
+        # takes at least one Tungsten page, whatever it holds; Spark sizes
+        # pages from heap/cores (16 MB at a 2 GB driver on 4 cores), so a
+        # crawl round's small joins pinned 16 MB each, and the overlapped
+        # round chains hold several at once. With Spark's minimum page
+        # size each holds about what its rows need.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     return builder.getOrCreate()

@@ -43,9 +43,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _seen_projection(scheduled: DataFrame) -> DataFrame:
@@ -55,6 +57,23 @@ def _seen_projection(scheduled: DataFrame) -> DataFrame:
     column is the frontier GENERATION, which differs for deferred
     carry-over rows in budgeted mode)."""
     return scheduled.select("url", F.col("fetch_round").alias("round"))
+
+
+def _shape(schema: StructType):
+    """A schema's JSON form without its nullability flags."""
+
+    def strip(v):
+        if isinstance(v, dict):
+            return {
+                k: strip(x)
+                for k, x in v.items()
+                if k not in ("nullable", "containsNull", "valueContainsNull")
+            }
+        if isinstance(v, list):
+            return [strip(x) for x in v]
+        return v
+
+    return strip(schema.jsonValue())
 
 
 class Catalog:
@@ -74,8 +93,39 @@ class Catalog:
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
         self.base = base
+        # table -> schema of the files this catalog wrote to it (None once
+        # two writes disagreed); see _remember. The crawl driver writes
+        # from several threads, hence the lock.
+        self._schemas: dict[str, StructType | None] = {}
+        self._schemas_lock = threading.Lock()
         os.makedirs(base, exist_ok=True)
         self._finish_pending_compactions()
+
+    def _remember(
+        self, table: str, schema: StructType, partition_by: list[str] | None
+    ) -> None:
+        """Remember the schema written to ``table`` so its reads skip
+        Spark's parquet footer-inference job (one single-task job per
+        read, ~0.1 s of driver round-trip on the round's serial path).
+        Partition columns live in the dir names, not in the files, so
+        they are left out and discovered as an inferring read does. Once
+        two writes disagree (nullability aside) the table's reads infer
+        again; a fresh Catalog, as on resume, infers until it writes."""
+        if partition_by:
+            schema = StructType(
+                [f for f in schema.fields if f.name not in partition_by]
+            )
+        with self._schemas_lock:
+            known = self._schemas.setdefault(table, schema)
+            if known is not None and _shape(known) != _shape(schema):
+                self._schemas[table] = None
+
+    def _reader(self, table: str, schema: StructType | None = None):
+        """spark.read with the given, else the remembered, schema."""
+        if schema is None:
+            schema = self._schemas.get(table)
+        reader = self.spark.read
+        return reader if schema is None else reader.schema(schema)
 
     def _dir(self, table: str, round_id: int | None = None) -> str:
         # dir key is "r=", not "round=": several tables carry a `round`
@@ -105,6 +155,7 @@ class Catalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._dir(table, round_id))
+        self._remember(table, df.schema, partition_by)
 
     def write_round_local(
         self, rows: list[dict], table: str, round_id: int, schema
@@ -153,6 +204,7 @@ class Catalog:
             pass
         shutil.rmtree(d, ignore_errors=True)
         os.rename(tmp, d)
+        self._remember(table, schema, None)
 
     def has_round(self, table: str, round_id: int) -> bool:
         d = self._dir(table, round_id)
@@ -163,14 +215,11 @@ class Catalog:
             # derived: this round's scheduled slice, projected (the
             # parquet scan is column-pruned to url + fetch_round)
             return _seen_projection(self.read_round("scheduled", round_id))
-        reader = self.spark.read
-        if schema is not None:
-            # a partitionBy write of an EMPTY frame leaves only _SUCCESS
-            # (no part files, no footer) — schema inference fails there,
-            # so delta tables that can legitimately be empty (frontier_q
-            # on a discovery-free round) pass their declared schema
-            reader = reader.schema(schema)
-        return reader.parquet(self._dir(table, round_id))
+        # a partitionBy write of an EMPTY frame leaves only _SUCCESS (no
+        # part files, no footer) — schema inference fails there, so delta
+        # tables that can legitimately be empty (frontier_q on a
+        # discovery-free round) pass their declared schema
+        return self._reader(table, schema).parquet(self._dir(table, round_id))
 
     def committed_rounds(self, table: str) -> list[int]:
         if table == "seen":
@@ -203,7 +252,11 @@ class Catalog:
         if not rounds:
             return None
         paths = [self._dir(table, r) for r in rounds]
-        df = self.spark.read.option("basePath", self._dir(table)).parquet(*paths)
+        df = (
+            self._reader(table)
+            .option("basePath", self._dir(table))
+            .parquet(*paths)
+        )
         return df.drop("r")
 
     def _read_seen(self, up_to_round: int | None) -> DataFrame | None:
@@ -227,7 +280,8 @@ class Catalog:
         if sched:
             paths = [self._dir("scheduled", r) for r in sched]
             df = (
-                self.spark.read.option("basePath", self._dir("scheduled"))
+                self._reader("scheduled")
+                .option("basePath", self._dir("scheduled"))
                 .parquet(*paths)
                 .drop("r")
             )
@@ -261,7 +315,11 @@ class Catalog:
         if not rounds:
             return None
         paths = [self._dir(table, r) for r in rounds]
-        return self.spark.read.option("basePath", self._dir(table)).parquet(*paths)
+        return (
+            self._reader(table)
+            .option("basePath", self._dir(table))
+            .parquet(*paths)
+        )
 
     def read_bloom(self, up_to_round: int | None = None) -> DataFrame | None:
         """Current bloom filter state: rounds write only their TOUCHED
@@ -389,9 +447,11 @@ class Catalog:
         unusable as-is, e.g. bloom filters written by an older hash
         scheme, and must be rebuilt from a source-of-truth table)."""
         shutil.rmtree(self._dir(table), ignore_errors=True)
+        self._schemas.pop(table, None)
 
     def destroy(self) -> None:
         shutil.rmtree(self.base, ignore_errors=True)
+        self._schemas.clear()
 
 
 def iceberg_available(spark: SparkSession, catalog_name: str = "local") -> bool:

@@ -41,7 +41,7 @@ from webcrawlerfull_spark.operators.attribution import (
 )
 from webcrawlerfull_spark.operators.cascade import run_cascade
 from webcrawlerfull_spark.operators.textdedup import (
-    dedup_scheme,
+    check_dedup_scheme,
     dedup_signatures,
     incremental_dedup_delta,
 )
@@ -86,7 +86,9 @@ def _empty_seen(spark: SparkSession) -> DataFrame:
 
 class _StageClock:
     """WCF_STAGE_TIMING=1 prints per-stage wall times to stderr (used to
-    attribute round wall-clock when hunting scaling bottlenecks)."""
+    attribute round wall-clock when hunting scaling bottlenecks). A lap
+    labelled ``X ∥ Y`` timed stage X on the main thread while chain Y was
+    in flight; the round's last chain lap ends at the join."""
 
     def __init__(self, round_id: int):
         self.enabled = os.environ.get("WCF_STAGE_TIMING") == "1"
@@ -102,6 +104,125 @@ class _StageClock:
             file=sys.stderr,
         )
         self.t = now
+
+
+def _doc_dedup(
+    catalog: Catalog,
+    cfg: CrawlConfig,
+    docs: DataFrame,
+    dd_state: DataFrame | None,
+    round_id: int,
+    clock: _StageClock,
+) -> tuple[DataFrame, int]:
+    """Cross-round document dedup, the interleaved-docs curation stage:
+    content dups are excluded from the parser cascade, but ALL fetched
+    pages still feed link discovery (dedup curates documents, not the
+    crawl graph). One write per round (verdicts + the kept docs' fp/band
+    state delta in one stacked frame), mirroring the bloom touched-bucket
+    shape; the dropped count is observed on that same write. Returns the
+    documents the cascade parses and the dropped count."""
+    ok_docs = docs.where(F.col("status") == "ok").select(
+        "doc_id", F.concat_ws(" ", "texts").alias("_text")
+    )
+    # one text scan per round: the per-doc signature record (fp + band
+    # hashes, fixed-width) is persisted because the stacked delta
+    # consumes it from three union branches
+    sigs = dedup_signatures(
+        ok_docs, "doc_id", "_text", cfg.dedup_k, cfg.dedup_bands,
+        cfg.dedup_family,
+        kernel=(cfg.dedup_family == "fast" and cfg.dedup_bands > 0),
+    ).persist()
+    # MATERIALIZE the cache before building the delta: the stacked frame
+    # references sigs SIX times (three union branches, each reading sigs
+    # plus the reps frame derived from sigs), and a cold persist races —
+    # every reference re-scans the round's full text (measured 190 s vs
+    # ~25 s on a 200k-doc round at 32 cores, BENCH §8). One count() runs
+    # the text scan exactly once and the six readers hit the cache.
+    sigs.count()
+    clock.lap("doc-dedup:sigs ∥ next-frontier")
+    delta = incremental_dedup_delta(
+        ok_docs, dd_state, id_col="doc_id", text_col="_text",
+        k=cfg.dedup_k, bands=cfg.dedup_bands, sigs=sigs,
+        family=cfg.dedup_family,
+    )
+    obs_dedup = Observation()
+    catalog.write_round(
+        delta.observe(
+            obs_dedup,
+            F.count(
+                F.when(
+                    (F.col("kind") == "verdict") & (F.col("status") != "kept"),
+                    F.lit(1),
+                )
+            ).alias("dropped"),
+        ),
+        "doc_dedup_state",
+        round_id,
+    )
+    dropped = int(obs_dedup.get["dropped"])
+    clock.lap("doc-dedup:delta-write ∥ next-frontier")
+    sigs.unpersist()
+    kept_ids = (
+        catalog.read_round("doc_dedup_state", round_id)
+        .where((F.col("kind") == "verdict") & (F.col("status") == "kept"))
+        .select("doc_id")
+    )
+    clock.lap("doc-dedup ∥ next-frontier")
+    return docs.join(kept_ids, "doc_id", "left_semi"), dropped
+
+
+def _products_chain(
+    catalog: Catalog,
+    cfg: CrawlConfig,
+    mentions: DataFrame,
+    page_stats: DataFrame,
+    page_arrays: DataFrame,
+    round_id: int,
+) -> int:
+    """Write the round's mentions and page_stats, then its first-touch
+    products; returns the product count, observed on the write. Both
+    writes derive from the cascade's page_arrays, which is cached only
+    while they run so the cascade executes once per round."""
+    page_arrays.persist()
+    catalog.write_round(
+        mentions.withColumn("round", F.lit(round_id)), "mentions", round_id
+    )
+    catalog.write_round(
+        page_stats.withColumn("round", F.lit(round_id)), "page_stats", round_id
+    )
+    page_arrays.unpersist()
+    # attribution reads the stored mentions parquet back — the cascade plan
+    # runs exactly once per round (J7)
+    stored = catalog.read_round("mentions", round_id)
+    # per-domain first touch (reference keeps url_first_found_by per domain,
+    # tasks.py:397) — a URL reachable from two seed domains keeps one
+    # attributed row per domain. The packed HashAggregate specialization
+    # (r7) picks the identical row; the generic struct-min is the fallback
+    # when the packing does not fit.
+    products = first_touch_products(stored, cfg.max_depth)
+    if products is None:
+        products = first_touch(
+            stored, ["queue_pos", "parser_rank"], ["domain", "url"]
+        )
+    prior = catalog.read_all("products", up_to_round=round_id - 1)
+    if prior is not None:
+        products = products.join(
+            prior.select("domain", "url"), ["domain", "url"], "left_anti"
+        )
+    obs = Observation()
+    catalog.write_round(
+        products.select(
+            F.lit(cfg.task_id).alias("task_id"),
+            "domain",
+            "url",
+            "parser",
+            "depth",
+            F.lit(round_id).alias("round"),
+        ).observe(obs, F.count(F.lit(1)).alias("products")),
+        "products",
+        round_id,
+    )
+    return int(obs.get["products"])
 
 
 def crawl(
@@ -346,234 +467,94 @@ def _run_rounds(
             round_id,
         )
         scheduled = catalog.read_round("scheduled", round_id)
-        bloom_fut = bloom_pool = None
-        if cfg.use_bloom:
-            # touched-bucket-only delta (the MERGE shape): the reader
-            # reconstructs live state as latest-row-per-bucket, so a
-            # round persists only the buckets it actually updated.
-            # Written from a driver thread OVERLAPPED with the fetch/
-            # cascade stages (r7, guide §2.6): nothing in THIS round
-            # reads the round's own bloom delta (build_next_frontier
-            # probes the pre-round ``seen_filters``; the next round
-            # reads the state after the commit marker), so the write
-            # only has to be joined before lineage lands.
-            new_filters = update_filters(
-                scheduled.select("url"), seen_filters, cfg.bloom_buckets,
-                cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
-                touched_only=True,
-            )
-            bloom_pool = ThreadPoolExecutor(max_workers=1)
-            bloom_fut = bloom_pool.submit(
-                catalog.write_round, new_filters, "seen_bloom", round_id
-            )
 
-        clock.lap("schedule+bloom")
-
-        # ---- stage 2: fetch+parse ONCE -> the durable interleaved-docs
-        # table (the input_hint payload). Every downstream consumer reads
-        # the stored parquet — no giant in-memory cache of span structs,
-        # no re-fetch.
-        to_fetch = scheduled.repartition(n_fetch, F.xxhash64("url"))
-        # lazy spans layout: the stored documents table keeps the span
-        # columns as primitive arrays (kinds/texts/refs) + the slim
-        # link_spans; parse_spans.spans_view() reconstructs the
-        # input_hint spans struct for downstream document consumers —
-        # the crawl itself only ever reads link_spans
-        pages = fetch_and_parse(
-            to_fetch, world, extra_cols=["queue_pos"], materialize_spans=False
-        )
-        # documents has exactly one row per scheduled URL, so observing
-        # the write action yields both lineage counts with no extra job
-        obs_docs = Observation()
-        catalog.write_round(
-            pages.observe(
-                obs_docs,
-                F.count(F.lit(1)).alias("fetched"),
-                F.count(F.when(F.col("status") == "ok", F.lit(1))).alias(
-                    "parsed"
-                ),
-            ),
-            "documents",
-            round_id,
-        )
-        docs = catalog.read_round("documents", round_id)
-
-        clock.lap("fetch+parse+write-documents")
-
-        # ---- stage 2b (opt-in): cross-round document dedup ---------------
-        # the interleaved-docs curation stage: content dups are excluded
-        # from the parser cascade, but ALL fetched pages still feed link
-        # discovery (dedup curates documents, not the crawl graph). One
-        # write per round (verdicts + the kept docs' fp/band state delta
-        # in one stacked frame), mirroring the bloom touched-bucket
-        # shape; the dropped count is observed on that same write.
-        docs_for_cascade = docs
-        docs_deduped = 0
-        if cfg.doc_dedup:
-            dd_state = catalog.read_all(
-                "doc_dedup_state", up_to_round=round_id - 1
-            )
-            if dd_state is not None and not dedup_scheme_checked:
-                # band hashes are only comparable within one
-                # (family, k, bands) tuple — probing state written under
-                # another silently misses every near-dup (the bloom
-                # HASH_SCHEME hazard). Unlike bloom state, band state
-                # CANNOT be rebuilt (the source text may be gone), so a
-                # mismatch is a hard error, not a rebuild.
-                expect = dedup_scheme(
-                    cfg.dedup_k, cfg.dedup_bands, cfg.dedup_family
+        # ---- overlapped chains (guide §2.6). A round is a chain of small
+        # Spark jobs, so its latency is its critical path. Three write
+        # chains run on driver threads, each submitted as soon as every
+        # input it reads exists, while the main thread runs fetch+parse,
+        # doc-dedup and the cascade plan:
+        #   - bloom delta: waits for `scheduled` (probes the pre-round
+        #     seen_filters);
+        #   - next frontier: waits for `documents` (reads documents,
+        #     scheduled, seen, seen_filters, plus the round's cursor and
+        #     candidates in delta mode or the deferred slice in merged
+        #     mode) — nothing doc-dedup or the cascade produce;
+        #   - cascade→products: waits for doc-dedup (kept documents) and
+        #     reads products up to the previous round.
+        # Nothing in this round reads a chain's output; the next round
+        # reads it after the commit marker. One pool per round: leaving
+        # the with-block joins every chain, also when the main thread
+        # raises mid-round, and the loop at its end re-raises the first
+        # chain failure. Commit order: join, then marker, then compaction.
+        with ThreadPoolExecutor(3, thread_name_prefix="crawl-chain") as pool:
+            chains = []
+            if cfg.use_bloom:
+                # touched-bucket-only delta (the MERGE shape): the reader
+                # reconstructs live state as latest-row-per-bucket, so a
+                # round persists only the buckets it actually updated
+                new_filters = update_filters(
+                    scheduled.select("url"), seen_filters, cfg.bloom_buckets,
+                    cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
+                    touched_only=True,
                 )
-                found = {
-                    r["status"]
-                    for r in dd_state.where(F.col("kind") == "meta")
-                    .select("status")
-                    .distinct()
-                    .collect()
-                } or {"<unstamped legacy state>"}
-                if found != {expect}:
-                    raise ValueError(
-                        "persisted doc_dedup_state was written under "
-                        f"scheme(s) {sorted(found)} but this run uses "
-                        f"{expect!r}; resume with the original "
-                        "dedup_family/dedup_k/dedup_bands or start a "
-                        "fresh catalog. (State that predates the scheme "
-                        "marker is intentionally unresumable: its "
-                        "family/k/bands cannot be validated, and probing "
-                        "it under the wrong scheme would silently miss "
-                        "every near-duplicate.)"
+                chains.append(pool.submit(
+                    catalog.write_round, new_filters, "seen_bloom", round_id
+                ))
+            clock.lap("schedule+bloom")
+
+            # ---- stage 2: fetch+parse ONCE -> the durable interleaved-docs
+            # table (the input_hint payload). Every downstream consumer
+            # reads the stored parquet — no giant in-memory cache of span
+            # structs, no re-fetch.
+            to_fetch = scheduled.repartition(n_fetch, F.xxhash64("url"))
+            # lazy spans layout: the stored documents table keeps the span
+            # columns as primitive arrays (kinds/texts/refs) + the slim
+            # link_spans; parse_spans.spans_view() reconstructs the
+            # input_hint spans struct for downstream document consumers —
+            # the crawl itself only ever reads link_spans
+            pages = fetch_and_parse(
+                to_fetch, world, extra_cols=["queue_pos"],
+                materialize_spans=False,
+            )
+            # documents has exactly one row per scheduled URL, so observing
+            # the write action yields both lineage counts with no extra job
+            obs_docs = Observation()
+            catalog.write_round(
+                pages.observe(
+                    obs_docs,
+                    F.count(F.lit(1)).alias("fetched"),
+                    F.count(F.when(F.col("status") == "ok", F.lit(1))).alias(
+                        "parsed"
+                    ),
+                ),
+                "documents",
+                round_id,
+            )
+            docs = catalog.read_round("documents", round_id)
+            clock.lap("fetch+parse+write-documents")
+
+            # ---- stage 3: next frontier. The plan is built on the chain's
+            # thread too, so its py4j construction overlaps doc-dedup.
+            def _frontier_chain() -> int:
+                """Build and write the next frontier; returns the rows
+                written (the queue delta in delta mode, else all of it)."""
+                next_frontier = build_next_frontier(
+                    docs, scheduled, seen, cfg.max_depth, round_id,
+                    cfg.frontier_cap, seen_filters=seen_filters, cfg=cfg,
+                )
+                if delta_mode:
+                    # append-only: ONE delta write sized to this round's
+                    # discoveries + the touched cursor rows; the backlog is
+                    # never re-ranked or rewritten (BENCH §7.5's two flat
+                    # O(|frontier|) intercepts were exactly here and in the
+                    # schedule read above)
+                    return dfq.append_delta(
+                        catalog, next_frontier, scheduled, cursor,
+                        candidates, band_size, round_id,
                     )
-                dedup_scheme_checked = True
-            ok_docs = docs.where(F.col("status") == "ok").select(
-                "doc_id", F.concat_ws(" ", "texts").alias("_text")
-            )
-            # one text scan per round: the per-doc signature record
-            # (fp + band hashes, fixed-width) is persisted because the
-            # stacked delta consumes it from three union branches
-            sigs = dedup_signatures(
-                ok_docs, "doc_id", "_text", cfg.dedup_k, cfg.dedup_bands,
-                cfg.dedup_family,
-                kernel=(cfg.dedup_family == "fast" and cfg.dedup_bands > 0),
-            ).persist()
-            # MATERIALIZE the cache before building the delta: the
-            # stacked frame references sigs SIX times (three union
-            # branches, each reading sigs plus the reps frame derived
-            # from sigs), and a cold persist races — every reference
-            # re-scans the round's full text (measured 190 s vs ~25 s
-            # on a 200k-doc round at 32 cores, BENCH §8). One count()
-            # runs the text scan exactly once and the six readers hit
-            # the cache.
-            sigs.count()
-            clock.lap("doc-dedup:sigs")
-            delta = incremental_dedup_delta(
-                ok_docs, dd_state, id_col="doc_id", text_col="_text",
-                k=cfg.dedup_k, bands=cfg.dedup_bands, sigs=sigs,
-                family=cfg.dedup_family,
-            )
-            obs_dedup = Observation()
-            catalog.write_round(
-                delta.observe(
-                    obs_dedup,
-                    F.count(
-                        F.when(
-                            (F.col("kind") == "verdict")
-                            & (F.col("status") != "kept"),
-                            F.lit(1),
-                        )
-                    ).alias("dropped"),
-                ),
-                "doc_dedup_state",
-                round_id,
-            )
-            docs_deduped = int(obs_dedup.get["dropped"])
-            clock.lap("doc-dedup:delta-write")
-            sigs.unpersist()
-            kept_ids = (
-                catalog.read_round("doc_dedup_state", round_id)
-                .where(
-                    (F.col("kind") == "verdict") & (F.col("status") == "kept")
-                )
-                .select("doc_id")
-            )
-            docs_for_cascade = docs.join(kept_ids, "doc_id", "left_semi")
-            clock.lap("doc-dedup")
-
-        # ---- stages 3+4 OVERLAPPED (guide §2.6): the cascade→products
-        # chain and the next-frontier build are independent Spark jobs
-        # (products reads mentions/prior-products; next-frontier reads
-        # documents/scheduled/seen) — submitting them from two driver
-        # threads lets the second job's tasks back-fill executors freed
-        # by the first's straggler tail instead of idling the host
-        # between actions. Plans are CONSTRUCTED on the main thread
-        # (py4j Column trees + the cascade layer cache); only the write
-        # ACTIONS (and the products plan that needs the stored mentions
-        # parquet to exist) run in the pool. The commit invariant is
-        # unchanged: both chains join before the lineage marker lands.
-        mentions, page_stats, page_arrays = run_cascade(docs_for_cascade)
-        page_arrays.persist()
-        mentions_df = mentions.withColumn("round", F.lit(round_id))
-        page_stats_df = page_stats.withColumn("round", F.lit(round_id))
-        prior = catalog.read_all("products", up_to_round=round_id - 1)
-        obs_products = Observation()
-
-        def _products_chain() -> None:
-            catalog.write_round(mentions_df, "mentions", round_id)
-            catalog.write_round(page_stats_df, "page_stats", round_id)
-            # attribution reads the stored mentions parquet back — the
-            # cascade plan runs exactly once per round (J7)
-            mentions_stored = catalog.read_round("mentions", round_id)
-            # per-domain first touch (reference keeps url_first_found_by
-            # per domain, tasks.py:397) — a URL reachable from two seed
-            # domains keeps one attributed row per domain. The packed
-            # HashAggregate specialization (r7) picks the identical row;
-            # the generic struct-min is the fallback for absurd depths.
-            new_products = first_touch_products(
-                mentions_stored, cfg.max_depth
-            )
-            if new_products is None:
-                new_products = first_touch(
-                    mentions_stored, ["queue_pos", "parser_rank"],
-                    ["domain", "url"],
-                )
-            if prior is not None:
-                new_products = new_products.join(
-                    prior.select("domain", "url"),
-                    ["domain", "url"],
-                    "left_anti",
-                )
-            catalog.write_round(
-                new_products.select(
-                    F.lit(cfg.task_id).alias("task_id"),
-                    "domain",
-                    "url",
-                    "parser",
-                    "depth",
-                    F.lit(round_id).alias("round"),
-                ).observe(obs_products, F.count(F.lit(1)).alias("products")),
-                "products",
-                round_id,
-            )
-
-        next_frontier = build_next_frontier(
-            docs, scheduled, seen, cfg.max_depth, round_id, cfg.frontier_cap,
-            seen_filters=seen_filters, cfg=cfg,
-        )
-        if not delta_mode and cfg.politeness_budget is not None:
-            next_frontier = merge_deferred(next_frontier, _deferred)
-        obs_frontier = Observation()
-        frontier_result: dict = {}
-
-        def _frontier_chain() -> None:
-            if delta_mode:
-                # append-only: ONE delta write sized to this round's
-                # discoveries + the touched cursor rows; the backlog is
-                # never re-ranked or rewritten (BENCH §7.5's two flat
-                # O(|frontier|) intercepts were exactly here and in the
-                # schedule read above)
-                frontier_result["inserted"] = dfq.append_delta(
-                    catalog, next_frontier, scheduled, cursor, candidates,
-                    band_size, round_id,
-                )
-            else:
+                if cfg.politeness_budget is not None:
+                    next_frontier = merge_deferred(next_frontier, _deferred)
+                obs_frontier = Observation()
                 catalog.write_round(
                     next_frontier.observe(
                         obs_frontier, F.count(F.lit(1)).alias("rows")
@@ -581,21 +562,38 @@ def _run_rounds(
                     "frontier",
                     round_id + 1,
                 )
+                return int(obs_frontier.get["rows"])
 
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(_products_chain),
-                    pool.submit(_frontier_chain),
-                ]
-                for f in futs:
-                    f.result()  # re-raise the first chain failure
-        finally:
-            # join the bloom writer even when a chain fails (no thread
-            # leak into a surviving session); failures surface below on
-            # the success path, before the commit marker
-            if bloom_pool is not None:
-                bloom_pool.shutdown(wait=True)
+            frontier_fut = pool.submit(_frontier_chain)
+            chains.append(frontier_fut)
+
+            # ---- stage 4 (opt-in): cross-round document dedup
+            docs_for_cascade, docs_deduped = docs, 0
+            if cfg.doc_dedup:
+                dd_state = catalog.read_all(
+                    "doc_dedup_state", up_to_round=round_id - 1
+                )
+                if dd_state is not None and not dedup_scheme_checked:
+                    check_dedup_scheme(
+                        dd_state, cfg.dedup_k, cfg.dedup_bands, cfg.dedup_family
+                    )
+                    dedup_scheme_checked = True
+                docs_for_cascade, docs_deduped = _doc_dedup(
+                    catalog, cfg, docs, dd_state, round_id, clock
+                )
+
+            # ---- stage 5: cascade → products. The cascade plan (py4j Column
+            # trees + the layer cache) is built here on the main thread.
+            mentions, page_stats, page_arrays = run_cascade(docs_for_cascade)
+            clock.lap("cascade-plan ∥ next-frontier")
+            products_fut = pool.submit(
+                _products_chain, catalog, cfg, mentions, page_stats,
+                page_arrays, round_id,
+            )
+            chains.append(products_fut)
+            for f in chains:
+                f.result()  # re-raise the first chain failure
+        clock.lap("cascade+products ∥ next-frontier ∥ bloom joined")
 
         if delta_mode:
             # obs_disposed is the one observation in the driver whose
@@ -616,25 +614,17 @@ def _run_rounds(
                 disposed_n = int(obs_disposed.get["n"])
             except Exception:
                 disposed_n = candidates.count()
-            next_frontier_size = (
-                frontier_size - disposed_n + frontier_result["inserted"]
-            )
+            next_frontier_size = frontier_size - disposed_n + frontier_fut.result()
         else:
-            next_frontier_size = int(obs_frontier.get["rows"])
-
-        if bloom_fut is not None:
-            bloom_fut.result()  # bloom delta must land before the marker
-
-        clock.lap("cascade+products || next-frontier")
+            next_frontier_size = frontier_fut.result()
 
         # lineage LAST = the commit marker (A7 metrics, north-rule set).
         # All three counters were observed during this round's write
         # actions — no dedicated counting jobs.
         fetched = int(obs_docs.get["fetched"])
         parsed = int(obs_docs.get["parsed"])
-        n_products = int(obs_products.get["products"])
+        n_products = products_fut.result()
         seen_total += fetched
-        seen_card = seen_total
         wall_ms = int((time.monotonic() - t0) * 1000)
         # ONE driver-local row: written via the catalog's local fast
         # path (pyarrow, no Spark job) — a full createDataFrame + write
@@ -645,7 +635,7 @@ def _run_rounds(
                     "task_id": cfg.task_id,
                     "round": round_id,
                     "frontier_size": frontier_size,
-                    "seen_cardinality": seen_card,
+                    "seen_cardinality": seen_total,
                     "fetched": fetched,
                     "parsed": parsed,
                     "products": n_products,
@@ -680,7 +670,6 @@ def _run_rounds(
             # rewrite cost more than the per-round rewrites it replaced
             dfq.compact(catalog, round_id + 1, band_size)
 
-        page_arrays.unpersist()
         if delta_mode:
             candidates.unpersist()
             cursor.unpersist()
