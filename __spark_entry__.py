@@ -872,13 +872,17 @@ def _q_ann_batch_topk(spark, sf_dir):
 
 
 def ann_index_build(spark, sf_dir):
-    """(Re)build the persisted signature-partitioned LSH index for
-    ``sf_dir``; returns its path. Split out of ``_q_ann_lsh`` so
-    bench.py can time the one-time index BUILD (a repartition-by-sig
-    shuffle + partitioned write — amortized over every later query)
-    separately from the per-query PROBE (VERDICT r4 item 2: folding the
-    build into the probed query's timing buried an 11x-faster probe
-    under a rebuild that production runs once)."""
+    """(Re)build the persisted LSH index for ``sf_dir``; returns its
+    path. The index is partitioned on ``sig_prefix``, the first
+    ``min(planes, planes_for(n))`` signature bits: the 8 planes over a
+    2k-vector corpus write 16 dirs, not one ~10-row file per bucket;
+    ``_ann_meta.json`` records ``prefix_bits`` and the index schema.
+    Split out of ``_q_ann_lsh`` so bench.py can time the one-time index
+    BUILD (a corpus count, a repartition-by-prefix shuffle and a
+    partitioned write — amortized over every later query) separately
+    from the per-query PROBE (VERDICT r4 item 2: folding the build into
+    the probed query's timing buried an 11x-faster probe under a
+    rebuild that production runs once)."""
     import hashlib as _hl
     import os as _os
 
@@ -892,8 +896,10 @@ def ann_index_build(spark, sf_dir):
 
 
 def ann_probe(spark, sf_dir, idx_path):
-    """Probe-only half of the persisted-index ANN query: partition-
-    pruned multi-probe read + exact in-bucket cosine top-k."""
+    """Probe-only half of the persisted-index ANN query: one glob finds
+    which of the probe-prefix dirs exist, only those are read (stored
+    schema, no listing of the whole index), then the exact ``sig IN
+    probes`` filter and in-bucket cosine top-k."""
     qv = _query_vec(spark, sf_dir)
     top = SIM.lsh_topk_indexed(
         spark, idx_path, qv, dims=len(qv), k=10, planes=8, multi_probe=1
@@ -902,8 +908,10 @@ def ann_probe(spark, sf_dir, idx_path):
 
 
 def _q_ann_lsh(spark, sf_dir):
-    """Persisted signature-partitioned index + Hamming-1 multi-probe:
-    the query reads only its 9 probe partitions (partition pruning).
+    """Persisted signature-prefix-partitioned index + Hamming-1
+    multi-probe: the query's 9 probe signatures map to their distinct
+    prefixes, and only the dirs of those prefixes are listed and read
+    (Spark lists the given dirs in parallel only above 32 of them).
     Always rebuilds the index first: a stale index from an older
     signature scheme must never leak into the correctness gate (cheap
     at gate scale)."""

@@ -168,8 +168,12 @@ def test_factored_regex_match_equivalence(spark):
     the shared leading '/' hoisted out of the alternation) must accept
     exactly the same strings as combined_regex — the frozen form the
     DuckDB oracle SQL interpolates. Checked with Python re over world
-    anchor URLs + deterministic fuzz, and through Spark's actual Java
-    rlike path for the two hot pattern sets."""
+    anchor URLs + deterministic fuzz, and row by row through Spark's
+    actual Java rlike path. Two unfactorable shapes ride along: a
+    top-level '|' after the '/' and a leading quantifier; without
+    factored_regex's guard the first matches a different language and
+    the second does not compile. The guard leaves every current pattern
+    table's factored string as the unguarded formula wrote it."""
     import random
     import re
 
@@ -183,6 +187,18 @@ def test_factored_regex_match_equivalence(spark):
         C.CATEGORY_PRIORITY_PATTERNS,
         *C.DOMAIN_PATTERNS.values(),
     ]
+
+    def unguarded(patterns):
+        slash = [p[1:] for p in patterns if p.startswith("/")]
+        other = [p for p in patterns if not p.startswith("/")]
+        return "|".join(
+            ["/(?:" + "|".join(f"(?:{p})" for p in slash) + ")"]
+            + [f"(?:{p})" for p in other]
+        )
+
+    for pats in pattern_sets:
+        assert C.factored_regex(pats) == unguarded(pats)
+    pattern_sets += [["/a|b", "/product/"], ["/+foo", "/items?/", "bar"]]
 
     w = sg.World(seed=7, n_hosts=40, base_pages=200, cat_min=8, cat_span=4,
                  per_page_min=30, per_page_span=20, max_pag=6)
@@ -208,21 +224,28 @@ def test_factored_regex_match_equivalence(spark):
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 90)))
         for _ in range(20000)
     ]
-    corpus = urls + fuzz
+    corpus = urls + fuzz + ["b", "x/b", "/a", "/ab", "foo", "/foo", "//foo", "/+foo"]
     for pats in pattern_sets:
         ro = re.compile(C.combined_regex(pats))
         rn = re.compile(C.factored_regex(pats))
         for s in corpus:
             assert bool(ro.search(s)) == bool(rn.search(s)), (pats, s)
 
-    # Java-side check through real rlike for the two hottest sets
+    # Java-side check through real rlike: rows where the two regexes
+    # disagree, per pattern set, in one job
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(s,) for s in corpus], "s string")
-    for pats in (C.PATTERNS, C.PAGINATION_PATTERNS):
-        old_n = df.where(F.col("s").rlike(C.combined_regex(pats))).count()
-        new_n = df.where(F.col("s").rlike(C.factored_regex(pats))).count()
-        assert old_n == new_n
+    col = F.col("s")
+    disagree = df.agg(
+        *[
+            F.sum(
+                (col.rlike(C.combined_regex(p)) != col.rlike(C.factored_regex(p))).cast("int")
+            )
+            for p in pattern_sets
+        ]
+    ).first()
+    assert list(disagree) == [0] * len(pattern_sets)
 
 
 def test_first_touch_products_matches_generic(spark):

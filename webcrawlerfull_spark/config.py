@@ -127,6 +127,33 @@ def combined_regex(patterns: list[str]) -> str:
     return "(?:" + ")|(?:".join(patterns) + ")"
 
 
+def _factorable(rest: str) -> bool:
+    """True when ``rest`` (a pattern after its leading ``/``) keeps its
+    meaning wrapped as ``(?:rest)`` behind a hoisted ``/``: it does not
+    start with a quantifier and has no ``|`` outside groups and
+    character classes."""
+    if rest[:1] in ("*", "+", "?", "{"):
+        return False
+    depth, in_class, i = 0, False, 0
+    while i < len(rest):
+        c = rest[i]
+        if c == "\\":
+            i += 2
+            continue
+        if in_class:
+            in_class = c != "]"
+        elif c == "[":
+            in_class = True
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+        elif c == "|" and depth == 0:
+            return False
+        i += 1
+    return True
+
+
 def factored_regex(patterns: list[str]) -> str:
     """Match-equivalent reformulation of ``combined_regex`` with the
     shared literal leading ``/`` factored out of the alternation.
@@ -144,11 +171,19 @@ def factored_regex(patterns: list[str]) -> str:
     function must never change; this one exists for the Spark side,
     where only the boolean match result is observable. A match of
     ``/X`` at position i is exactly a ``/`` at i followed by ``X`` at
-    i+1, so the matched language is identical — the leading character
-    of each factored pattern is a literal ``/`` by construction (the
-    ``startswith`` test), never part of a larger regex construct."""
-    slash = [p[1:] for p in patterns if p.startswith("/")]
-    other = [p for p in patterns if not p.startswith("/")]
+    i+1, so the matched language is identical — provided ``/X`` parses
+    as the literal ``/`` followed by the whole of ``X``. Two shapes do
+    not: a top-level ``|`` in ``X`` (``/a|b`` is ``/a`` OR ``b``, not
+    ``/b``), and ``X`` starting with a quantifier (``/+foo`` repeats the
+    ``/``). ``_factorable`` sends those patterns to the unfactored
+    bucket; no current pattern table has one, so their output is
+    unchanged."""
+    slash, other = [], []
+    for p in patterns:
+        if p.startswith("/") and _factorable(p[1:]):
+            slash.append(p[1:])
+        else:
+            other.append(p)
     parts = []
     if slash:
         parts.append("/(?:" + "|".join(f"(?:{p})" for p in slash) + ")")

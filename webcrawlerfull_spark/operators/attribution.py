@@ -41,15 +41,27 @@ def first_touch_products(
     fifth rank would silently alias) — the caller then falls back to the
     generic ``first_touch``.
 
-    Equivalence: within one page (queue_pos) a product url appears in at
-    most ONE parser array (config_only/ai_only/seq_arr are disjoint from
-    the earlier ranks by construction, and each array is distinct), so
-    (domain, url, queue_pos) is already unique — min over a packed
-    bigint with queue_pos in the high bits picks exactly the row the
+    Precondition: (domain, url, queue_pos) is unique in ``mentions``,
+    i.e. queue_pos is dense per domain, one value per fetched page, as
+    the driver writes it (a row_number over each domain's fetch order:
+    the per-domain rank of the next frontier in operators/frontier.py,
+    re-derived on the scheduled slice by plans/round.py and
+    streaming/delta_frontier.py). Within one page a product url
+    appears in at most ONE parser array (config_only/ai_only/seq_arr
+    are disjoint from the earlier ranks by construction, and each array
+    is distinct), so the precondition holds for every driver call —
+    min over a packed bigint with
+    queue_pos in the high bits then picks exactly the row the
     lexicographic (queue_pos, parser_rank) struct-min picked, and the
     winning row's parser_rank and depth ride in the low bits as payload
     (depth <= max_depth and parser_rank < 4 bound the fields; queue_pos
-    is a within-round row position, far below the remaining 2^45+)."""
+    is a within-round row position, far below the remaining 2^45+).
+    Nothing here checks the precondition: a caller whose queue_pos
+    repeats within a domain (e.g. one derived per host over a
+    multi-host domain) gets ties on (queue_pos, parser_rank) broken by
+    the smallest depth, where the generic ``first_touch`` breaks them
+    by its payload column order (page_url, host, depth, ...), so the
+    two can pick different rows."""
     from webcrawlerfull_spark.operators.cascade import PARSER_RANK
 
     depth_bits = max(4, int(max_depth).bit_length() + 1)

@@ -6,8 +6,27 @@
   weights, so the planes are reproducible everywhere with no stored
   model), bucket by signature, exact cosine only within the query's
   bucket. The scale path: the full-corpus scan becomes one bucket scan;
-  at 100 TB bucket the corpus ONCE, then every query reads one bucket
-  partition (partition pruning on the signature column).
+  at 100 TB bucket the corpus ONCE, then every query reads only the
+  dirs that hold its probe buckets.
+
+Persisted LSH index layout (``write_lsh_index``)::
+
+    <path>/sig_prefix=<first prefix_bits signature bits>/part-*.parquet
+    <path>/_ann_meta.json   {planes, dims, id_col, vec_col,
+                             prefix_bits, schema}
+
+``prefix_bits = min(planes, planes_for(n))``: at the designed sizing
+(planes <= planes_for(n)) each dir is one bucket; an over-planed small
+corpus shares a dir between 2^(planes - prefix_bits) buckets instead of
+writing one ~10-row file per bucket. ``sig`` stays a data column and the
+probe keeps the exact ``sig IN probes`` filter, so results do not depend
+on the layout. A probe maps its signatures to their distinct prefixes,
+finds the dirs that exist with one Hadoop-FS glob and reads only those,
+with ``basePath`` and the stored schema: no listing of the whole index
+and no footer-inference job (Spark still lists the dirs it is given in
+parallel, as a job, above 32 of them). The IVF index is read the same
+way. An index whose meta has no ``prefix_bits`` (the earlier layout:
+one ``sig=`` dir per whole signature) is read through the same code.
 """
 
 from __future__ import annotations
@@ -16,6 +35,7 @@ import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from webcrawlerfull_spark.sources import fsutil
 
@@ -144,6 +164,11 @@ def probe_signatures(q_sig: str, multi_probe: int = 1) -> list[str]:
     return sorted(sigs)
 
 
+# the persisted LSH index's partition column: the first prefix_bits
+# signature bits (see write_lsh_index)
+PREFIX_COL = "sig_prefix"
+
+
 def lsh_index(
     embeddings: DataFrame,
     dims: int,
@@ -168,46 +193,59 @@ def write_lsh_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist the index PARTITIONED BY signature: a query then reads
-    only its probe buckets (partition pruning — at 100 TB each query
-    scans ~(probes/2^planes) of the corpus instead of all of it).
+    """Persist the index PARTITIONED BY signature prefix: a query then
+    reads only the dirs of its probe buckets (at 100 TB each query scans
+    ~(probes/2^planes) of the corpus instead of all of it).
 
-    ``planes`` is recorded in ``_ann_meta.json`` inside the index dir
-    (underscore-prefixed: parquet readers ignore it) so queries cannot
-    silently probe with a mismatched signature scheme. Default planes =
-    ``planes_for(corpus count)``; pass explicitly to override."""
+    One corpus count sizes both the default ``planes`` and the dir
+    layout: the index is partitioned on ``sig_prefix``, the first
+    ``prefix_bits = min(planes, planes_for(n))`` signature bits. At the
+    designed sizing that is one dir per bucket; with more planes than
+    the corpus fills (8 planes over 2k vectors: ~200 non-empty buckets
+    of ~10 rows) buckets share 2^prefix_bits dirs, because each parquet
+    file costs ~10 ms of writer and commit time however few rows it
+    holds.
+
+    ``planes``, ``prefix_bits`` and the index schema are recorded in
+    ``_ann_meta.json`` inside the index dir (underscore-prefixed:
+    parquet readers ignore it), so queries cannot silently probe with a
+    mismatched signature scheme and read without inferring the schema.
+    Default planes = ``planes_for(corpus count)``; pass explicitly to
+    override."""
     import json
-    import os
 
-    planes = _auto_planes(embeddings, planes)
-    # repartition by signature BEFORE the partitioned write: otherwise
-    # every input task writes a file into up to 2^planes bucket dirs
-    # (tasks × buckets small files — a filesystem DoS at scale); after
-    # the shuffle each bucket is one task's contiguous write, so the
-    # index is one file per bucket and the probe read opens exactly the
-    # probed buckets' files. The partition COUNT is pinned explicitly
-    # (r7): a keyed repartition with no count is AQE-coalescible, and on
-    # a small corpus AQE folded all 2^planes buckets into ONE task that
-    # created the bucket files sequentially (~15-40 ms of parquet
-    # writer open/close/rename each — measured 4.6-10.6 s for 254 dirs
-    # vs 1.7-4.3 s spread over the cores). Still one file per bucket:
-    # hash partitioning keeps each sig wholly inside one task.
+    fit = planes_for(embeddings.count())
+    planes = fit if planes is None else planes
+    prefix_bits = min(planes, fit)
+    # repartition by prefix BEFORE the partitioned write: otherwise
+    # every input task writes a file into up to 2^prefix_bits dirs
+    # (tasks × dirs small files — a filesystem DoS at scale); after the
+    # shuffle each dir is one task's contiguous write, so the index is
+    # one file per dir and the probe read opens exactly the probed
+    # dirs' files. The partition COUNT is pinned explicitly (r7): a
+    # keyed repartition with no count is AQE-coalescible, and on a small
+    # corpus AQE folded every dir into ONE task that created the files
+    # sequentially (~15-40 ms of parquet writer open/close/rename each).
     n_write = max(
         1,
         min(
-            2 ** planes,
+            2 ** prefix_bits,
             embeddings.sparkSession.sparkContext.defaultParallelism,
         ),
     )
-    idx = lsh_index(embeddings, dims, planes, id_col, vec_col)
-    idx.repartition(n_write, F.col("sig")).write.mode(
+    idx = lsh_index(embeddings, dims, planes, id_col, vec_col).withColumn(
+        PREFIX_COL, F.substring("sig", 1, prefix_bits)
+    )
+    idx.repartition(n_write, F.col(PREFIX_COL)).write.mode(
         "overwrite"
-    ).partitionBy("sig").parquet(path)
+    ).partitionBy(PREFIX_COL).parquet(path)
     meta = {
         "planes": planes,
         "dims": dims,
         "id_col": id_col,
         "vec_col": vec_col,
+        "prefix_bits": prefix_bits,
+        "schema": idx.schema.jsonValue(),
         "guidance": "planes ~= log2(n / target_bucket); see planes_for()",
     }
     # via the JVM Hadoop FS, NOT open(): the index path may be hdfs://
@@ -220,6 +258,49 @@ def write_lsh_index(
 
 def _meta_path(index_path: str) -> str:
     return index_path.rstrip("/") + "/_ann_meta.json"
+
+
+def _read_partitions(
+    spark, index_path: str, col: str, values: list[str], schema: dict | None
+) -> DataFrame:
+    """The rows of the index dirs ``<col>=<v>`` for ``v`` in ``values``
+    that exist, found with one Hadoop-FS glob and read with ``basePath``
+    and the stored ``schema`` (JSON form): Spark lists only these dirs
+    (in parallel, as a job, above 32 of them) and infers nothing. No
+    matching dir gives an empty frame with the schema. An index written
+    without a stored schema gets one from the footers of one of its
+    dirs, with the partition column as a string."""
+    root = index_path.rstrip("/")
+    dirs = (
+        fsutil.glob(f"{root}/{col}={{{','.join(values)}}}", spark)
+        if values
+        else []
+    )
+    if schema is None:
+        sample = dirs[0] if dirs else fsutil.first_child(root, spark)
+        if sample is None:
+            raise ValueError(f"index at {index_path} holds no partition dirs")
+        data = spark.read.parquet(sample).schema
+        struct = data if col in data.names else data.add(col, "string")
+    else:
+        struct = StructType.fromJson(schema)
+    if not dirs:
+        return spark.createDataFrame([], struct)
+    return spark.read.schema(struct).option("basePath", root).parquet(*dirs)
+
+
+def _lsh_layout(spark, index_path: str, meta: dict) -> tuple[str, int]:
+    """(partition column, signature bits per dir) of an LSH index. An
+    index whose meta has no ``prefix_bits`` was written before the
+    prefix layout (one ``sig=`` dir per whole signature) or lost its
+    meta: its layout is read off a partition dir name."""
+    if "prefix_bits" in meta:
+        return PREFIX_COL, meta["prefix_bits"]
+    child = fsutil.first_child(index_path, spark)
+    if child is None:
+        raise ValueError(f"index at {index_path} holds no partition dirs")
+    col, value = child.rsplit("/", 1)[1].split("=", 1)
+    return col, len(value)
 
 
 def read_index_meta(path: str, spark=None) -> dict | None:
@@ -242,8 +323,13 @@ def lsh_topk_indexed(
     id_col: str | None = None,
     vec_col: str | None = None,
 ) -> DataFrame:
-    """ANN over the persisted index: partition-pruned read of the
-    multi-probe buckets + exact in-bucket cosine top-k. ``planes`` /
+    """ANN over the persisted index: the multi-probe signatures map to
+    their distinct ``prefix_bits`` prefixes, one Hadoop-FS glob finds
+    which of those dirs exist, and only they are read (``basePath`` and
+    the stored schema: no listing of the whole index, no inference job);
+    the exact ``sig IN probes`` filter and in-bucket cosine top-k then
+    give the same rows as the one-shot ``lsh_topk``. A probe set that
+    matches no dir gives an empty frame. ``planes`` /
     ``dims`` / column names default from the index's metadata; passing
     a conflicting ``planes`` explicitly raises (probing with the wrong
     signature scheme would silently return garbage).
@@ -284,8 +370,12 @@ def lsh_topk_indexed(
     if multi_probe is None:
         multi_probe = auto_multi_probe(planes)
     probes = probe_signatures(query_signature(query_vec, dims, planes), multi_probe)
-    idx = spark.read.parquet(index_path).where(F.col("sig").isin(probes))
-    return cosine_topk(idx, query_vec, k, id_col, vec_col)
+    col, bits = _lsh_layout(spark, index_path, meta)
+    prefixes = sorted({p[:bits] for p in probes})
+    idx = _read_partitions(spark, index_path, col, prefixes, meta.get("schema"))
+    return cosine_topk(
+        idx.where(F.col("sig").isin(probes)), query_vec, k, id_col, vec_col
+    )
 
 
 def planes_for(n: int, target_bucket: int = 1024) -> int:
@@ -311,9 +401,10 @@ def auto_multi_probe(planes: int) -> int:
 
 
 def _auto_planes(embeddings: DataFrame, planes: int | None) -> int:
-    """Default path for every LSH entry point: when the caller does not
-    pass ``planes``, size it from a fast corpus count (one count job —
-    metadata-only on a parquet-backed frame) via ``planes_for``. A
+    """Default path for the LSH entry points (``write_lsh_index`` makes
+    the same count itself, to size its dirs too): when the caller does
+    not pass ``planes``, size it from a fast corpus count (one count
+    job — metadata-only on a parquet-backed frame) via ``planes_for``. A
     10^9-vector caller relying on defaults then gets ~2^20 buckets, not
     the 256 a fixed demo default would silently give."""
     if planes is not None:
@@ -514,8 +605,8 @@ def lsh_topk(
 # whose centroids are nearest the query. On clustered real-world
 # embeddings IVF reads fewer rows at equal recall because list
 # boundaries follow the data. Same on-disk contract as the LSH index:
-# partition-pruned reads, meta-validated probes, exact cosine re-rank
-# within the probed lists.
+# probes read only their lists' dirs, validate against the meta, and
+# re-rank with exact cosine within the probed lists.
 
 
 def nlist_for(n: int) -> int:
@@ -544,14 +635,15 @@ def write_ivf_index(
     """Persist the IVF-flat index: k-means (cosine) coarse quantizer,
     vectors partitioned by nearest-centroid ``list_id``. Layout:
 
-    - ``<path>/list_id=<i>/`` — the inverted lists (partition-pruned
-      probe reads, one contiguous file set per list via the same
+    - ``<path>/list_id=<i>/`` — the inverted lists (a probe reads only
+      its lists' dirs, one contiguous file set per list via the same
       repartition-before-partitionBy as ``write_lsh_index``)
     - ``<path>/_ivf_centroids.parquet`` — the nlist×dims centroid table
       (underscore-prefixed: ignored by readers of the main index)
-    - ``<path>/_ann_meta.json`` — {kind, nlist, dims, cols}: probes
-      validate against it exactly like the LSH index (a mismatched
-      quantizer would silently return garbage)
+    - ``<path>/_ann_meta.json`` — {kind, nlist, dims, cols, schema}:
+      probes validate against it exactly like the LSH index (a
+      mismatched quantizer would silently return garbage) and read the
+      lists with its schema
     """
     import json
     import os
@@ -606,6 +698,7 @@ def write_ivf_index(
                 "id_col": id_col,
                 "vec_col": vec_col,
                 "seed": seed,
+                "schema": assigned.schema.jsonValue(),
             }
         ),
         spark=spark,
@@ -641,8 +734,9 @@ def ivf_topk_indexed(
     nprobe: int | None = None,
 ) -> DataFrame:
     """ANN over the persisted IVF index: rank centroids driver-side,
-    partition-pruned read of the nprobe nearest inverted lists, exact
-    in-list cosine top-k. ``nprobe`` defaults to ``auto_nprobe(nlist)``.
+    read only the dirs of the nprobe nearest inverted lists (one glob,
+    the stored schema — as ``lsh_topk_indexed``), exact in-list cosine
+    top-k. ``nprobe`` defaults to ``auto_nprobe(nlist)``.
     Meta is REQUIRED (the index writer always records it): probing an
     index with a mismatched quantizer or dims silently returns garbage,
     so both validate."""
@@ -665,5 +759,7 @@ def ivf_topk_indexed(
     if nprobe is None:
         nprobe = auto_nprobe(meta["nlist"])
     lists = ivf_probe_lists(spark, index_path, query_vec, nprobe)
-    idx = spark.read.parquet(index_path).where(F.col("list_id").isin(lists))
+    idx = _read_partitions(
+        spark, index_path, "list_id", [str(i) for i in lists], meta.get("schema")
+    )
     return cosine_topk(idx, query_vec, k, meta["id_col"], meta["vec_col"])

@@ -167,8 +167,18 @@ class Catalog:
         Produces the same dir layout the Spark writer does, so every
         reader (read_round / read_all / has_round) is unchanged. Same
         idempotent overwrite semantics as write_round: the dir is staged
-        and swapped, so a crash mid-write leaves either the old round
-        dir or none."""
+        in a scratch dir, the old round dir removed, and the scratch
+        renamed into place.
+
+        The removal and the rename are two steps, and a crash between
+        them leaves neither dir. That is safe for the one caller: the
+        driver writes the lineage marker of round k only while k is
+        uncommitted — crawl() resumes at max committed round + 1 and
+        each later round id is fresh — so the removed dir holds no
+        _SUCCESS (at most a crashed attempt's leftovers), and a crash in
+        the window leaves round k uncommitted, as it was before the
+        call; resume drops its partial state and reruns it. Overwriting
+        a committed round this way would not be atomic."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 

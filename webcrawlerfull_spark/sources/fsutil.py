@@ -1,4 +1,5 @@
-"""Filesystem-agnostic small-file IO via the JVM Hadoop FileSystem API.
+"""Filesystem-agnostic small-file IO and listing via the JVM Hadoop
+FileSystem API.
 
 The ANN index writers persist a `_ann_meta.json` sidecar next to the
 parquet buckets. Writing it with Python ``open()`` works only when the
@@ -63,3 +64,31 @@ def read_text(path: str, spark: SparkSession | None = None) -> str | None:
     finally:
         stream.close()
     return bytes(baos.toByteArray()).decode("utf-8")
+
+
+def glob(pattern: str, spark: SparkSession | None = None) -> list[str]:
+    """Fully qualified paths matching a Hadoop glob (``{a,b}``, ``*``,
+    ``?``) on whatever filesystem the pattern's scheme resolves to; []
+    when nothing matches. One FileSystem call on the driver (it lists
+    the pattern's parent dir), never a Spark job."""
+    spark = _active_spark(spark)
+    fs, hpath = _fs_and_path(spark, pattern)
+    found = fs.globStatus(hpath)
+    return [] if found is None else [st.getPath().toString() for st in found]
+
+
+def first_child(path: str, spark: SparkSession | None = None) -> str | None:
+    """Fully qualified path of the first entry under the dir ``path``
+    whose name is not hidden (``_`` or ``.`` prefix, which parquet
+    readers skip), or None. Iterates the listing, so only the entries
+    up to that one cross py4j, however many the dir holds."""
+    spark = _active_spark(spark)
+    fs, hpath = _fs_and_path(spark, path)
+    if not fs.exists(hpath):
+        return None
+    entries = fs.listStatusIterator(hpath)
+    while entries.hasNext():
+        child = entries.next().getPath()
+        if not child.getName().startswith(("_", ".")):
+            return child.toString()
+    return None
