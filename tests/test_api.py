@@ -8,6 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from webcrawlerfull_spark import api
+from webcrawlerfull_spark.config import CrawlConfig
+from webcrawlerfull_spark.sources.catalog import Catalog
+from webcrawlerfull_spark.streaming.driver import crawl
 from webcrawlerfull_spark.synthgen import World
 
 
@@ -27,6 +30,27 @@ def test_task_status_success(spark, crawled):
     st = api.task_status(spark, path, "t-api")
     assert st["state"] == "SUCCESS"
     assert st["fetched"] > 0
+
+
+def test_task_status_budgeted_progress_then_success(spark, tmp_path):
+    """A budgeted crawl writes no frontier table: its status comes from
+    the per-host queue, PROGRESS while rows are pending, SUCCESS once
+    it has drained."""
+    world = World(seed=42, n_hosts=3, base_pages=40)
+    path = str(tmp_path / "budgeted")
+    cfg = CrawlConfig(
+        max_depth=2, task_id="t-bud", politeness_budget=3,
+        shuffle_partitions=8,
+    )
+    crawl(spark, world.seeds(), cfg, world, Catalog(spark, path), max_rounds=2)
+    st = api.task_status(spark, path, "t-bud")
+    assert st["state"] == "PROGRESS" and st["round"] == 1
+    res = api.crawl_domains(
+        spark, world.seeds(), max_depth=2, catalog_path=path, world=world,
+        task_id="t-bud", politeness_budget=3, shuffle_partitions=8,
+    )
+    assert res.rounds_run > 0
+    assert api.task_status(spark, path, "t-bud")["state"] == "SUCCESS"
 
 
 def test_get_urls(spark, crawled):

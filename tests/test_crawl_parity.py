@@ -133,3 +133,26 @@ def test_resume_no_refetch(spark, small_world, tmp_path_factory, oracle_result):
         (d, u) for d, o in oracle_result.items() for u in o.products
     }
     assert got_products == exp_products
+
+
+def test_budgeted_crawl_matches_reference_sets(
+    spark, small_world, tmp_path_factory, oracle_result
+):
+    """A budgeted crawl (the delta-frontier layout, budget 3) drains to
+    the reference crawler's visited set and product set, and never
+    schedules a URL twice. Fetch order differs from the reference BFS;
+    the sets do not, as long as the per-domain frontier cap never binds
+    on this world."""
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("budget_cat")))
+    cfg = CrawlConfig(
+        max_depth=MAX_DEPTH, politeness_budget=3, shuffle_partitions=8
+    )
+    res = crawl(spark, small_world.seeds(), cfg, small_world, cat)
+    seen = [r["url"] for r in res.seen.select("url").collect()]
+    assert len(seen) == len(set(seen)), "a URL was scheduled twice"
+    assert set(seen) == set().union(*(o.visited for o in oracle_result.values()))
+    got_products = {(r["domain"], r["url"]) for r in res.products.collect()}
+    exp_products = {
+        (d, u) for d, o in oracle_result.items() for u in o.products
+    }
+    assert got_products == exp_products

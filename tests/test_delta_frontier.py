@@ -1,12 +1,13 @@
-"""Delta-frontier scheduling mode (streaming/delta_frontier.py —
-BENCH §7.5's mitigation for the O(|frontier|)-per-round schedule and
-next-frontier cost; VERDICT r5 item 1).
+"""Delta-frontier scheduling (streaming/delta_frontier.py — the layout
+every budgeted crawl uses; BENCH §7.5's mitigation for the
+O(|frontier|)-per-round schedule and next-frontier cost).
 
-The crawl-level invariants delta mode must share with merged mode:
-drain to the SAME seen set, per-(host, round) budget respected, global
-no-refetch, determinism under partitioning, crash/resume convergence,
-and compaction transparency. Plus the layout-level properties: dense
-per-host positions, cursor arithmetic, band pruning correctness."""
+The crawl-level invariants: drain to parity mode's seen set, per-(host,
+round) budget respected, global no-refetch, determinism under
+partitioning, crash/resume convergence, compaction transparency, and a
+bounded wait for every queued row on a skewed world. Plus the
+layout-level properties: dense per-host positions, cursor arithmetic,
+band pruning correctness."""
 
 from __future__ import annotations
 
@@ -42,7 +43,7 @@ def test_delta_drains_to_parity_seen_set(spark, tmp_path_factory):
     res_p, _ = _crawl(spark, str(tmp_path_factory.mktemp("p")), world)
     res_d, cat = _crawl(
         spark, str(tmp_path_factory.mktemp("d")), world,
-        politeness_budget=3, frontier_mode="delta",
+        politeness_budget=3,
     )
     seen_p, prod_p = _snap(res_p)
     seen_d, prod_d = _snap(res_d)
@@ -63,25 +64,6 @@ def test_delta_drains_to_parity_seen_set(spark, tmp_path_factory):
         assert all(r["n"] <= 3 for r in per_host)
 
 
-def test_delta_matches_merged_mode_outcome(spark, tmp_path_factory):
-    """Same budget, both modes: identical final seen/product sets and
-    identical TOTAL fetched (the per-round split may differ — delta mode
-    is per-host FIFO across insertion rounds, merged mode re-ranks)."""
-    world = World(seed=7, n_hosts=4, base_pages=50)
-    res_m, _ = _crawl(
-        spark, str(tmp_path_factory.mktemp("m")), world,
-        politeness_budget=5, use_bloom=True,
-    )
-    res_d, _ = _crawl(
-        spark, str(tmp_path_factory.mktemp("d2")), world,
-        politeness_budget=5, use_bloom=True, frontier_mode="delta",
-    )
-    assert _snap(res_d) == _snap(res_m)
-    tot_m = res_m.lineage.agg(F.sum("fetched")).collect()[0][0]
-    tot_d = res_d.lineage.agg(F.sum("fetched")).collect()[0][0]
-    assert tot_d == tot_m
-
-
 def test_delta_deterministic_under_parallelism(spark, tmp_path_factory):
     """North-rule determinism for the delta layout: identical seen rounds,
     lineage counters and products at shuffle_partitions 2 and 16."""
@@ -93,7 +75,7 @@ def test_delta_deterministic_under_parallelism(spark, tmp_path_factory):
             spark, world.seeds(),
             CrawlConfig(
                 max_depth=2, politeness_budget=5, use_bloom=True,
-                compact_every=2, frontier_mode="delta",
+                compact_every=2,
                 shuffle_partitions=parts, salt_partitions=parts,
             ),
             world, cat,
@@ -104,7 +86,10 @@ def test_delta_deterministic_under_parallelism(spark, tmp_path_factory):
     assert {(r["url"], r["round"]) for r in a.seen.collect()} == {
         (r["url"], r["round"]) for r in b.seen.collect()
     }
-    cols = ["round", "frontier_size", "fetched", "parsed", "products"]
+    cols = [
+        "round", "frontier_size", "seen_cardinality", "fetched", "parsed",
+        "products",
+    ]
     assert sorted(tuple(r[c] for c in cols) for r in a.lineage.collect()) == (
         sorted(tuple(r[c] for c in cols) for r in b.lineage.collect())
     )
@@ -119,7 +104,7 @@ def test_delta_resume_converges(spark, tmp_path_factory):
     URL fetched twice across the boundary; re-invoking a finished crawl
     is a no-op (the cursor-drained resume branch)."""
     world = World(seed=42, n_hosts=4, base_pages=40)
-    kw = dict(politeness_budget=4, use_bloom=True, frontier_mode="delta")
+    kw = dict(politeness_budget=4, use_bloom=True)
     ref, _ = _crawl(spark, str(tmp_path_factory.mktemp("ref")), world, **kw)
     tmp = str(tmp_path_factory.mktemp("kill"))
     cat = Catalog(spark, tmp)
@@ -147,7 +132,7 @@ def delta_crash_template(spark, tmp_path_factory):
         if dedup not in built:
             cfg = CrawlConfig(
                 max_depth=2, shuffle_partitions=8, politeness_budget=4,
-                use_bloom=True, frontier_mode="delta",
+                use_bloom=True,
                 doc_dedup=dedup, dedup_k=16, dedup_bands=4,
             )
             ref = crawl(
@@ -277,11 +262,11 @@ def test_delta_compaction_transparent(spark, tmp_path_factory):
     world = World(seed=7, n_hosts=4, base_pages=50)
     res_a, _ = _crawl(
         spark, str(tmp_path_factory.mktemp("nc")), world,
-        politeness_budget=5, use_bloom=True, frontier_mode="delta",
+        politeness_budget=5, use_bloom=True,
     )
     res_b, cat = _crawl(
         spark, str(tmp_path_factory.mktemp("c")), world,
-        politeness_budget=5, use_bloom=True, frontier_mode="delta",
+        politeness_budget=5, use_bloom=True,
         compact_every=2, frontier_compact_dirs=2,
     )
     assert _snap(res_b) == _snap(res_a)
@@ -294,6 +279,43 @@ def test_delta_compaction_transparent(spark, tmp_path_factory):
     drained = live.where(F.col("consumed") < F.col("next_pos")).count()
     assert drained == 0
     assert per_host.count() > 0
+
+
+def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory):
+    """Starvation-freedom on a Zipf-skewed world (the hot host visits
+    about twice the URLs of each other host): a frontier_q row at
+    position p of host h that first becomes visible in round r0, with
+    h's cursor at c, is consumed by round
+    r0 - 1 + ceil((p - c + 1) / budget). Read from the frontier_q and
+    frontier_cursor deltas; queue compaction is held off so no row is
+    reclaimed before it is read."""
+    budget = 3
+    world = World(seed=42, n_hosts=4, base_pages=40, zipf_a=1.5)
+    _, cat = _crawl(
+        spark, str(tmp_path_factory.mktemp("zipf")), world, max_depth=3,
+        politeness_budget=budget, frontier_compact_dirs=10_000,
+    )
+    cursor = {}  # host -> [(dir round, consumed)] in round order
+    for r in sorted(
+        cat.read_all_with_round("frontier_cursor").collect(),
+        key=lambda r: r["r"],
+    ):
+        cursor.setdefault(r["host"], []).append((r["r"], r["consumed"]))
+    rows = cat.read_all_with_round("frontier_q").select(
+        "host", "pos", "r"
+    ).collect()
+    waits = []
+    for row in rows:
+        deltas = cursor[row["host"]]
+        c = [n for rd, n in deltas if rd <= row["r"]][-1]
+        # the cursor delta of dir R+1 is written by round R
+        done = [rd - 1 for rd, n in deltas if n > row["pos"]]
+        assert done, f"{row} never consumed"
+        bound = row["r"] - 1 + -(-(row["pos"] - c + 1) // budget)
+        assert done[0] <= bound, (row, c, done[0], bound)
+        waits.append(done[0] - row["r"])
+    # the skew is real: some row waited several rounds behind its host
+    assert max(waits) >= 3
 
 
 def test_positions_dense_and_banded(spark):
@@ -371,38 +393,41 @@ def test_band_size_below_budget_rejected():
 
 
 def test_resume_frontier_mode_mismatch_raises(spark, tmp_path_factory):
-    """ADVICE r6: resuming a catalog under the other frontier_mode must
-    raise (each direction) instead of silently reporting the crawl
-    finished with pending work still queued."""
+    """ADVICE r6: resuming a catalog with the other politeness_budget
+    setting must raise (each direction) instead of silently reporting
+    the crawl finished with pending work still queued. The merged
+    budgeted layout is gone: frontier_mode only accepts 'delta'."""
     world = World(seed=42, n_hosts=3, base_pages=40)
-    # merged-mode catalog, interrupted mid-run
-    merged_dir = str(tmp_path_factory.mktemp("mm"))
-    cat_m = Catalog(spark, merged_dir)
-    cfg_m = CrawlConfig(max_depth=3, politeness_budget=3, shuffle_partitions=8)
-    crawl(spark, world.seeds(), cfg_m, world, cat_m, max_rounds=2)
-    with pytest.raises(ValueError, match="resume mode mismatch"):
-        crawl(
-            spark, world.seeds(),
-            CrawlConfig(
-                max_depth=3, politeness_budget=3, shuffle_partitions=8,
-                frontier_mode="delta",
-            ),
-            world, Catalog(spark, merged_dir),
-        )
-    # delta-mode catalog, interrupted mid-run
-    delta_dir = str(tmp_path_factory.mktemp("dd"))
-    cat_d = Catalog(spark, delta_dir)
-    cfg_d = CrawlConfig(
-        max_depth=3, politeness_budget=3, shuffle_partitions=8,
-        frontier_mode="delta",
+    parity = CrawlConfig(max_depth=3, shuffle_partitions=8)
+    budgeted = CrawlConfig(
+        max_depth=3, politeness_budget=3, shuffle_partitions=8
     )
-    crawl(spark, world.seeds(), cfg_d, world, cat_d, max_rounds=2)
+    # parity catalog (frontier table), interrupted mid-run
+    parity_dir = str(tmp_path_factory.mktemp("pp"))
+    crawl(spark, world.seeds(), parity, world, Catalog(spark, parity_dir),
+          max_rounds=1)
+    with pytest.raises(ValueError, match="resume mode mismatch") as exc:
+        crawl(spark, world.seeds(), budgeted, world,
+              Catalog(spark, parity_dir))
+    # a frontier table may also be a merged-layout budgeted catalog, so
+    # the message must not send the user to politeness_budget=None
+    assert "cannot be resumed with a budget" in str(exc.value)
+    assert "politeness_budget=None" not in str(exc.value)
+    # the refused resume left the pending work in place
+    assert crawl(
+        spark, world.seeds(), parity, world, Catalog(spark, parity_dir)
+    ).rounds_run == 2
+    # budgeted catalog (frontier_cursor rounds), interrupted mid-run
+    delta_dir = str(tmp_path_factory.mktemp("dd"))
+    crawl(spark, world.seeds(), budgeted, world, Catalog(spark, delta_dir),
+          max_rounds=2)
     with pytest.raises(ValueError, match="resume mode mismatch"):
-        crawl(
-            spark, world.seeds(),
-            CrawlConfig(max_depth=3, politeness_budget=3, shuffle_partitions=8),
-            world, Catalog(spark, delta_dir),
-        )
+        crawl(spark, world.seeds(), parity, world, Catalog(spark, delta_dir))
+    with pytest.raises(ValueError, match="frontier_mode"):
+        CrawlConfig(frontier_mode="merged", politeness_budget=3)
+    assert CrawlConfig(
+        frontier_mode="delta", politeness_budget=5
+    ).politeness_budget == 5
 
 
 def test_delta_all_disposed_round(spark, tmp_path_factory):
@@ -416,7 +441,7 @@ def test_delta_all_disposed_round(spark, tmp_path_factory):
     world = World(seed=42, n_hosts=4, base_pages=40)
     res_d, _ = _crawl(
         spark, str(tmp_path_factory.mktemp("ad")), world,
-        max_depth=3, politeness_budget=3, frontier_mode="delta",
+        max_depth=3, politeness_budget=3,
     )
     res_p, _ = _crawl(
         spark, str(tmp_path_factory.mktemp("ap")), world, max_depth=3

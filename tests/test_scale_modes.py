@@ -1,18 +1,13 @@
-"""Scale-path behaviors the reference can't express: per-host politeness
-budgets, robots gating, hot-host salting invariants, and the Structured
-Streaming analogue over the events table."""
+"""Scale-path operators the reference can't express: the per-host
+politeness_schedule operator, robots gating, and the Structured
+Streaming analogue over the events table. Budgeted crawls themselves
+are tested in test_delta_frontier.py."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from webcrawlerfull_spark.config import CrawlConfig
 from webcrawlerfull_spark.plans.round import apply_robots, politeness_schedule
-from webcrawlerfull_spark.operators.frontier import seed_frontier
-from webcrawlerfull_spark.sources.catalog import Catalog
-from webcrawlerfull_spark.streaming.driver import crawl
-from webcrawlerfull_spark.synthgen import World
 
 
 def _frontier(spark, n_per_host=50, hosts=("a", "b", "c")):
@@ -56,12 +51,12 @@ def test_politeness_budget_respected(spark):
 
 
 def test_scheduled_queue_pos_is_dense_fetch_order(spark):
-    """Budgeted mode re-derives queue_pos on the scheduled slice as the
-    dense per-domain rank under the politeness ordering keys — the
+    """politeness_schedule re-derives queue_pos on the scheduled slice as
+    the dense per-domain rank under the politeness ordering keys — the
     consumers (first-touch attribution, floor(queue_pos/10) batch
-    visibility) read it as fetch order, so carried-over frontier
-    positions (gapped, deferred-first) must not leak through (ADVICE
-    r3). Frontier queue_pos here is deliberately gapped + shuffled."""
+    visibility) read it as fetch order, so the input frontier's
+    positions must not leak through (ADVICE r3). Frontier queue_pos
+    here is deliberately gapped + shuffled."""
     rows = []
     for h in ("a", "b"):
         for i in range(20):
@@ -85,44 +80,6 @@ def test_scheduled_queue_pos_is_dense_fetch_order(spark):
         sl = [r for r in got if r["domain"] == dom]
         sl.sort(key=lambda r: (r["depth"], r["priority"], r["discovery_seq"], r["url"]))
         assert [r["queue_pos"] for r in sl] == list(range(len(sl)))
-
-
-def test_politeness_crawl_drains_frontier(spark, tmp_path_factory):
-    """With a finite budget the crawl takes more rounds but visits the
-    same URL set as parity mode."""
-    world = World(seed=42, n_hosts=3, base_pages=40)
-    seeds = world.seeds()
-    cat_a = Catalog(spark, str(tmp_path_factory.mktemp("parity")))
-    res_a = crawl(
-        spark, seeds, CrawlConfig(max_depth=2, shuffle_partitions=8), world, cat_a
-    )
-    cat_b = Catalog(spark, str(tmp_path_factory.mktemp("budget")))
-    res_b = crawl(
-        spark,
-        seeds,
-        CrawlConfig(max_depth=2, politeness_budget=3, shuffle_partitions=8),
-        world,
-        cat_b,
-    )
-    seen_a = {r["url"] for r in res_a.seen.collect()}
-    seen_b = {r["url"] for r in res_b.seen.collect()}
-    assert res_b.rounds_run > res_a.rounds_run
-    assert seen_b == seen_a
-    # J1 holds globally: no URL is ever scheduled twice across rounds
-    # (direct check of the schedule-time anti-join invariant — the seen
-    # table is the union of every round's scheduled slice)
-    all_seen = cat_b.read_all("seen")
-    assert all_seen.count() == all_seen.select("url").distinct().count()
-    # budget respected per (host, round)
-    for rnd in cat_b.committed_rounds("seen"):
-        per_host = (
-            cat_b.read_round("seen", rnd)
-            .join(cat_b.read_round("frontier", rnd), "url")
-            .groupBy("host")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        assert all(r["n"] <= 3 for r in per_host)
 
 
 def test_robots_gating(spark):
@@ -193,46 +150,3 @@ def test_streaming_micro_batch_events(spark, sf_dir):
         .collect()
     }
     assert got == expected
-
-
-def test_crawl_invariant_under_parallelism(spark, tmp_path_factory):
-    """North-rule determinism: the crawl's seen set, per-round lineage
-    counters, and attributed products are IDENTICAL whatever the
-    partitioning — the same job at N and 4N executors must produce the
-    same crawl, or the two-cluster-size comparison is meaningless. Run
-    the budgeted scale path (politeness + bloom + compaction, the shape
-    with the most shuffle/window machinery) at shuffle_partitions=2 and
-    =16 and compare full result sets, not just counts."""
-    world = World(seed=77, n_hosts=4, base_pages=50)
-    seeds = world.seeds()
-    results = []
-    for parts in (2, 16):
-        cat = Catalog(spark, str(tmp_path_factory.mktemp(f"par{parts}")))
-        res = crawl(
-            spark,
-            seeds,
-            CrawlConfig(
-                max_depth=2,
-                politeness_budget=5,
-                use_bloom=True,
-                compact_every=2,
-                shuffle_partitions=parts,
-                salt_partitions=parts,
-            ),
-            world,
-            cat,
-        )
-        results.append(res)
-    a, b = results
-    assert a.rounds_run == b.rounds_run > 2
-    seen_a = {(r["url"], r["round"]) for r in a.seen.collect()}
-    seen_b = {(r["url"], r["round"]) for r in b.seen.collect()}
-    assert seen_a == seen_b
-    lin_cols = ["round", "frontier_size", "seen_cardinality", "fetched", "parsed", "products"]
-    lin_a = sorted(tuple(r[c] for c in lin_cols) for r in a.lineage.collect())
-    lin_b = sorted(tuple(r[c] for c in lin_cols) for r in b.lineage.collect())
-    assert lin_a == lin_b
-    prod_cols = ["domain", "url", "parser", "depth", "round"]
-    prod_a = sorted(tuple(r[c] for c in prod_cols) for r in a.products.collect())
-    prod_b = sorted(tuple(r[c] for c in prod_cols) for r in b.products.collect())
-    assert prod_a == prod_b

@@ -74,12 +74,9 @@ def run_cell(cpus: int, budget: int) -> None:
             warm, Catalog(spark, os.path.join(tmp, "w")),
         )
     world = bench_world(n_hosts)
-    # WCF_FRONTIER_MODE=delta runs the same cell on the delta-frontier
-    # layout (tools/delta_ab.py interleaves the two for the §8 A/B)
-    mode = os.environ.get("WCF_FRONTIER_MODE", "merged")
     cfg = CrawlConfig(
         max_depth=3, politeness_budget=budget, use_bloom=True,
-        compact_every=3, shuffle_partitions=cpus, frontier_mode=mode,
+        compact_every=3, shuffle_partitions=cpus,
     )
     with tempfile.TemporaryDirectory() as tmp:
         cat = Catalog(spark, os.path.join(tmp, "cat"))

@@ -23,10 +23,7 @@ from webcrawlerfull_spark.operators.frontier import (  # noqa: E402
     seed_frontier,
 )
 from webcrawlerfull_spark.operators.parse_spans import fetch_and_parse  # noqa: E402
-from webcrawlerfull_spark.plans.round import (  # noqa: E402
-    merge_deferred,
-    politeness_schedule,
-)
+from webcrawlerfull_spark.plans.round import politeness_schedule  # noqa: E402
 from webcrawlerfull_spark.session import get_spark  # noqa: E402
 from webcrawlerfull_spark.synthgen import World  # noqa: E402
 from webcrawlerfull_spark import schemas  # noqa: E402
@@ -50,8 +47,7 @@ def main() -> None:
     mentions, page_stats, _arrays = run_cascade(pages)
     seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
     nf = build_next_frontier(pages, frontier, seen, 3, 0)
-    sched, deferred = politeness_schedule(frontier, budget=5, salt_partitions=8)
-    merged = merge_deferred(nf, deferred)
+    sched, _ = politeness_schedule(frontier, budget=5, salt_partitions=8)
 
     # the crawl driver's per-round doc-dedup write (stage 2b): delta over
     # a persisted signature frame vs a one-round prior state
@@ -101,18 +97,6 @@ def main() -> None:
             sched,
             "Expect: two window stages; phase 1 partitions by (host, salt) so "
             "a hot host's sort is spread; phase 2 ranks the reduced set.",
-        ),
-        (
-            "budgeted-mode deferred merge (window-free)",
-            merged,
-            "Expect: the plan TOP is the Union — no Window over the merged "
-            "deferred+fresh set (every Window in the tree is an upstream "
-            "SALTED stage: the politeness two-phase on the deferred branch, "
-            "the frontier cap on the fresh branch). Deferred rows keep their "
-            "original queue_pos; fresh rows get a per-domain offset from one "
-            "partial aggregate (max) joined back. The old shape re-ranked "
-            "deferred+fresh with an unsalted per-domain window, sorting an "
-            "ever-growing hot-domain slice in one task.",
         ),
         (
             "crawl doc-dedup round delta (stage 2b, one write per round)",

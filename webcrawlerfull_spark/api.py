@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from webcrawlerfull_spark import psl
 from webcrawlerfull_spark.config import CrawlConfig
 from webcrawlerfull_spark.sources.catalog import Catalog
+from webcrawlerfull_spark.streaming import delta_frontier as dfq
 from webcrawlerfull_spark.streaming.driver import CrawlResult, crawl
 from webcrawlerfull_spark.synthgen import World
 
@@ -41,7 +42,8 @@ def crawl_domains(
 
 
 def task_status(spark: SparkSession, catalog_path: str, task_id: str) -> dict:
-    """E2 — latest lineage row = progress; empty next frontier = done."""
+    """E2 — latest lineage row = progress; no pending work = done (an
+    empty next frontier, or a drained queue for a budgeted crawl)."""
     cat = Catalog(spark, catalog_path)
     lineage = cat.read_all("lineage")
     if lineage is None:
@@ -55,9 +57,16 @@ def task_status(spark: SparkSession, catalog_path: str, task_id: str) -> dict:
     if not rows:
         return {"state": "PENDING", "task_id": task_id}
     last = rows[0].asDict()
-    done = not cat.has_round("frontier", last["round"] + 1) or cat.read_round(
-        "frontier", last["round"] + 1
-    ).isEmpty()
+    nxt = last["round"] + 1
+    if cat.committed_rounds("frontier_cursor"):
+        # budgeted crawl: done iff the per-host queue has drained (the
+        # same check crawl() makes on resume); it writes no frontier table
+        cursor = dfq.read_cursor(cat, up_to_round=nxt)
+        done = dfq.backlog(cursor).pending == 0
+    else:
+        done = not cat.has_round("frontier", nxt) or cat.read_round(
+            "frontier", nxt
+        ).isEmpty()
     return {
         "state": "SUCCESS" if done else "PROGRESS",
         "task_id": task_id,

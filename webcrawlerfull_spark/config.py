@@ -196,7 +196,8 @@ class CrawlConfig:
     """One crawl run. ``politeness_budget`` None = unbounded (reference
     parity mode: one round == one BFS depth, exactly tasks.py:415-544).
     A finite budget caps fetches per host per round (the scale path);
-    unscheduled frontier rows carry over to the next round."""
+    unscheduled rows wait in the per-host queue of
+    streaming.delta_frontier."""
 
     max_depth: int = 3
     politeness_budget: int | None = None
@@ -248,18 +249,9 @@ class CrawlConfig:
     # doc_dedup_state carries a scheme marker and the driver refuses a
     # cross-family resume.
     dedup_family: str = "fast"
-    # frontier layout for BUDGETED crawls (BENCH §7.5 / VERDICT r5 #1):
-    #   "merged" — re-rank + rewrite the full frontier (discoveries ∪
-    #              deferred backlog) every round; exact global politeness
-    #              order, but O(|frontier|) schedule/next-frontier work
-    #              per round — the named 10^10-scale killer.
-    #   "delta"  — append-only per-host queue (streaming.delta_frontier):
-    #              per-round work is O(|round delta|); per-host FIFO
-    #              across insertion rounds (politeness-ranked within
-    #              each), starvation-free; same crawl-level invariants
-    #              (budget, no-refetch, drain, determinism). Requires a
-    #              politeness_budget. Ignored in parity mode.
-    frontier_mode: str = "merged"
+    # the one budgeted frontier layout (streaming.delta_frontier) is
+    # "delta"; kept as an accepted spelling, any other value raises
+    frontier_mode: str = "delta"
     # frontier_q band partition width; None -> politeness_budget (a
     # round's per-host read window then spans at most two bands)
     frontier_band_size: int | None = None
@@ -269,3 +261,10 @@ class CrawlConfig:
     # O(pending), the one backlog-sized job in delta mode, so it runs on
     # read-amplification pressure, not a clock)
     frontier_compact_dirs: int = 8
+
+    def __post_init__(self):
+        if self.frontier_mode != "delta":
+            raise ValueError(
+                f"frontier_mode={self.frontier_mode!r}: the only frontier "
+                "layout is 'delta'"
+            )

@@ -1,16 +1,15 @@
-"""Schedule-side round operators the crawl driver
-(streaming/driver.py) composes into a round:
+"""Schedule-side round operators:
 
-- ``politeness_schedule`` — the per-host per-round fetch quota
-  (scheduled slice + deferred rest) of the merged frontier layout;
 - ``apply_robots`` — robots gating of a frontier or candidate slice;
-- ``merge_deferred`` — carries the deferred rows into the next merged
-  frontier.
+  the crawl driver (streaming/driver.py) applies it every round;
+- ``politeness_schedule`` — the per-host fetch quota over a whole
+  frontier (scheduled slice + deferred rest) as one operator: the
+  ``o5_politeness_budget`` gate entry and the operator tests run it.
 
-In parity mode (politeness_budget=None) one round == one reference BFS
-depth and the schedule order is exactly the reference's frontier order.
-With a finite budget, each host fetches at most ``budget`` URLs per
-round and the rest of the frontier carries over — the scale path.
+The driver's parity mode (politeness_budget=None) schedules the whole
+frontier, so one round == one reference BFS depth. A budgeted crawl
+schedules from the append-only per-host queue in
+streaming/delta_frontier.py, never by re-ranking a full frontier.
 """
 
 from __future__ import annotations
@@ -29,26 +28,23 @@ def politeness_schedule(
     global per-host top-k, but the heavy sort is spread over
     ``salt_partitions`` slices of the hot host.
 
-    Returns (scheduled, deferred); deferred keeps its columns and rejoins
-    the next round's frontier.
+    Returns (scheduled, deferred); deferred is the rest of the frontier,
+    columns unchanged.
 
-    In budgeted mode ``queue_pos`` on the SCHEDULED slice is re-derived
-    as the dense per-domain rank under the politeness ordering keys
-    (depth, priority, discovery_seq, url) — the round's actual fetch
-    order. Two downstream consumers treat queue_pos as fetch order
-    (first-touch attribution orders by [queue_pos, parser_rank]; the
-    batch-visibility rule groups floor(queue_pos/10)), and the frontier's
-    carried-over positions are neither dense nor fetch-ordered after
-    merge_deferred (deferred rows keep their original rank, fresh rows
-    are offset past them). The re-rank windows over the scheduled slice
-    ONLY — bounded at budget × hosts-per-domain per round, unlike the
-    ever-growing deferred backlog — so it stays cheap on a long crawl.
+    With a budget, ``queue_pos`` on the SCHEDULED slice is re-derived as
+    the dense per-domain rank under the politeness ordering keys (depth,
+    priority, discovery_seq, url) — the slice's actual fetch order. Two
+    downstream consumers treat queue_pos as fetch order (first-touch
+    attribution orders by [queue_pos, parser_rank]; the batch-visibility
+    rule groups floor(queue_pos/10)), and an input frontier's positions
+    need not be dense or fetch-ordered. The re-rank windows over the
+    scheduled slice ONLY — bounded at budget × hosts-per-domain.
     """
     if budget is None:
         return frontier, frontier.limit(0)
     # url tie-break: discovery_seq is unique per domain only within one
-    # frontier generation; deferred rows from older rounds can collide
-    # with fresh ones, and the ranks below must be deterministic
+    # frontier generation; rows of different generations can collide,
+    # and the ranks below must be deterministic
     order = [
         F.col("depth").asc(), F.col("priority").asc(),
         F.col("discovery_seq").asc(), F.col("url").asc(),
@@ -100,47 +96,3 @@ def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
             lambda p: path.startswith(p),
         )
     return joined.where(~blocked).drop(*extra)
-
-
-def merge_deferred(next_frontier: DataFrame, deferred: DataFrame) -> DataFrame:
-    """Scale mode: deferred frontier rows carry over; new discoveries that
-    duplicate a deferred row are dropped (the deferred row is older).
-
-    The deferred slice needs NO seen filter here: it is a subset of this
-    round's post-anti-join ``unseen`` minus this round's ``scheduled``,
-    so it is disjoint from the seen set by construction (an anti-join
-    against seen at this point is a provable no-op — removed; it cost
-    O(|deferred|) probes of the cumulative seen state per round).
-
-    queue_pos assignment is WINDOW-FREE: in budgeted mode the deferred
-    set for a hot domain grows by up to (cap − budget) per round, so a
-    ``Window.partitionBy(domain)`` re-rank would sort an ever-growing
-    hot-domain slice in one task on a long crawl. Instead deferred rows
-    KEEP the rank they were assigned when first queued (stable, already
-    unique per domain) and fresh rows — at most frontier_cap per domain,
-    already densely ranked by build_next_frontier — are offset past the
-    per-domain deferred max (one cheap partial aggregate, no sort). The
-    result is unique per domain and orders every older row before every
-    newer one; within each generation the original (priority,
-    discovery_seq) order is preserved. The frontier's queue_pos is ONLY
-    a stable per-domain unique id here — nothing downstream reads it as
-    fetch order: politeness_schedule orders by (depth, priority,
-    discovery_seq, url) and re-derives a dense fetch-order queue_pos on
-    the scheduled slice, which is what attribution and the
-    batch-visibility rule consume."""
-    fresh = next_frontier.join(deferred.select("url"), "url", "left_anti")
-    cols = [
-        "url", "host", "domain", "depth", "priority",
-        "discovery_seq", "salt_bucket", "round", "queue_pos",
-    ]
-    offsets = deferred.groupBy("domain").agg(
-        (F.max("queue_pos") + 1).alias("_off")
-    )
-    fresh = (
-        fresh.join(offsets, "domain", "left")
-        .withColumn(
-            "queue_pos", F.col("queue_pos") + F.coalesce(F.col("_off"), F.lit(0))
-        )
-        .drop("_off")
-    )
-    return deferred.select(*cols).unionByName(fresh.select(*cols))

@@ -54,8 +54,8 @@ def _seen_projection(scheduled: DataFrame) -> DataFrame:
     """The seen slice a scheduled slice implies: (url, round) where
     round is the round the URL was scheduled/fetched (the ``fetch_round``
     data column the driver stamps at schedule time — the ``round`` data
-    column is the frontier GENERATION, which differs for deferred
-    carry-over rows in budgeted mode)."""
+    column is the frontier GENERATION, which differs for rows a
+    budgeted crawl queued in an earlier round)."""
     return scheduled.select("url", F.col("fetch_round").alias("round"))
 
 

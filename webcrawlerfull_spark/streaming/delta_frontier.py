@@ -1,11 +1,10 @@
-"""Delta-frontier: the O(|round delta|) scheduling layout for budgeted
-crawls (BENCH/BASELINE.md §7.5's named mitigation, VERDICT r5 item 1).
+"""Delta-frontier: the O(|round delta|) scheduling layout every budgeted
+crawl uses (BENCH/BASELINE.md §7.5's named mitigation, VERDICT r5 item 1).
 
-The merged-frontier path (plans/round.py) re-ranks and rewrites the FULL
-frontier (new discoveries ∪ the ever-growing deferred backlog) every
-round: at a 10^10-row frontier with 10^7-row rounds that is 10^3× the
-round's fetch work (the two flat 9 s/round intercepts in §7.5). This
-module replaces that with a queue the round never has to re-rank:
+A budgeted round must not re-rank or rewrite the whole backlog: at a
+10^10-row frontier with 10^7-row rounds that is 10^3× the round's fetch
+work (the two flat 9 s/round intercepts in §7.5). The backlog is
+instead a queue the round never has to re-rank:
 
 - ``frontier_q`` — an APPEND-ONLY per-host queue. Every row gets a dense
   per-host position ``pos`` when it is inserted (ranked by the politeness
@@ -33,14 +32,14 @@ A round then:
    past ``next_pos``), writes the touched cursor rows, and never touches
    the rest of the queue.
 
-Semantics vs merged mode — stated honestly: merged mode re-ranks the
-whole backlog by (depth, priority, discovery_seq, url) every round, so a
-late low-depth discovery jumps the queue; delta mode is per-host FIFO
-across insertion rounds (politeness-ranked within each round). Both are
-valid budgeted-politeness orders; delta mode is additionally
-STARVATION-FREE (every queued URL is fetched within backlog/budget
-rounds — a hot host's merged-mode backlog can starve high-depth rows
-indefinitely). The crawl-level invariants are identical and tested:
+Budgeted order: per-host FIFO across insertion rounds — a host's rows
+from an earlier round are fetched before any row it gained later —
+and politeness-ranked (depth, priority, discovery_seq, url) within one
+insertion round. The order is STARVATION-FREE: the cursor advances by
+exactly ``budget`` positions per round while the host has that much
+pending, so a row at position p that becomes visible in round r0 with
+the host's cursor at c is disposed by round r0 − 1 + ⌈(p − c + 1) /
+budget⌉, however hot the host. The crawl-level invariants are tested:
 same final seen SET as parity mode, per-(host, round) budget respected,
 global no-refetch, deterministic under any partitioning, crash/resume
 converges. Duplicate discoveries of a still-queued URL are accepted at
@@ -99,7 +98,7 @@ def band_size_for(cfg: C.CrawlConfig) -> int:
     smaller band size would silently skip (and then compact away)
     middle-band queue rows (ADVICE r6)."""
     if cfg.politeness_budget is None:
-        raise ValueError("frontier_mode='delta' requires a politeness_budget")
+        raise ValueError("the delta frontier requires a politeness_budget")
     band_size = cfg.frontier_band_size or cfg.politeness_budget
     if band_size < cfg.politeness_budget:
         raise ValueError(

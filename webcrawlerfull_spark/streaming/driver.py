@@ -47,11 +47,7 @@ from webcrawlerfull_spark.operators.textdedup import (
 )
 from webcrawlerfull_spark.operators.frontier import build_next_frontier, seed_frontier
 from webcrawlerfull_spark.operators.parse_spans import fetch_and_parse
-from webcrawlerfull_spark.plans.round import (
-    apply_robots,
-    merge_deferred,
-    politeness_schedule,
-)
+from webcrawlerfull_spark.plans.round import apply_robots
 from webcrawlerfull_spark.sources.catalog import Catalog
 from webcrawlerfull_spark.streaming import delta_frontier as dfq
 from webcrawlerfull_spark.synthgen import World
@@ -235,8 +231,12 @@ def crawl(
     max_rounds: int | None = None,
 ) -> CrawlResult:
     """Run (or resume) a crawl to completion. ``max_rounds`` stops early
-    (for resume tests); call again with the same catalog to continue."""
-    delta_mode = cfg.frontier_mode == "delta" and cfg.politeness_budget is not None
+    (for resume tests); call again with the same catalog to continue.
+
+    Parity mode (politeness_budget None) keeps the whole frontier in the
+    ``frontier`` table; a budgeted crawl keeps it in the per-host queue
+    of streaming.delta_frontier (``frontier_q`` + ``frontier_cursor``)."""
+    delta_mode = cfg.politeness_budget is not None
     committed = catalog.max_committed_round()
     if committed is None:
         round_id = 0
@@ -248,28 +248,30 @@ def crawl(
     else:
         catalog.drop_rounds_after(committed)
         round_id = committed + 1
-        # frontier-mode mismatch on resume: the other layout's tables
-        # hold the real pending work, and without this guard the branch
-        # below would see an empty frontier/cursor and silently report
-        # the crawl finished (rounds_run=0) — mirror of the dedup-scheme
-        # guard (ADVICE r6)
-        has_delta_tables = bool(catalog.committed_rounds("frontier_cursor"))
-        has_merged_tables = bool(catalog.committed_rounds("frontier"))
-        if delta_mode and not has_delta_tables and has_merged_tables:
+        # budget mismatch on resume: the other mode's tables hold the
+        # real pending work, and without this guard the branch below
+        # would see an empty frontier/cursor and silently report the
+        # crawl finished (rounds_run=0) — mirror of the dedup-scheme
+        # guard (ADVICE r6). A frontier table means a parity catalog,
+        # frontier_cursor rounds mean a budgeted one.
+        if delta_mode and catalog.committed_rounds("frontier"):
+            # a frontier table is also what the removed merged budgeted
+            # layout wrote; that catalog cannot continue as a budgeted
+            # crawl, and continuing it without one would change its
+            # semantics, so the message does not suggest dropping it
             raise ValueError(
-                "resume mode mismatch: this catalog was written by a "
-                "frontier_mode='merged' crawl (frontier table present, "
-                "no frontier_cursor rounds) but this run uses "
-                "frontier_mode='delta'; resume with the original "
-                "frontier_mode"
+                "resume mode mismatch: this catalog has a frontier table, "
+                "written by a parity crawl or by the removed merged "
+                "budgeted layout, but this run has politeness_budget="
+                f"{cfg.politeness_budget}; such a catalog cannot be "
+                "resumed with a budget"
             )
-        if not delta_mode and has_delta_tables and not has_merged_tables:
+        if not delta_mode and catalog.committed_rounds("frontier_cursor"):
             raise ValueError(
                 "resume mode mismatch: this catalog was written by a "
-                "frontier_mode='delta' crawl (frontier_cursor rounds "
-                "present, no frontier table) but this run uses "
-                "frontier_mode='merged'; resume with the original "
-                "frontier_mode"
+                "budgeted crawl (frontier_cursor table present) but this "
+                "run has politeness_budget=None; resume with the original "
+                "politeness_budget setting"
             )
         if delta_mode:
             # finished iff the queue has drained (cursor backlog == 0)
@@ -296,11 +298,11 @@ def crawl(
     )
     # in parity mode one round == one reference depth, bounded by max_depth;
     # with a politeness budget the frontier drains over more rounds
-    hard_stop = cfg.max_depth if cfg.politeness_budget is None else 10_000
+    hard_stop = 10_000 if delta_mode else cfg.max_depth
     try:
         return _run_rounds(
             spark, cfg, world, catalog, robots, max_rounds, round_id,
-            rounds_run, seen_total, hard_stop,
+            rounds_run, seen_total, hard_stop, delta_mode,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle)
@@ -317,8 +319,8 @@ def _run_rounds(
     rounds_run: int,
     seen_total: int,
     hard_stop: int,
+    delta_mode: bool,
 ) -> CrawlResult:
-    delta_mode = cfg.frontier_mode == "delta" and cfg.politeness_budget is not None
     band_size = dfq.band_size_for(cfg) if delta_mode else None
     # the frontier row count steers adaptive partitioning and the empty-
     # frontier stop; after the first round it is OBSERVED during the
@@ -397,30 +399,7 @@ def _run_rounds(
 
         t0 = time.monotonic()
         clock = _StageClock(round_id)
-        # ---- stage 1: schedule (robots + J1 seen anti-join + politeness) ---
-        # seen is filtered BEFORE the per-host budget so budget slots never
-        # go to already-seen URLs (otherwise a frontier whose top-k per host
-        # is all seen fetches nothing while unseen rows sit deferred). In
-        # parity mode (budget None) the order is irrelevant.
-        #
-        # The J1 check here anti-joins against LAST ROUND'S scheduled
-        # slice only — NOT the cumulative seen state. Invariant (by
-        # induction over rounds; base: round 0 is seeds on an empty
-        # catalog): frontier(r) ∩ seen(r-1) ⊆ scheduled(r-1). New links
-        # entering frontier(r) were anti-joined against the FULL seen
-        # state inside build_next_frontier (bloom-prefiltered exact
-        # anti-join — no false negatives), and the only seen URLs that
-        # survive the build are those the batch-visibility rule keeps on
-        # purpose: links to URLs scheduled in a LATER batch of round r-1
-        # (tasks.py:433-440,492 — dropped by "the next round's batch
-        # filter", which is this join). Deferred rows are a subset of a
-        # prior round's post-anti-join unseen minus its scheduled slice,
-        # hence never seen. Resume-safe: the frontier table is always
-        # build-produced (or seeds), and drop_rounds_after() keeps it
-        # consistent with scheduled(r-1). At a 10^10-URL frontier this
-        # makes the schedule stage probe a budget-sized table instead of
-        # the full seen state; only link discovery (build) ever touches
-        # cumulative state, and that probe is bloom-gated.
+        # ---- stage 1: schedule (robots + seen check) ---------------------
         candidates = None
         if delta_mode:
             # delta-frontier: the round reads ONLY each pending host's
@@ -444,17 +423,26 @@ def _run_rounds(
                 apply_robots(cand_obs, robots), seen, seen_filters, cfg
             )
         else:
-            gated = apply_robots(frontier, robots)
-            if round_id == 0:
-                unseen = gated
-            else:
+            # parity: the whole frontier is the round. The J1 check
+            # anti-joins against LAST ROUND'S scheduled slice only — NOT
+            # the cumulative seen state. Invariant (by induction over
+            # rounds; base: round 0 is seeds on an empty catalog):
+            # frontier(r) ∩ seen(r-1) ⊆ scheduled(r-1). New links entering
+            # frontier(r) were anti-joined against the FULL seen state
+            # inside build_next_frontier (bloom-prefiltered exact
+            # anti-join — no false negatives), and the only seen URLs
+            # that survive the build are those the batch-visibility rule
+            # keeps on purpose: links to URLs scheduled in a LATER batch
+            # of round r-1 (tasks.py:433-440,492 — dropped by "the next
+            # round's batch filter", which is this join). Resume-safe:
+            # the frontier table is always build-produced (or seeds), and
+            # drop_rounds_after() keeps it consistent with scheduled(r-1).
+            scheduled_raw = apply_robots(frontier, robots)
+            if round_id > 0:
                 prev_sched = catalog.read_round("scheduled", round_id - 1)
-                unseen = gated.join(
+                scheduled_raw = scheduled_raw.join(
                     prev_sched.select("url"), "url", "left_anti"
                 )
-            scheduled_raw, _deferred = politeness_schedule(
-                unseen, cfg.politeness_budget, cfg.salt_partitions
-            )
         # scheduled table FIRST (mark-before-fetch, tasks.py:438-440).
         # The seen table is its url projection and is NOT written: the
         # catalog derives seen from scheduled via the fetch_round stamp
@@ -477,8 +465,8 @@ def _run_rounds(
         #     seen_filters);
         #   - next frontier: waits for `documents` (reads documents,
         #     scheduled, seen, seen_filters, plus the round's cursor and
-        #     candidates in delta mode or the deferred slice in merged
-        #     mode) — nothing doc-dedup or the cascade produce;
+        #     candidates in delta mode) — nothing doc-dedup or the
+        #     cascade produce;
         #   - cascade→products: waits for doc-dedup (kept documents) and
         #     reads products up to the previous round.
         # Nothing in this round reads a chain's output; the next round
@@ -537,7 +525,8 @@ def _run_rounds(
             # thread too, so its py4j construction overlaps doc-dedup.
             def _frontier_chain() -> int:
                 """Build and write the next frontier; returns the rows
-                written (the queue delta in delta mode, else all of it)."""
+                written (the queue delta in delta mode, else the whole
+                next frontier)."""
                 next_frontier = build_next_frontier(
                     docs, scheduled, seen, cfg.max_depth, round_id,
                     cfg.frontier_cap, seen_filters=seen_filters, cfg=cfg,
@@ -552,8 +541,6 @@ def _run_rounds(
                         catalog, next_frontier, scheduled, cursor,
                         candidates, band_size, round_id,
                     )
-                if cfg.politeness_budget is not None:
-                    next_frontier = merge_deferred(next_frontier, _deferred)
                 obs_frontier = Observation()
                 catalog.write_round(
                     next_frontier.observe(
@@ -675,13 +662,12 @@ def _run_rounds(
             cursor.unpersist()
         round_id += 1
         rounds_run += 1
-        # merged mode: fetched == 0 implies the frontier held no unseen
-        # URLs at all (seen filtering precedes the budget), so nothing is
-        # stranded: the deferred set was empty and the next frontier is
-        # discovery-free. Delta mode: a round CAN fetch 0 while disposing
-        # only duplicate/seen queue rows with real work still pending —
-        # stop only when the backlog is drained (the loop-top check);
-        # consumed advances every round, so the loop terminates.
+        # parity mode: fetched == 0 means the whole frontier was seen or
+        # blocked, so no documents and an empty next frontier. Delta
+        # mode: a round CAN fetch 0 while disposing only duplicate/seen
+        # queue rows with real work still pending — stop only when the
+        # backlog is drained (the loop-top check); consumed advances
+        # every round, so the loop terminates.
         if fetched == 0 and not (delta_mode and next_frontier_size > 0):
             break
 
