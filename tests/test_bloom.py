@@ -62,6 +62,68 @@ def test_anti_join_equivalence(spark):
     assert bloomed == exact
 
 
+def test_anti_join_keeps_every_column_and_null(spark):
+    """On multi-column candidates with NULLs (in the url too) the
+    bloom-gated anti-join returns exactly the exact path's rows, with
+    the identical schema: probe carries the rows through the cogroup
+    without coercing a type or dropping a NULL."""
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, IntegerType, LongType, StringType,
+        StructField, StructType,
+    )
+
+    schema = StructType(
+        [
+            StructField("host", StringType()),
+            StructField("url", StringType()),
+            StructField("seq", LongType()),
+            StructField("depth", IntegerType()),
+            StructField("score", DoubleType()),
+            StructField("flag", BooleanType()),
+        ]
+    )
+    rows = [
+        (
+            None if i % 5 == 0 else f"h{i % 3}",
+            None if i % 17 == 0 else f"https://h.example.com/seen/{i}",
+            None if i % 7 == 0 else (1 << 60) + i,  # past float precision
+            None if i % 9 == 0 else i,
+            None if i % 4 == 0 else i / 3,
+            None if i % 6 == 0 else bool(i % 2),
+        )
+        for i in range(600)
+    ]
+    cands = spark.createDataFrame(rows, schema)
+    seen = _urls(spark, 300, "seen")
+    filters = bloom.update_filters(seen, None, B, CAP, FPP)
+    exact = bloom.seen_anti_join(cands, seen, None, B)
+    bloomed = bloom.seen_anti_join(cands, seen, filters, B, CAP, FPP)
+    assert bloomed.schema == exact.schema
+    got, want = (sorted(map(tuple, df.collect()), key=repr)
+                 for df in (bloomed, exact))
+    assert got == want
+    assert 0 < len(want) < len(rows)
+
+
+def test_anti_join_scans_candidates_once(spark, tmp_path):
+    """The executed bloom-gated anti-join scans its candidate source
+    once: both union branches read the one probe output."""
+    src = str(tmp_path / "cands")
+    _urls(spark, 500, "seen").unionByName(_urls(spark, 500, "new")).select(
+        "url", F.length("url").alias("n")
+    ).write.parquet(src)
+    cands = spark.read.parquet(src)
+    seen = _urls(spark, 400, "seen")
+    filters = bloom.update_filters(seen, None, B, CAP, FPP)
+    out = bloom.seen_anti_join(cands, seen, filters, B, CAP, FPP)
+    assert len(out.collect()) == 600  # 100 unseen "seen/" urls + 500 new
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    scans = [ln for ln in final.splitlines()
+             if "FileScan" in ln and "cands" in ln]
+    assert len(scans) == 1, final
+
+
 def test_scheme_versioning(spark):
     seen = _urls(spark, 500, "seen")
     filters = bloom.update_filters(seen, None, B, CAP, FPP)

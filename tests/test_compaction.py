@@ -307,7 +307,8 @@ def test_remembered_schema_reads_match_inference(spark, tmp_path_factory):
     """The catalog remembers the schema of what it wrote, so its reads
     skip the footer-inference job; rows and schema must equal a fresh
     catalog's inferring read — for plain rounds, the derived seen table,
-    a band-partitioned frontier_q round and an EMPTY frontier_q delta."""
+    a band-sorted frontier_q round and an EMPTY frontier_q delta, both
+    written by the queue's own writer."""
     from webcrawlerfull_spark.streaming import delta_frontier as dfq
 
     root = str(tmp_path_factory.mktemp("schema_mem"))
@@ -321,8 +322,8 @@ def test_remembered_schema_reads_match_inference(spark, tmp_path_factory):
         ],
         schema=dfq.QUEUE,
     )
-    cat.write_round(q, "frontier_q", 0, partition_by=["band"])
-    cat.write_round(q.limit(0), "frontier_q", 1, partition_by=["band"])
+    dfq.write_queue(cat, q, 0)
+    dfq.write_queue(cat, q.limit(0), 1)
     sched = q.drop("band").withColumn("fetch_round", F.lit(0))
     cat.write_round(sched, "scheduled", 0)
     cat.write_round(
@@ -350,6 +351,12 @@ def test_remembered_schema_reads_match_inference(spark, tmp_path_factory):
         spark, lambda: Catalog(spark, root).read_round("products", 0)
     )
     assert jobs >= 1  # a fresh catalog pays the inference job
+    # the empty delta reads back empty with the QUEUE columns and types
+    empty = fresh.read_round("frontier_q", 1, schema=dfq.QUEUE)
+    assert [(f.name, f.dataType) for f in empty.schema.fields] == [
+        (f.name, f.dataType) for f in dfq.QUEUE.fields
+    ]
+    assert empty.count() == 0
 
 
 def test_schema_changing_write_falls_back_to_inference(spark, tmp_path_factory):

@@ -16,6 +16,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.config import CrawlConfig
 from webcrawlerfull_spark.sources.catalog import Catalog
 from webcrawlerfull_spark.streaming import delta_frontier as dfq
@@ -344,9 +345,29 @@ def test_positions_dense_and_banded(spark):
         assert all(r["band"] == r["pos"] // 4 for r in sl)
 
 
-def test_needed_bands_and_pruned_read(spark, tmp_path_factory):
-    """needed_bands covers each pending host's read window; a pruned
-    candidate read equals the unpruned one."""
+def _queue_catalog(spark, root, band_size=5):
+    """A catalog whose frontier_q r=0 holds hosts a, b, c with 30, 14
+    and 5 rows at positions 0..n-1, written by bootstrap (the production
+    write path)."""
+    cat = Catalog(spark, root)
+    rows = [
+        {
+            "url": f"https://{h}/p/{p}", "host": h, "domain": f"https://{h}",
+            "depth": 1, "priority": 0, "discovery_seq": p, "salt_bucket": 0,
+            "round": 0,
+        }
+        for h, n in (("a", 30), ("b", 14), ("c", 5))
+        for p in range(n)
+    ]
+    dfq.bootstrap(
+        cat, spark.createDataFrame(rows, schema=schemas.FRONTIER), band_size
+    )
+    return cat
+
+
+def test_backlog_bands_and_band_filtered_read(spark, tmp_path_factory):
+    """backlog_and_bands' bands cover each pending host's read window; a
+    band-filtered candidate read equals the unfiltered one."""
     cursor = spark.createDataFrame(
         [
             {"host": "a", "consumed": 0, "next_pos": 30},
@@ -355,32 +376,101 @@ def test_needed_bands_and_pruned_read(spark, tmp_path_factory):
         ],
         schema=dfq.CURSOR,
     )
-    bands = dfq.needed_bands(cursor, budget=5, band_size=5)
+    bk = dfq.backlog_and_bands(cursor, budget=5, band_size=5)
     # a: [0,5) -> band 0; b: [13,18) -> bands 2,3; c: drained
-    assert bands == [0, 2, 3]
+    assert (bk.pending, bk.pending_hosts, bk.bands) == (31, 2, [0, 2, 3])
 
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("q")))
-    rows = [
-        {
-            "url": f"https://{h}/p/{p}", "host": h, "domain": f"https://{h}",
-            "depth": 1, "priority": 0, "discovery_seq": p, "salt_bucket": 0,
-            "round": 0, "pos": p, "band": p // 5,
-        }
-        for h, n in (("a", 30), ("b", 14), ("c", 5))
-        for p in range(n)
-    ]
-    cat.write_round(
-        spark.createDataFrame(rows, schema=dfq.QUEUE), "frontier_q", 0,
-        partition_by=["band"],
+    cat = _queue_catalog(spark, str(tmp_path_factory.mktemp("q")))
+    want = {("a", p) for p in range(5)} | {("b", 13)}
+    for bands in (bk.bands, None):
+        cand = dfq.read_candidates(cat, cursor, 5, 0, bands)
+        assert {(r["host"], r["pos"]) for r in cand.collect()} == want
+
+
+def test_unfiltered_candidate_read_runs_no_job(spark, tmp_path_factory):
+    """Past MAX_BAND_INLIST bands backlog_and_bands returns bands=None,
+    which read_candidates takes as "read every band": defining the
+    candidate frame runs no Spark job (no second backlog aggregation)."""
+    from test_compaction import _jobs_of
+
+    n = dfq.MAX_BAND_INLIST + 2
+    cursor = spark.createDataFrame(
+        [
+            {"host": f"h{i}", "consumed": 5 * i, "next_pos": 5 * i + 1}
+            for i in range(n)
+        ],
+        schema=dfq.CURSOR,
     )
-    cand = dfq.read_candidates(cat, cursor, budget=5, band_size=5, round_id=0)
-    got = {(r["host"], r["pos"]) for r in cand.collect()}
-    assert got == {("a", p) for p in range(5)} | {("b", 13)}
+    bk = dfq.backlog_and_bands(cursor, budget=5, band_size=5)
+    assert bk.bands is None and bk.pending_hosts == n
+    cat = _queue_catalog(spark, str(tmp_path_factory.mktemp("wide")))
+    cand, jobs = _jobs_of(
+        spark, lambda: dfq.read_candidates(cat, cursor, 5, 0, bk.bands)
+    )
+    assert jobs == 0
+    assert cand.count() == 0  # no queue row of h* hosts
+
+
+def _budgeted_two_rounds(spark, root):
+    world = World(seed=42, n_hosts=4, base_pages=40)
+    cfg = CrawlConfig(
+        max_depth=2, shuffle_partitions=8, politeness_budget=4,
+        use_bloom=True,
+    )
+    cat = Catalog(spark, root)
+    crawl(spark, world.seeds(), cfg, world, cat, max_rounds=2)
+    return world, cfg, cat
+
+
+def test_queue_files_are_flat_and_band_filter_is_pushed(
+    spark, tmp_path_factory
+):
+    """After a 2-round budgeted crawl no frontier_q round dir has a
+    subdirectory (the band lives in the files, not in dir names), and
+    the next round's candidate read pushes its band filter into the
+    Parquet scan."""
+    import os
+
+    root = str(tmp_path_factory.mktemp("flat"))
+    _, cfg, cat = _budgeted_two_rounds(spark, root)
+    rounds = cat.committed_rounds("frontier_q")
+    assert rounds == [0, 1, 2]
+    for r in rounds:
+        d = cat._dir("frontier_q", r)
+        assert not [n for n in os.listdir(d)
+                    if os.path.isdir(os.path.join(d, n))], d
+    cursor = dfq.read_cursor(cat, up_to_round=2)
+    bk = dfq.backlog_and_bands(
+        cursor, cfg.politeness_budget, dfq.band_size_for(cfg)
+    )
+    assert bk.pending > 0 and bk.bands
+    cand = dfq.read_candidates(cat, cursor, cfg.politeness_budget, 2, bk.bands)
+    assert cand.count() > 0
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "frontier_q" in ln]
+    assert scans and all("PushedFilters: [In(band," in ln for ln in scans)
+
+
+def test_resume_refuses_band_directory_layout(spark, tmp_path_factory):
+    """A catalog whose frontier_q round dirs hold band=B subdirectories
+    (the earlier queue layout) is refused on resume with a ValueError
+    that names that layout, instead of Spark's conflicting-directory
+    error at the first queue read."""
+    root = str(tmp_path_factory.mktemp("banddirs"))
+    world, cfg, cat = _budgeted_two_rounds(spark, root)
+    for r in cat.committed_rounds("frontier_q"):
+        d = cat._dir("frontier_q", r)
+        spark.read.parquet(d).write.partitionBy("band").parquet(d + ".old")
+        shutil.rmtree(d)
+        shutil.move(d + ".old", d)
+    assert dfq.band_dirs(cat)
+    with pytest.raises(ValueError, match="one directory per band"):
+        crawl(spark, world.seeds(), cfg, world, Catalog(spark, root))
 
 
 def test_band_size_below_budget_rejected():
     """ADVICE r6: frontier_band_size < politeness_budget would make a
-    round's per-host window span >2 band partitions — middle-band rows
+    round's per-host window span >2 bands — middle-band rows
     would be skipped then deleted by compaction. Must fail loudly."""
     cfg = CrawlConfig(politeness_budget=5, frontier_band_size=3)
     with pytest.raises(ValueError, match="frontier_band_size"):

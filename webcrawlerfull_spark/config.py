@@ -252,8 +252,10 @@ class CrawlConfig:
     # the one budgeted frontier layout (streaming.delta_frontier) is
     # "delta"; kept as an accepted spelling, any other value raises
     frontier_mode: str = "delta"
-    # frontier_q band partition width; None -> politeness_budget (a
-    # round's per-host read window then spans at most two bands)
+    # frontier_q band width in queue positions (band = pos // width; the
+    # queue files are sorted on band so a round's band filter skips the
+    # rest); None -> politeness_budget (a round's per-host read window
+    # then spans at most two bands)
     frontier_band_size: int | None = None
     # delta-mode queue maintenance trigger: fold frontier_q round dirs +
     # reclaim consumed rows only when the committed dir count exceeds

@@ -10,8 +10,8 @@ buckets, each a byte blob row ``(bucket_id, filter_bytes)``:
 - build/update: cogrouped ``applyInPandas`` — per bucket, OR the new
   URLs' bits into the previous blob (Arrow-batched, no per-row Python
   rows crossing the JVM boundary)
-- probe: cogrouped ``applyInPandas`` over (candidates, filters) — emits
-  ``maybe_seen`` per URL with NO false negatives
+- probe: cogrouped ``applyInArrow`` over (candidates, filters) — emits
+  every candidate row with ``maybe_seen`` appended, NO false negatives
 - exact anti-join ONLY on bloom-positives: at scale the giant
   ``frontier LEFT ANTI JOIN seen`` shrinks to the tiny
   true-seen + false-positive slice (fpp-bounded)
@@ -76,13 +76,6 @@ def scheme_ok(filters: DataFrame) -> bool:
     ).limit(1)
     return len(bad.take(1)) == 0
 
-PROBE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("maybe_seen", BooleanType()),
-    ]
-)
-
 # xxhash64 seeds for the two independent in-bucket hash streams (any two
 # distinct constants work; 0 is reserved for the bucket-routing hash)
 _SEED_H1 = 0x51ED
@@ -101,15 +94,16 @@ def bucket_col(url_col, buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(buckets)).cast("int")
 
 
-def _hash_cols(df: DataFrame, url_col: str, buckets: int) -> DataFrame:
-    """url + bucket_id + the two in-bucket hash streams, all JVM-side."""
+def _hash_cols(url_col: str, buckets: int, names=("bucket_id", "h1", "h2")):
+    """bucket id + the two in-bucket hash streams of ``url_col``, all
+    JVM-side, named ``names``."""
     u = F.col(url_col)
-    return df.select(
-        u.alias("url"),
-        bucket_col(u, buckets).alias("bucket_id"),
-        F.xxhash64(u, F.lit(_SEED_H1)).alias("h1"),
-        F.xxhash64(u, F.lit(_SEED_H2)).bitwiseOR(F.lit(1)).alias("h2"),
-    )
+    bucket, h1, h2 = names
+    return [
+        bucket_col(u, buckets).alias(bucket),
+        F.xxhash64(u, F.lit(_SEED_H1)).alias(h1),
+        F.xxhash64(u, F.lit(_SEED_H2)).bitwiseOR(F.lit(1)).alias(h2),
+    ]
 
 
 def _positions(h1, h2, m: int, k: int) -> np.ndarray:
@@ -151,7 +145,9 @@ def update_filters(
     touches 5 of 64 buckets writes 5 rows, not the whole state)."""
     m, k = _params(capacity, fpp)
     spark = new_urls.sparkSession
-    new_b = _hash_cols(new_urls, url_col, buckets)
+    new_b = new_urls.select(
+        F.col(url_col).alias("url"), *_hash_cols(url_col, buckets)
+    )
     if old_filters is None:
         old_filters = spark.createDataFrame([], schema=FILTERS_SCHEMA)
     elif "scheme" not in old_filters.columns:
@@ -199,6 +195,11 @@ def update_filters(
     return touched.unionByName(untouched)
 
 
+# probe's helper columns on the candidate rows (private names, so they
+# cannot collide with a candidate column)
+_PROBE_COLS = ("_bloom_bucket", "_bloom_h1", "_bloom_h2")
+
+
 def probe(
     candidates: DataFrame,
     filters: DataFrame,
@@ -207,24 +208,35 @@ def probe(
     fpp: float = 0.01,
     url_col: str = "url",
 ) -> DataFrame:
-    """(url, maybe_seen) for every candidate URL — no false negatives."""
-    m, k = _params(capacity, fpp)
-    cand = _hash_cols(candidates, url_col, buckets)
+    """Every candidate row with a ``maybe_seen`` flag appended — no false
+    negatives. The rows themselves ride the cogroup (Arrow in, Arrow out,
+    so every column keeps its type and NULLs), which keeps ``candidates``
+    referenced once in the plan: no url-only projection joined back."""
+    import pyarrow as pa
 
-    def run(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf):
-            return pd.DataFrame({"url": [], "maybe_seen": []})
-        if len(filt_pdf):
-            bits = np.frombuffer(filt_pdf["filter_bytes"].iloc[0], dtype=np.uint8)
-            flags = _test_bits(bits, cand_pdf["h1"], cand_pdf["h2"], m, k)
+    m, k = _params(capacity, fpp)
+    bucket, h1, h2 = _PROBE_COLS
+    cand = candidates.select("*", *_hash_cols(url_col, buckets, _PROBE_COLS))
+    schema = StructType(
+        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
+    )
+
+    def run(cand_t: pa.Table, filt_t: pa.Table) -> pa.Table:
+        if filt_t.num_rows:
+            bits = np.frombuffer(filt_t.column("filter_bytes")[0].as_py(), dtype=np.uint8)
+            flags = _test_bits(
+                bits, cand_t.column(h1).to_numpy(), cand_t.column(h2).to_numpy(), m, k
+            )
         else:
-            flags = np.zeros(len(cand_pdf), dtype=bool)
-        return pd.DataFrame({"url": cand_pdf["url"], "maybe_seen": flags})
+            flags = np.zeros(cand_t.num_rows, dtype=bool)
+        return cand_t.drop_columns(list(_PROBE_COLS)).append_column(
+            "maybe_seen", pa.array(flags, type=pa.bool_())
+        )
 
     return (
-        cand.groupBy("bucket_id")
+        cand.groupBy(bucket)
         .cogroup(filters.groupBy("bucket_id"))
-        .applyInPandas(run, schema=PROBE_SCHEMA)
+        .applyInArrow(run, schema=schema)
     )
 
 
@@ -243,13 +255,16 @@ def seen_anti_join(
         return candidates.join(
             seen_exact.select(F.col("url").alias(url_col)), url_col, "left_anti"
         )
-    flags = probe(candidates, filters, buckets, capacity, fpp, url_col=url_col)
-    flagged = candidates.join(
-        flags.withColumnRenamed("url", url_col), url_col, "left"
-    ).withColumn("maybe_seen", F.coalesce("maybe_seen", F.lit(False)))
+    # both branches read the one probe output; its input exchange is
+    # shared between them (exchange reuse), so the candidate source is
+    # computed once
+    flagged = probe(candidates, filters, buckets, capacity, fpp, url_col=url_col)
     definite_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
     verified_new = suspects.join(
         seen_exact.select(F.col("url").alias(url_col)), url_col, "left_anti"
     )
-    return definite_new.unionByName(verified_new)
+    # the exact path's column order (a using-join puts the key first)
+    return definite_new.unionByName(verified_new).select(
+        url_col, *[c for c in candidates.columns if c != url_col]
+    )

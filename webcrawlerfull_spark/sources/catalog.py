@@ -101,20 +101,13 @@ class Catalog:
         os.makedirs(base, exist_ok=True)
         self._finish_pending_compactions()
 
-    def _remember(
-        self, table: str, schema: StructType, partition_by: list[str] | None
-    ) -> None:
+    def _remember(self, table: str, schema: StructType) -> None:
         """Remember the schema written to ``table`` so its reads skip
         Spark's parquet footer-inference job (one single-task job per
         read, ~0.1 s of driver round-trip on the round's serial path).
-        Partition columns live in the dir names, not in the files, so
-        they are left out and discovered as an inferring read does. Once
-        two writes disagree (nullability aside) the table's reads infer
-        again; a fresh Catalog, as on resume, infers until it writes."""
-        if partition_by:
-            schema = StructType(
-                [f for f in schema.fields if f.name not in partition_by]
-            )
+        Once two writes disagree (nullability aside) the table's reads
+        infer again; a fresh Catalog, as on resume, infers until it
+        writes."""
         with self._schemas_lock:
             known = self._schemas.setdefault(table, schema)
             if known is not None and _shape(known) != _shape(schema):
@@ -135,27 +128,19 @@ class Catalog:
             d = os.path.join(d, f"r={round_id}")
         return d
 
-    def write_round(
-        self,
-        df: DataFrame,
-        table: str,
-        round_id: int,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """``partition_by`` adds sub-partition dirs under the round dir
-        (e.g. frontier_q's ``band`` — the delta-frontier read path prunes
-        on it); the round-dir overwrite idempotency is unchanged."""
+    def write_round(self, df: DataFrame, table: str, round_id: int) -> None:
+        """Write ``df`` as the files of one round dir, replacing it (a
+        rerun of a round is idempotent). The dir has no subdirectories:
+        a layout a reader relies on (frontier_q's band-sorted files) is
+        the caller's partitioning and sort of ``df``."""
         if table == "scheduled" and "fetch_round" not in df.columns:
             # the derived-seen contract depends on this data column
             # (_seen_projection); a scheduled slice written for round k
             # was by definition fetched in round k, so stamp it here
             # rather than trusting every caller (ADVICE r5)
             df = df.withColumn("fetch_round", F.lit(round_id))
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._dir(table, round_id))
-        self._remember(table, df.schema, partition_by)
+        df.write.mode("overwrite").parquet(self._dir(table, round_id))
+        self._remember(table, df.schema)
 
     def write_round_local(
         self, rows: list[dict], table: str, round_id: int, schema
@@ -214,7 +199,7 @@ class Catalog:
             pass
         shutil.rmtree(d, ignore_errors=True)
         os.rename(tmp, d)
-        self._remember(table, schema, None)
+        self._remember(table, schema)
 
     def has_round(self, table: str, round_id: int) -> bool:
         d = self._dir(table, round_id)
@@ -225,10 +210,9 @@ class Catalog:
             # derived: this round's scheduled slice, projected (the
             # parquet scan is column-pruned to url + fetch_round)
             return _seen_projection(self.read_round("scheduled", round_id))
-        # a partitionBy write of an EMPTY frame leaves only _SUCCESS (no
-        # part files, no footer) — schema inference fails there, so delta
-        # tables that can legitimately be empty (frontier_q on a
-        # discovery-free round) pass their declared schema
+        # delta tables that can legitimately be empty (frontier_q on a
+        # discovery-free round) pass their declared schema, so the read
+        # never depends on what an empty write left behind
         return self._reader(table, schema).parquet(self._dir(table, round_id))
 
     def committed_rounds(self, table: str) -> list[int]:
@@ -352,7 +336,6 @@ class Catalog:
         up_to: int,
         dedup_keys: list[str] | None = None,
         transform=None,
-        partition_by: list[str] | None = None,
     ) -> bool:
         """MERGE-equivalent compaction (reference upsert-union,
         storage.py:140-186 / SURVEY S7+J5): rewrite every committed round
@@ -361,11 +344,10 @@ class Catalog:
         DATA column, so row-level lineage survives; directory-level
         time-travel below ``up_to`` is traded away — the Iceberg
         snapshot-expiry analogue). ``transform`` (DataFrame -> DataFrame)
-        lets the caller drop dead rows during the rewrite (delta-frontier
-        consumed-row reclaim); ``partition_by`` preserves sub-partition
-        pruning across the rewrite. Crash-safe: the merged data lands in
-        a committed .compact tmp dir first and ``__init__`` finishes any
-        interrupted swap."""
+        lets the caller drop dead rows during the rewrite and keep its
+        file layout (delta-frontier consumed-row reclaim, band-sorted).
+        Crash-safe: the merged data lands in a committed .compact tmp dir
+        first and ``__init__`` finishes any interrupted swap."""
         rounds = [r for r in self.committed_rounds(table) if r <= up_to]
         if len(rounds) <= 1:
             return False
@@ -380,10 +362,7 @@ class Catalog:
         if transform is not None:
             df = transform(df)
         tmp = self._dir(table, None) + f"/.compact={up_to}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         for r in rounds:
             shutil.rmtree(self._dir(table, r), ignore_errors=True)
         os.rename(tmp, self._dir(table, up_to))
@@ -554,13 +533,7 @@ class IcebergCatalog:
     def _exists(self, table: str) -> bool:
         return self.spark.catalog.tableExists(self._tbl(table))
 
-    def write_round(
-        self,
-        df: DataFrame,
-        table: str,
-        round_id: int,
-        partition_by: list[str] | None = None,
-    ) -> None:
+    def write_round(self, df: DataFrame, table: str, round_id: int) -> None:
         t = self._tbl(table)
         df = df.withColumn("_r", F.lit(round_id))
         if self._exists(table):
@@ -568,8 +541,7 @@ class IcebergCatalog:
             # in one atomic snapshot (dynamic partition overwrite)
             df.writeTo(t).overwritePartitions()
         else:
-            parts = [F.col("_r")] + [F.col(c) for c in (partition_by or [])]
-            df.writeTo(t).partitionedBy(*parts).create()
+            df.writeTo(t).partitionedBy(F.col("_r")).create()
 
     def write_round_local(
         self, rows: list[dict], table: str, round_id: int, schema
@@ -706,10 +678,7 @@ class IcebergCatalog:
         up_to: int,
         dedup_keys: list[str] | None = None,
         transform=None,
-        partition_by: list[str] | None = None,
     ) -> bool:
-        # partition_by is a no-op here: the Iceberg table's partition
-        # spec was fixed at create() and survives the overwrite snapshot
         rounds = [r for r in self.committed_rounds(table) if r <= up_to]
         if len(rounds) <= 1:
             return False

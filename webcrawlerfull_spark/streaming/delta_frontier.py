@@ -9,20 +9,24 @@ instead a queue the round never has to re-rank:
 - ``frontier_q`` — an APPEND-ONLY per-host queue. Every row gets a dense
   per-host position ``pos`` when it is inserted (ranked by the politeness
   keys *within its insertion round*: depth, priority, discovery_seq,
-  url), and is stored under a ``band = pos // band_size`` partition
-  directory. Rows are never updated or deleted by the round loop;
-  consumption is tracked by cursor, and fully-consumed rows are dropped
-  lazily at compaction time.
+  url) and a ``band = pos // band_size`` column. Each delta is written
+  as a few files sorted by (band, host, pos) — one for a small round —
+  so a band filter skips row groups and pages by their statistics,
+  with no directory per band to list or open. Rows are never updated
+  or deleted by the round loop; consumption is tracked by cursor, and
+  fully-consumed rows are dropped lazily at compaction time.
 - ``frontier_cursor`` — one (host, consumed, next_pos) row per touched
   host per round, read back as latest-row-per-host (the same
   touched-only MERGE shape as the bloom state). ``pending = next_pos -
   consumed`` is the host's backlog.
 
 A round then:
-1. reads ONLY the partitions holding each pending host's next ``budget``
+1. reads ONLY the bands holding each pending host's next ``budget``
    positions (``band_size >= budget`` ⇒ at most two bands per host; with
-   uniform per-host progress the global band set is tiny, so the read is
-   ~2×|scheduled|, partition-pruned — never O(|frontier|));
+   uniform per-host progress the global band set is tiny, and the
+   ``band IN (...)`` filter is pushed into the Parquet scan, where the
+   band-sorted files let it skip every other row group and page — so
+   the read follows the round's slice, never O(|frontier|));
 2. disposes that whole slice: robots-blocked rows, in-slice duplicate
    URLs (keep-first by pos) and already-seen URLs (bloom-gated exact
    anti-join — the safety net for duplicate inserts whose first copy was
@@ -54,6 +58,8 @@ process-resident seen set).
 
 from __future__ import annotations
 
+import glob
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -72,14 +78,14 @@ CURSOR = StructType(
     ]
 )
 
-# frontier_q data columns = FRONTIER + pos; ``band`` is its partition col
+# frontier_q columns = FRONTIER + pos + band (files sorted on band)
 QUEUE = StructType(
     schemas.FRONTIER.fields
     + [StructField("pos", LongType()), StructField("band", LongType())]
 )
 
-# above this many distinct needed bands the isin() partition filter is
-# dropped (correct either way — pruning is purely a read optimization)
+# above this many distinct needed bands the isin() band filter is
+# dropped (correct either way — skipping is purely a read optimization)
 MAX_BAND_INLIST = 128
 
 def _order():
@@ -93,7 +99,7 @@ def _order():
 
 def band_size_for(cfg: C.CrawlConfig) -> int:
     """band_size >= budget guarantees a round's per-host read window
-    [consumed, consumed+budget) spans at most two band partitions —
+    [consumed, consumed+budget) spans at most two bands —
     backlog_and_bands collects only each host's lo and hi bands, so a
     smaller band size would silently skip (and then compact away)
     middle-band queue rows (ADVICE r6)."""
@@ -104,7 +110,7 @@ def band_size_for(cfg: C.CrawlConfig) -> int:
         raise ValueError(
             f"frontier_band_size={band_size} < politeness_budget="
             f"{cfg.politeness_budget}: a round's per-host window would "
-            "span more than two band partitions and middle-band rows "
+            "span more than two bands and middle-band rows "
             "would be skipped then deleted by compaction; set "
             "frontier_band_size >= politeness_budget (or leave it None)"
         )
@@ -134,6 +140,28 @@ def assign_positions(
     )
 
 
+def _banded(q: DataFrame) -> DataFrame:
+    """The frontier_q file layout: one shuffle on ``band`` (AQE coalesces
+    it to one task, hence one file, for a small round and a few for a
+    large one), rows sorted by (band, host, pos) inside each file. The
+    sort gives every row group and page a narrow band range, so the
+    round's ``band IN (...)`` filter skips the rest by their statistics;
+    one directory per band instead cost a file per band on write and a
+    listing job on read."""
+    return q.repartition(F.col("band")).sortWithinPartitions(
+        "band", "host", "pos"
+    )
+
+
+def write_queue(catalog, q: DataFrame, round_id: int, obs=None) -> None:
+    """Write ``q`` (QUEUE columns) as frontier_q round ``round_id`` in the
+    band-sorted layout; ``obs`` observes its row count on the write."""
+    q = _banded(q)
+    if obs is not None:
+        q = q.observe(obs, F.count(F.lit(1)).alias("n"))
+    catalog.write_round(q, "frontier_q", round_id)
+
+
 def bootstrap(catalog, seeds_df: DataFrame, band_size: int) -> None:
     """Seed the queue: frontier_q r=0 + cursor r=0 (consumed 0)."""
     q0 = assign_positions(
@@ -141,7 +169,7 @@ def bootstrap(catalog, seeds_df: DataFrame, band_size: int) -> None:
         None,
         band_size,
     )
-    catalog.write_round(q0, "frontier_q", 0, partition_by=["band"])
+    write_queue(catalog, q0, 0)
     cursor0 = (
         catalog.read_round("frontier_q", 0)
         .groupBy("host")
@@ -149,6 +177,17 @@ def bootstrap(catalog, seeds_df: DataFrame, band_size: int) -> None:
         .select("host", F.lit(0).cast("long").alias("consumed"), "next_pos")
     )
     catalog.write_round(cursor0, "frontier_cursor", 0)
+
+
+def band_dirs(catalog) -> list[str]:
+    """The ``frontier_q/r=*/band=*`` dirs of a parquet catalog: the
+    earlier queue layout, one directory per band, which Spark cannot
+    read next to band-sorted round dirs. Always empty for a catalog
+    that has no base dir (IcebergCatalog)."""
+    base = getattr(catalog, "base", None)
+    if base is None:
+        return []
+    return sorted(glob.glob(os.path.join(base, "frontier_q", "r=*", "band=*")))
 
 
 def read_cursor(catalog, up_to_round: int) -> DataFrame | None:
@@ -168,7 +207,9 @@ def read_cursor(catalog, up_to_round: int) -> DataFrame | None:
 class Backlog:
     pending: int          # total queued-but-undisposed rows
     pending_hosts: int    # hosts with pending > 0
-    bands: list[int] | None = None   # this round's needed band partitions
+    # this round's needed bands; None = too many for an isin() filter,
+    # read every band (backlog_and_bands only — backlog() leaves it None)
+    bands: list[int] | None = None
 
 
 def backlog(cursor: DataFrame | None) -> Backlog:
@@ -190,13 +231,14 @@ def backlog(cursor: DataFrame | None) -> Backlog:
 def backlog_and_bands(
     cursor: DataFrame | None, budget: int, band_size: int
 ) -> Backlog:
-    """backlog() + needed_bands() in ONE aggregation job — the only
-    per-round driver-side job the delta layout adds to the loop top.
-    Each pending host's read window [consumed, consumed+budget) touches
-    ≤2 bands (band_size >= budget); bands=None (no pruning) when the
-    distinct set outgrows an isin() filter — correct either way."""
+    """backlog() + the bands this round reads, in ONE aggregation job —
+    the only per-round driver-side job the delta layout adds to the loop
+    top. Each pending host's read window [consumed, consumed+budget)
+    touches ≤2 bands (band_size >= budget); bands=None (no band filter)
+    when the distinct set outgrows an isin() filter — correct either
+    way."""
     if cursor is None:
-        return Backlog(0, 0)
+        return Backlog(0, 0, [])
     lo = F.floor(F.col("consumed") / F.lit(band_size))
     hi = F.floor((F.col("consumed") + F.lit(budget - 1)) / F.lit(band_size))
     row = (
@@ -224,29 +266,20 @@ def backlog_and_bands(
     return Backlog(int(row["p"]), int(row["h"]), bands)
 
 
-def needed_bands(
-    cursor: DataFrame, budget: int, band_size: int
-) -> list[int] | None:
-    """The ≤2 band partitions per pending host a round can touch; see
-    backlog_and_bands (the driver folds this into the backlog agg)."""
-    return backlog_and_bands(cursor, budget, band_size).bands
-
-
 def read_candidates(
     catalog,
     cursor: DataFrame,
     budget: int,
-    band_size: int,
     round_id: int,
-    bands: list[int] | None = None,
+    bands: list[int] | None,
 ) -> DataFrame:
     """Each pending host's next ``budget`` queue positions — the only
-    slice of frontier_q a round ever reads (band-partition-pruned).
-    ``bands`` comes from backlog_and_bands (the driver computes it in
-    the same job as the backlog); computed here if not given."""
+    slice of frontier_q a round ever reads. ``bands`` is
+    backlog_and_bands' list (computed in the same job as the backlog):
+    the ``band IN (...)`` filter is pushed into the Parquet scan, which
+    skips the row groups and pages of every other band; None reads every
+    band. Defining the frame runs no Spark job."""
     q = catalog.read_all_with_round("frontier_q", up_to_round=round_id)
-    if bands is None:
-        bands = needed_bands(cursor, budget, band_size)
     if bands is not None:
         q = q.where(F.col("band").isin(bands))
     pend = cursor.where(F.col("consumed") < F.col("next_pos"))
@@ -321,20 +354,8 @@ def append_delta(
     delta = assign_positions(fresh, cursor, band_size).select(
         *[f.name for f in QUEUE.fields]
     )
-    # repartition by band before the partitioned write (the
-    # write_lsh_index lesson): without it every task writes a file into
-    # every band dir it has rows for — tasks x bands small files that
-    # every later pruned read pays to open; AQE coalesces the shuffle to
-    # ~one task (= one file) per band
     obs = Observation()
-    catalog.write_round(
-        delta.repartition(F.col("band")).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ),
-        "frontier_q",
-        round_id + 1,
-        partition_by=["band"],
-    )
+    write_queue(catalog, delta, round_id + 1, obs)
     inserted_n = int(obs.get["n"])
     inserted = catalog.read_round("frontier_q", round_id + 1, schema=QUEUE)
 
@@ -366,8 +387,8 @@ def append_delta(
 def compact(catalog, up_to: int, band_size: int) -> None:
     """Amortized queue maintenance: fold the cursor deltas to
     latest-per-host and rewrite frontier_q keeping only undisposed rows
-    (pos >= the host's consumed), band partitioning preserved so later
-    rounds still prune. O(pending) every compact_every rounds — the only
+    (pos >= the host's consumed), in the same band-sorted layout so later
+    rounds still skip by band. O(pending) every compact_every rounds — the only
     backlog-sized work in delta mode, and it is optional hygiene, not a
     per-round stage."""
     cursor = read_cursor(catalog, up_to)
@@ -377,12 +398,10 @@ def compact(catalog, up_to: int, band_size: int) -> None:
     cursor = read_cursor(catalog, up_to)
 
     def live_rows(q: DataFrame) -> DataFrame:
-        return (
+        return _banded(
             q.join(cursor.select("host", "consumed"), "host", "left")
             .where(F.col("pos") >= F.coalesce(F.col("consumed"), F.lit(0)))
             .drop("consumed")
         )
 
-    catalog.compact(
-        "frontier_q", up_to, transform=live_rows, partition_by=["band"]
-    )
+    catalog.compact("frontier_q", up_to, transform=live_rows)

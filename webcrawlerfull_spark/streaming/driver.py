@@ -278,6 +278,18 @@ def crawl(
             cursor = dfq.read_cursor(catalog, up_to_round=round_id)
             if dfq.backlog(cursor).pending == 0:
                 return _result(spark, catalog, rounds_run=0)
+            # pending work in the earlier queue layout: Spark's reader
+            # would fail at the first queue read ("Conflicting directory
+            # structures detected"), so refuse with the reason instead
+            band_dirs = dfq.band_dirs(catalog)
+            if band_dirs:
+                raise ValueError(
+                    "frontier_q layout mismatch: this catalog's queue was "
+                    "written with one directory per band (e.g. "
+                    f"{band_dirs[0]}), a layout this version no longer "
+                    "reads; finish the crawl with the version that wrote "
+                    "it, or start a new catalog"
+                )
         elif not catalog.has_round("frontier", round_id):
             # finished run: previous round produced no next frontier
             return _result(spark, catalog, rounds_run=0)
@@ -340,7 +352,7 @@ def _run_rounds(
             # frontier table scan; round size is budget-capped per host
             # the cursor frame feeds three consumers this round (loop-top
             # agg, candidate read, cursor update) — persist it once; the
-            # backlog counters and the needed band partitions come from
+            # backlog counters and the needed bands come from
             # ONE aggregation job (the only per-round driver-side job
             # this layout adds)
             cursor = dfq.read_cursor(catalog, up_to_round=round_id).persist()
@@ -403,14 +415,13 @@ def _run_rounds(
         candidates = None
         if delta_mode:
             # delta-frontier: the round reads ONLY each pending host's
-            # next budget-sized queue slice (band-partition-pruned) and
+            # next budget-sized queue slice (band-filtered) and
             # disposes all of it — robots-blocked, duplicate and
             # already-seen rows are skipped forever, the rest fetches.
             # No full-frontier re-rank, no prev-scheduled anti-join (the
             # batch carve-over rows were dropped at insert time).
             candidates = dfq.read_candidates(
-                catalog, cursor, cfg.politeness_budget, band_size, round_id,
-                bands=bk.bands,
+                catalog, cursor, cfg.politeness_budget, round_id, bk.bands
             ).persist()
             # disposed count rides the scheduled write as an Observation
             # (no dedicated count job — same treatment as the lineage
