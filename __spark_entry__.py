@@ -742,9 +742,7 @@ def _q_dedup_components(spark, sf_dir):
     candidate pairs via LARGE-STAR/SMALL-STAR contraction (O(log n)
     rounds independent of diameter — chain-shaped dup graphs don't
     stall the driver loop); nodes are the exact-dedup representatives.
-    ``connected_components`` (min-label propagation) computes the same
-    labeling and stays available for shallow star-shaped clusters. A
-    dedup pipeline keeps one doc per component, not one per pairwise
+    A dedup pipeline keeps one doc per component, not one per pairwise
     edge."""
     from webcrawlerfull_spark.functions.textstats import fingerprint
 
@@ -761,11 +759,13 @@ def _q_dedup_components(spark, sf_dir):
 
 
 def _q_dedup_incremental(spark, sf_dir):
-    """Incremental cross-round dedup: round A (doc_id < 250) builds the
-    compact state (fingerprints + LSH band set, no text); round B — the
-    remaining docs plus exact copies of A[:100] and last-word-dropped
-    near copies of A[100:200] — is classified against it without
-    rescanning A's text."""
+    """Incremental cross-round dedup through the crawl's per-round call,
+    ``incremental_dedup_delta``: round A (doc_id < 250) runs with no
+    prior state, and its delta (the kept docs' fingerprints + LSH bands,
+    no text) is the state round B — the remaining docs plus exact copies
+    of A[:100] and last-word-dropped near copies of A[100:200] — is
+    classified against, without rescanning A's text. A's 250 docs have
+    distinct fingerprints and non-blank text, so A keeps every doc."""
     _register(spark, sf_dir)
     docs = spark.table("documents").select("doc_id", "text")
     a = docs.where(F.col("doc_id") < 250)
@@ -781,8 +781,14 @@ def _q_dedup_incremental(spark, sf_dir):
         )
     )
     b = fresh.unionByName(exact_copies).unionByName(near_copies)
-    fps, band_set = TD.dedup_state(a, k=16, bands=4)
-    return TD.incremental_dedup(b, fps, band_set, k=16, bands=4)
+    state = TD.incremental_dedup_delta(a, None, k=16, bands=4)
+    delta = TD.incremental_dedup_delta(b, state, k=16, bands=4)
+    # the stacked delta carries doc_id as a string. try_cast: the cast
+    # is pushed into every union branch, and a plain cast of the other
+    # kinds' '' sentinel fails before the kind filter drops those rows
+    return delta.where(F.col("kind") == "verdict").select(
+        F.col("doc_id").try_cast("long").alias("doc_id"), "status"
+    )
 
 
 def _q_embedding_near_dup(spark, sf_dir):
@@ -828,7 +834,8 @@ def _q_ann_cosine(spark, sf_dir):
       the k-means quantizer, write the list-partitioned index, rank
       centroids, read the lists back and re-rank exactly. (Pruned-probe
       recall is measured evidence, not an oracle property:
-      tests/test_ann_ivf.py + tools/ann_ivf_vs_lsh.py boundary panel.)
+      tests/test_ann_ivf.py + the boundary panel in
+      BENCH/ivf_families_r6.json.)
     """
     import hashlib as _hl
     import os as _os
@@ -1185,8 +1192,9 @@ def _band_ctes(src: str, p: str, k: int = 16, bands: int = 4) -> str:
 
 
 def _incremental_sql(k: int = 16, bands: int = 4) -> str:
-    """Mirrors dedup_state + incremental_dedup over the same two-round
-    construction as _q_dedup_incremental."""
+    """Mirrors incremental_dedup_delta's verdicts over the same two-round
+    construction as _q_dedup_incremental: round A's state is its
+    distinct fingerprints and band hashes."""
     return f"""
         WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
         b AS (

@@ -11,8 +11,9 @@ Env:
   SPARK_GRAFT_SF_DIR   parquet dir for the operator queries
   BENCH_HOSTS          synthetic world size (default 40 hosts)
 
-Scaling-efficiency protocol (BASELINE.md): run this same file via
-tools/bench_scaling.py at SPARK_GRAFT_CPUS=8 and =32 on the same input.
+Scaling-efficiency protocol (BASELINE.md): run this same file at
+SPARK_GRAFT_CPUS=8 and =32 on the same input, in separate JVMs, and
+compare the crawl URLs/s: efficiency = (T8 / T32) / 4.
 """
 
 from __future__ import annotations

@@ -68,68 +68,6 @@ def test_lsh_index_multiprobe_recall(spark, sf_dir, tmp_path):
         SIM.lsh_topk_indexed(spark, path, qv, dims=dims, k=10, planes=planes + 1)
 
 
-def test_batch_lsh_agrees_with_per_query(spark, sf_dir):
-    """lsh_topk_batch (one corpus pass, probe-set explode + bucket join)
-    returns exactly what q separate lsh_topk calls return."""
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    dims = len(emb.first()["embedding"])
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("q_vec"),
-    )
-    batch = SIM.lsh_topk_batch(emb, queries, dims=dims, k=5, planes=6)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["q_id"], []).append((r["rank"], r["vec_id"]))
-    for qid in range(3):
-        qv = [
-            float(x)
-            for x in emb.where(F.col("vec_id") == qid).first()["embedding"]
-        ]
-        solo = [
-            r["vec_id"]
-            for r in SIM.lsh_topk(
-                emb, qv, dims=dims, k=5, planes=6, multi_probe=1
-            ).collect()
-        ]
-        assert [v for _, v in sorted(got[qid])] == solo, qid
-
-
-def test_batch_lsh_shuffle_join_agrees_with_broadcast(spark, sf_dir, monkeypatch):
-    """Above BROADCAST_PROBE_LIMIT the probe set can't ship to every
-    executor; the auto-switch must pick the shuffle hash join and return
-    IDENTICAL results. Limit is pinned tiny so this query set (q=40 ×
-    7 probes = 280 rows) is 'too large to broadcast' for the auto path."""
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    dims = len(emb.first()["embedding"])
-    queries = emb.where(F.col("vec_id") < 40).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("q_vec"),
-    )
-
-    def rows(df):
-        return sorted(
-            (r["q_id"], r["rank"], r["vec_id"], r["cosine"]) for r in df.collect()
-        )
-
-    bcast = rows(
-        SIM.lsh_topk_batch(
-            emb, queries, dims=dims, k=5, planes=6, broadcast_queries=True
-        )
-    )
-    shuffled = rows(
-        SIM.lsh_topk_batch(
-            emb, queries, dims=dims, k=5, planes=6, broadcast_queries=False
-        )
-    )
-    assert shuffled == bcast
-    monkeypatch.setattr(SIM, "BROADCAST_PROBE_LIMIT", 100)
-    auto = rows(
-        SIM.lsh_topk_batch(emb, queries, dims=dims, k=5, planes=6)
-    )
-    assert auto == bcast
-
-
 def test_indexed_dims_and_column_validation(spark, sf_dir, tmp_path):
     """lsh_topk_indexed: unresolvable dims raises a clear error (not an
     opaque TypeError deep in signature math) and conflicting explicit
@@ -159,14 +97,6 @@ def test_indexed_dims_and_column_validation(spark, sf_dir, tmp_path):
         spark, path, qv, dims=dims, k=3, planes=6
     ).count()
     assert got > 0
-
-
-def test_probe_array_matches_probe_signatures(spark):
-    df = spark.createDataFrame([("010011",)], ["sig"])
-    got = df.select(
-        SIM.probe_array(F.col("sig"), 6).alias("p")
-    ).first()["p"]
-    assert sorted(got) == SIM.probe_signatures("010011", 1)
 
 
 def test_high_plane_count_recall_clustered(spark, tmp_path):

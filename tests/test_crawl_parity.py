@@ -156,3 +156,18 @@ def test_budgeted_crawl_matches_reference_sets(
         (d, u) for d, o in oracle_result.items() for u in o.products
     }
     assert got_products == exp_products
+
+
+def test_oracle_sql_text_is_pinned():
+    """The DuckDB oracle text is a fixed point: a refactor of the Spark
+    side must not move it. Update the digest only with a deliberate,
+    reviewed change to the oracles."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as entry
+
+    text = json.dumps(entry.oracle_sql(), sort_keys=True)
+    assert hashlib.sha256(text.encode()).hexdigest() == (
+        "3fa5628b7acf3c8cfcc9612a95ff2eae9132f02e76be5e54ba1aafca0349ed37"
+    )

@@ -127,27 +127,30 @@ def test_planes_for_scaling():
 
 
 def test_connected_components(spark):
-    """Min-label propagation: chains, stars, singletons; converges in
-    O(diameter) iterations and matches a python union-find."""
+    """Star contraction on chains, stars, a pair, a cycle and a
+    singleton: every node is labeled with its component's min id."""
     pairs = spark.createDataFrame(
         [
             (1, 2), (2, 3), (3, 4),        # chain -> component 1
             (10, 11), (10, 12), (10, 13),  # star  -> component 10
             (20, 21),                      # pair  -> component 20
+            (30, 31), (32, 31), (32, 33), (30, 33),  # 4-cycle -> 30
         ],
         ["id_a", "id_b"],
     )
     nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 12, 13, 20, 21, 99]], ["node"]
+        [(i,) for i in [1, 2, 3, 4, 10, 11, 12, 13, 20, 21, 30, 31, 32, 33, 99]],
+        ["node"],
     )
     got = {
         r["node"]: r["component"]
-        for r in TD.connected_components(pairs, nodes=nodes).collect()
+        for r in TD.connected_components_star(pairs, nodes=nodes).collect()
     }
     assert got == {
         1: 1, 2: 1, 3: 1, 4: 1,
         10: 10, 11: 10, 12: 10, 13: 10,
         20: 20, 21: 20,
+        30: 30, 31: 30, 32: 30, 33: 30,
         99: 99,  # singleton keeps itself
     }
 
@@ -159,37 +162,9 @@ def test_connected_components_long_chain_converges(spark):
     )
     got = {
         r["node"]: r["component"]
-        for r in TD.connected_components(pairs).collect()
+        for r in TD.connected_components_star(pairs).collect()
     }
     assert got == {i: 0 for i in range(n + 1)}
-
-
-def test_star_components_match_propagation(spark):
-    """connected_components_star (large-star/small-star contraction)
-    returns the identical (node, component) labeling as min-label
-    propagation on mixed chain/star/singleton graphs."""
-    pairs = spark.createDataFrame(
-        [
-            (1, 2), (2, 3), (3, 4),
-            (10, 11), (10, 12), (10, 13),
-            (20, 21),
-            (30, 31), (32, 31), (32, 33), (30, 33),  # cycle
-        ],
-        ["id_a", "id_b"],
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 12, 13, 20, 21, 30, 31, 32, 33, 99]],
-        ["node"],
-    )
-    prop = {
-        r["node"]: r["component"]
-        for r in TD.connected_components(pairs, nodes=nodes).collect()
-    }
-    star = {
-        r["node"]: r["component"]
-        for r in TD.connected_components_star(pairs, nodes=nodes).collect()
-    }
-    assert star == prop
 
 
 def test_star_components_chain_log_rounds(spark):

@@ -345,6 +345,52 @@ def test_positions_dense_and_banded(spark):
         assert all(r["band"] == r["pos"] // 4 for r in sl)
 
 
+@pytest.mark.parametrize("seed,budget", [(1, 1), (2, 3), (3, 7)])
+def test_first_slice_matches_politeness_schedule(spark, seed, budget):
+    """On a URL-unique frontier with nothing seen, the budgeted crawl's
+    first slice (assign_positions -> each host's window pos < budget ->
+    schedule_slice) schedules exactly what politeness_schedule (the
+    operator the o5_politeness_budget gate pins) schedules, with the
+    same per-domain queue_pos. Hosts of uneven size share domains, and
+    discovery_seq collides within a host so the url tie-break counts."""
+    import random
+
+    from webcrawlerfull_spark.plans.round import politeness_schedule
+
+    rng = random.Random(seed)
+    rows = [
+        {
+            "url": f"https://h{h}.x/p/{i}", "host": f"h{h}.x",
+            "domain": f"https://d{h % 3}.x", "depth": rng.randrange(3),
+            "priority": rng.randrange(2), "discovery_seq": rng.randrange(4),
+            "salt_bucket": 0, "round": 0,
+        }
+        for h in range(7)
+        for i in range(rng.randrange(12))
+    ]
+    frontier = spark.createDataFrame(rows, schema=schemas.FRONTIER)
+    cfg = CrawlConfig(politeness_budget=budget)
+    candidates = dfq.assign_positions(
+        frontier, None, dfq.band_size_for(cfg)
+    ).where(F.col("pos") < budget)
+    seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
+    delta = dfq.schedule_slice(candidates, seen, None, cfg)
+    scheduled, _ = politeness_schedule(frontier, budget, salt_partitions=4)
+
+    def key(df):
+        return sorted(
+            (r["host"], r["url"], r["queue_pos"])
+            for r in df.select("host", "url", "queue_pos").collect()
+        )
+
+    got = key(delta)
+    assert got == key(scheduled)
+    assert len(got) == sum(
+        min(budget, sum(r["host"] == h for r in rows))
+        for h in {r["host"] for r in rows}
+    )
+
+
 def _queue_catalog(spark, root, band_size=5):
     """A catalog whose frontier_q r=0 holds hosts a, b, c with 30, 14
     and 5 rows at positions 0..n-1, written by bootstrap (the production

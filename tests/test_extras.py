@@ -25,10 +25,13 @@ def docs(spark):
 
 
 def test_exact_dedup_normalizes_case_and_ws(spark, docs):
-    out = TD.exact_dedup(docs)
-    dupes = {r["kept_doc_id"]: r["n_dupes"] for r in out.collect()}
-    assert dupes[1] == 2  # doc 5 collapses onto doc 1
-    assert sum(dupes.values()) == 5
+    out = TD.incremental_dedup_delta(docs, None, k=12, bands=4)
+    status = {
+        int(r["doc_id"]): r["status"]
+        for r in out.where(F.col("kind") == "verdict").collect()
+    }
+    # doc 5 collapses onto doc 1; a near-dup (doc 2) is not an exact dup
+    assert status == {1: "kept", 2: "kept", 3: "kept", 4: "kept", 5: "exact_dup"}
 
 
 def test_minhash_finds_near_dups(spark, docs):
@@ -53,12 +56,14 @@ def test_ngram_jaccard_verify(spark, docs):
 
 
 def test_simhash_similar_docs_close(spark, docs):
-    out = {r["doc_id"]: r["sh"] for r in docs.select(
-        "doc_id", TD.simhash16(F.col("text")).alias("sh")
-    ).collect()}
+    out = {
+        r["doc_id"]: int(r["simhash"], 16)
+        for r in TD.simhash64_df(docs).collect()
+    }
     ham_12 = bin(out[1] ^ out[2]).count("1")
     ham_13 = bin(out[1] ^ out[3]).count("1")
     assert ham_12 < ham_13
+    assert out[5] == out[1]  # tokens are lowercased and ws-split
 
 
 def test_lang_guess(spark, docs):

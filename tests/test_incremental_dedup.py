@@ -1,6 +1,7 @@
 """Incremental cross-round dedup: round k+1 documents classify against
-round k's COMPACT state (fingerprints + band set — no text) without
-rescanning prior rounds' text."""
+the union of earlier rounds' ``incremental_dedup_delta`` outputs — a
+COMPACT state (fingerprints + band set, no text) — without rescanning
+prior rounds' text."""
 
 from __future__ import annotations
 
@@ -13,6 +14,17 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _delta(docs, state):
+    return TD.incremental_dedup_delta(docs, state, k=16, bands=4)
+
+
+def _verdicts(delta):
+    return {
+        int(r["doc_id"]): r["status"]
+        for r in delta.where(F.col("kind") == "verdict").collect()
+    }
+
+
 def test_incremental_classification(spark):
     prior = _docs(
         spark,
@@ -21,10 +33,11 @@ def test_incremental_classification(spark):
             (2, "spark shuffles partition data across the cluster nodes"),
         ],
     )
-    fps, band_set = TD.dedup_state(prior, k=16, bands=4)
+    state = _delta(prior, None)
     # state is text-free — the structural no-rescan property
-    assert set(fps.columns) == {"fp"}
-    assert set(band_set.columns) == {"band_id", "band_hash"}
+    assert "text" not in state.columns
+    kinds = {r["kind"] for r in state.select("kind").distinct().collect()}
+    assert kinds == {"verdict", "fp", "band", "meta"}
 
     new = _docs(
         spark,
@@ -36,10 +49,7 @@ def test_incremental_classification(spark):
             (14, "a totally unrelated document about gardening and tulips"),  # batch dup
         ],
     )
-    got = {
-        r["doc_id"]: r["status"]
-        for r in TD.incremental_dedup(new, fps, band_set, k=16, bands=4).collect()
-    }
+    got = _verdicts(_delta(new, state))
     assert got[10] == "exact_dup"
     assert got[11] == "exact_dup"     # fingerprint is ws/case-normalized
     assert got[12] == "near_dup"
@@ -50,9 +60,10 @@ def test_incremental_classification(spark):
 def test_incremental_chains_across_rounds(spark):
     """State accumulates kept docs only; a round-3 dup of a round-2 KEPT
     doc is caught, and a dup of a round-2 DROPPED doc is caught via its
-    round-1 original."""
+    round-1 original. The state is the union of the round deltas, as
+    the crawl driver keeps it."""
     r1 = _docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta theta")])
-    fps, bands = TD.dedup_state(r1, k=16, bands=4)
+    state = _delta(r1, None)
 
     r2 = _docs(
         spark,
@@ -61,12 +72,11 @@ def test_incremental_chains_across_rounds(spark):
             (21, "completely new words in the second round corpus"),
         ],
     )
-    st2 = TD.incremental_dedup(r2, fps, bands, k=16, bands=4)
-    kept2 = r2.join(
-        st2.where(F.col("status") == "kept").select("doc_id"), "doc_id"
-    )
-    f2, b2 = TD.dedup_state(kept2, k=16, bands=4)
-    fps, bands = fps.unionByName(f2).distinct(), bands.unionByName(b2).distinct()
+    d2 = _delta(r2, state)
+    assert _verdicts(d2) == {20: "exact_dup", 21: "kept"}
+    # only the kept doc's fingerprint joins the state
+    assert d2.where(F.col("kind") == "fp").count() == 1
+    state = state.unionByName(d2)
 
     r3 = _docs(
         spark,
@@ -76,10 +86,7 @@ def test_incremental_chains_across_rounds(spark):
             (32, "yet another brand new document for round three"),
         ],
     )
-    got = {
-        r["doc_id"]: r["status"]
-        for r in TD.incremental_dedup(r3, fps, bands, k=16, bands=4).collect()
-    }
+    got = _verdicts(_delta(r3, state))
     assert got[30] == "exact_dup"
     assert got[31] == "exact_dup"
     assert got[32] == "kept"
@@ -95,8 +102,5 @@ def test_incremental_no_state_round_zero(spark):
             (3, "something else entirely different here"),
         ],
     )
-    got = {
-        r["doc_id"]: r["status"]
-        for r in TD.incremental_dedup(r0, None, None, k=16, bands=4).collect()
-    }
+    got = _verdicts(_delta(r0, None))
     assert got == {1: "kept", 2: "exact_dup", 3: "kept"}

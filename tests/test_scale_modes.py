@@ -7,7 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from webcrawlerfull_spark.config import CrawlConfig
 from webcrawlerfull_spark.plans.round import apply_robots, politeness_schedule
+from webcrawlerfull_spark.streaming.driver import round_partitions
 
 
 def _frontier(spark, n_per_host=50, hosts=("a", "b", "c")):
@@ -80,6 +82,17 @@ def test_scheduled_queue_pos_is_dense_fetch_order(spark):
         sl = [r for r in got if r["domain"] == dom]
         sl.sort(key=lambda r: (r["depth"], r["priority"], r["discovery_seq"], r["url"]))
         assert [r["queue_pos"] for r in sl] == list(range(len(sl)))
+
+
+def test_round_partitions_sized_to_frontier():
+    """(shuffle, fetch) partitions per round: ceil(n / 50) fetch tasks
+    and ceil(20 n / 500) shuffle partitions, clamped to
+    [1, shuffle_partitions]; an empty frontier gets the ceiling."""
+    cfg = CrawlConfig(shuffle_partitions=32)
+    got = {n: round_partitions(n, cfg) for n in (0, 1, 50, 51, 10_000)}
+    assert got == {
+        0: (32, 32), 1: (1, 1), 50: (2, 1), 51: (3, 2), 10_000: (32, 32),
+    }
 
 
 def test_robots_gating(spark):

@@ -204,18 +204,9 @@ class CrawlConfig:
     frontier_cap: int = FRONTIER_CAP_PER_DOMAIN
     seed: int = 42
     task_id: str = "task-0"
+    # the per-round ceiling: streaming.driver.round_partitions sizes
+    # each round's shuffles and fetch fan-out to its frontier below it
     shuffle_partitions: int = 32
-    # adaptive per-round partitioning: size each round's shuffles and
-    # fetch fan-out to THAT round's frontier instead of running every
-    # round at shuffle_partitions = cores (small rounds otherwise pay
-    # per-task + Python-worker overhead across ~10 jobs/round that GROWS
-    # with the core count while the data doesn't). shuffle_partitions
-    # stays the ceiling; the fetch stage gets a lower rows/task target
-    # because fetch+parse is heavy per row while the post-parse shuffles
-    # (joins/windows over slim link rows) are light.
-    adaptive_partitions: bool = True
-    fetch_rows_per_task: int = 50
-    shuffle_rows_per_task: int = 500
     salt_partitions: int = 32     # host-hash salting fan-out for skew
     use_bloom: bool = False       # bloom-bucket seen filter (scale path)
     bloom_buckets: int = 64

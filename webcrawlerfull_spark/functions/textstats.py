@@ -43,10 +43,6 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    return F.size(bpe_ish_tokens(text))
-
-
 def stopword_hits(text: Column, stopwords: list[str]) -> Column:
     toks = F.transform(tokens(F.lower(text)), lambda t: t)
     arr = F.array(*[F.lit(s) for s in stopwords])
@@ -70,11 +66,6 @@ def lang_guess(text: Column) -> Column:
 def punct_ratio(text: Column) -> Column:
     n_punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
     return F.round(n_punct / F.greatest(F.length(text), F.lit(1)), 4)
-
-
-def upper_ratio(text: Column) -> Column:
-    n_upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
-    return F.round(n_upper / F.greatest(F.length(text), F.lit(1)), 4)
 
 
 def quality_score(text: Column) -> Column:

@@ -316,16 +316,3 @@ def links_view(documents: DataFrame, doc_cols: list[str] | None = None) -> DataF
             F.col("span.offset").alias("offset"),
         )
     )
-
-
-def media_view(documents: DataFrame, doc_cols: list[str] | None = None) -> DataFrame:
-    doc_cols = doc_cols or ["doc_id"]
-    return (
-        documents.select(*doc_cols, F.explode("spans").alias("span"))
-        .where(F.col("span.kind") == "media")
-        .select(
-            *doc_cols,
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-        )
-    )

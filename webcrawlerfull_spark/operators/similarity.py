@@ -338,7 +338,7 @@ def lsh_topk_indexed(
     probing reads 1+planes of the 2^planes buckets — a SHRINKING
     fraction as ``planes_for()`` scales the plane count with the corpus
     — so the probe radius must grow with the plane count to hold recall
-    (sweep evidence: tools/ann_planes_sweep.py, BENCH/BASELINE.md)."""
+    (sweep evidence: BENCH/ann_sweep_r5.json, BENCH/BASELINE.md)."""
     meta = read_index_meta(index_path, spark) or {}
 
     def _resolve(name: str, given, required: bool = False):
@@ -393,7 +393,7 @@ def auto_multi_probe(planes: int) -> int:
     Hamming-m probing reads sum_{i<=m} C(planes, i) of 2^planes buckets;
     at fixed m that fraction shrinks as ``planes_for()`` grows planes
     with the corpus, and so does recall. The rule is derived from the
-    (planes × multi_probe) → recall sweep (tools/ann_planes_sweep.py,
+    (planes × multi_probe) → recall sweep (BENCH/ann_sweep_r5.json,
     table in BENCH/BASELINE.md): one extra flip per 8 planes holds
     recall@10 roughly flat across plane counts while the scanned
     fraction stays ≲1% of the corpus."""
@@ -455,23 +455,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def probe_array(sig_col, planes: int):
-    """Column form of ``probe_signatures`` for multi_probe=1: the exact
-    signature plus each 1-bit flip (planes+1 strings). Native exprs so a
-    BATCH of queries can explode its probe sets without Python."""
-    flips = [
-        F.concat(
-            F.substring(sig_col, 1, i),
-            F.when(F.substring(sig_col, i + 1, 1) == "1", F.lit("0")).otherwise(
-                F.lit("1")
-            ),
-            F.substring(sig_col, i + 2, planes - i - 1),
-        )
-        for i in range(planes)
-    ]
-    return F.array(sig_col, *flips)
-
-
 def cosine_topk_batch(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -494,74 +477,6 @@ def cosine_topk_batch(
         F.col(id_col),
         F.round(cosine_sim(F.col(vec_col), F.col(q_vec_col)), 6).alias("cosine"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
-    )
-
-
-# above this many EXPLODED probe rows (n_queries × (planes+1)) the probe
-# set stops being broadcast-able (each executor would hold the whole
-# query table + vectors in memory) and the sig join runs as a shuffle
-# hash join instead
-BROADCAST_PROBE_LIMIT = 500_000
-
-
-def lsh_topk_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dims: int,
-    k: int = 10,
-    planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-    broadcast_queries: bool | None = None,
-) -> DataFrame:
-    """LSH-bucketed batch ANN (multi_probe=1): corpus signatures computed
-    once, each query exploded into its planes+1 probe signatures, probes
-    joined to the bucketed corpus on ``sig``, exact cosine only within
-    joined buckets, per-query window top-k. At 100 TB this is the
-    many-query shape: the corpus-side work is one signature pass + a
-    hash join on ``sig`` — each query touches ~(planes+1)/2^planes of
-    the corpus, and no query re-scans it.
-
-    Join strategy: ``broadcast_queries=None`` (default) counts the query
-    set and broadcasts iff n_queries × (planes+1) ≤
-    ``BROADCAST_PROBE_LIMIT`` — correct for q ≪ corpus; beyond that the
-    probe set is too large to ship to every executor and the join runs
-    as a plain shuffle hash join on ``sig`` (both sides repartition by
-    signature — still Σ bucket-pair work, never a corpus broadcast).
-    Pass True/False to force. Results are identical either way
-    (pytest-checked); only the physical plan changes."""
-    from pyspark.sql import Window
-
-    planes = _auto_planes(embeddings, planes)
-    if broadcast_queries is None:
-        broadcast_queries = (
-            queries.count() * (planes + 1) <= BROADCAST_PROBE_LIMIT
-        )
-    sigs = lsh_index(embeddings, dims, planes, id_col, vec_col)
-    probes = queries.select(
-        F.col(q_id_col),
-        F.col(q_vec_col),
-        F.explode(
-            probe_array(lsh_signature(F.col(q_vec_col), dims, planes), planes)
-        ).alias("sig"),
-    )
-    cand = sigs.join(
-        F.broadcast(probes) if broadcast_queries else probes, "sig"
-    )
-    scored = cand.select(
-        F.col(q_id_col),
-        F.col(id_col),
-        F.round(cosine_sim(F.col(vec_col), F.col(q_vec_col)), 6).alias("cosine"),
-    ).dropDuplicates([q_id_col, id_col])
     w = Window.partitionBy(q_id_col).orderBy(
         F.col("cosine").desc(), F.col(id_col)
     )

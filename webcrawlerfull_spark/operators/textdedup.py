@@ -1,16 +1,22 @@
 """Deduplication operators for the training-data pipeline.
 
-- exact dedup: fingerprint groupBy (functions.textstats.fingerprint)
+- exact dedup: keep the lowest id per normalized-text fingerprint
+  (functions.textstats.fingerprint)
 - MinHash + LSH near-dup: shingle → K minhashes → band-bucket →
   bucket self-join. Hashing is md5-hex-min (md5 agrees bit-for-bit
   between Spark and DuckDB, and min over fixed-width lowercase hex ==
   min over the hash values), so the DuckDB oracle can mirror the whole
   pipeline exactly.
-- SimHash: per-token md5 nibbles vote on 16 signature bits (a compact,
-  cross-engine-reproducible variant of the classic 64-bit simhash).
+- SimHash: per-token md5 nibbles vote on 64 signature bits, kept as a
+  hex string (cross-engine reproducible: md5 + integer arithmetic only).
 - n-gram Jaccard verify: exact similarity on LSH candidate pairs only —
   the candidate set is LSH-bounded so the quadratic step never sees the
   full corpus (the scale-correct shape).
+- incremental dedup: one round's docs classified against the compact
+  fingerprint + band state of earlier rounds' kept docs
+  (``incremental_dedup_delta``), the crawl's per-round doc dedup.
+- connected components: near-dup clusters by large-star/small-star
+  contraction (``connected_components_star``).
 
 Everything is native explode/groupBy/join — no Python. At 100 TB the
 heavy op is the band-bucket shuffle, which is K/r small fixed-width
@@ -27,15 +33,6 @@ from webcrawlerfull_spark.functions.textstats import fingerprint, tokens
 DEFAULT_K = 64       # minhash functions (production width; r1 used 12)
 DEFAULT_BANDS = 16   # LSH bands (rows per band = K / BANDS)
 HEXD = "0123456789abcdef"
-
-
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the lowest id per normalized-text fingerprint."""
-    return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias("kept_" + id_col), F.count("*").alias("n_dupes"))
-    )
 
 
 def shingles(text_col, n: int = 3):
@@ -312,7 +309,7 @@ def minhash_candidate_pairs(
     - ``pre_dedup``: exact duplicates share EVERY band, so a dup group of
       size g alone contributes g²/2 pairs per band. Dedup by normalized-
       text fingerprint first and band only the min-id representative —
-      exact dups belong to ``exact_dedup`` upstream, not the LSH join.
+      exact dups are the fingerprint's job, not the LSH join.
     - ``max_bucket``: a degenerate band value (empty docs, boilerplate)
       can collect millions of members; buckets over the cap are EXCLUDED
       from pair generation (callers route oversized buckets to an exact
@@ -342,34 +339,6 @@ def minhash_candidate_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def dedup_state(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = DEFAULT_K,
-    bands: int = DEFAULT_BANDS,
-) -> tuple[DataFrame, DataFrame]:
-    """The COMPACT cross-round dedup state for ``incremental_dedup``:
-    (fingerprints(fp), band_set(band_id, band_hash)) — the MinHash
-    analogue of the bloom seen-state. Carries NO text: a round's state is
-    ~16 bytes (fp) + ``bands`` band hashes per kept doc, so round k+1
-    dedups against it without rescanning any prior round's text."""
-    fps = docs.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-    if bands <= 0:
-        # exact-only mode (bands=0): no near-dup state — the oracle-
-        # replicable configuration (pure fingerprint accounting)
-        b = docs.sparkSession.createDataFrame(
-            [], "band_id int, band_hash string"
-        )
-    else:
-        b = (
-            lsh_bands(docs, id_col, text_col, k, bands)
-            .select("band_id", "band_hash")
-            .distinct()
-        )
-    return fps, b
 
 
 def dedup_signatures(
@@ -442,7 +411,7 @@ def _label_against_state(
     state_bands: DataFrame | None,
     id_col: str,
 ) -> DataFrame:
-    """Shared incremental-dedup core over a ``dedup_signatures`` frame:
+    """The incremental-dedup verdict over a ``dedup_signatures`` frame:
     adds ``_exact`` (fp in state, or a lower-id doc in this batch shares
     it — keep-first) and ``_near`` (≥1 band shared with the state) to
     each sig row. Hash-key joins only; text is never touched."""
@@ -490,43 +459,10 @@ def _verdict_col():
     )
 
 
-def incremental_dedup(
-    docs: DataFrame,
-    state_fps: DataFrame | None,
-    state_bands: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = DEFAULT_K,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Classify one round's NEW documents against the accumulated dedup
-    state (from ``dedup_state`` over prior kept docs): returns
-    (id, status) with status ∈ {exact_dup, near_dup, kept}:
-
-    - ``exact_dup``: fingerprint already in the state, or a lower-id doc
-      IN THIS BATCH shares the fingerprint (within-batch keep-first)
-    - ``near_dup``: not an exact dup, but shares ≥1 MinHash-LSH band
-      with the state (within-batch near-dups are the batch-mode
-      ``minhash_candidate_pairs``'s job — this operator's contract is
-      new-vs-prior)
-    - ``kept``: neither — these docs' fp/bands join the next state
-
-    Scale shape: everything is semi/left joins on fixed-width hash keys
-    (fp md5, band md5) — the new round's text is scanned once for its
-    own signatures; prior text is never touched. At 10^10 docs the state
-    co-partitions by its hash key, exactly like the bloom bucket state
-    for URLs."""
-    sigs = dedup_signatures(docs, id_col, text_col, k, bands)
-    labeled = _label_against_state(
-        sigs, state_fps, state_bands if bands > 0 else None, id_col
-    )
-    return labeled.select(F.col(id_col), _verdict_col())
-
-
 def split_dedup_state(state: DataFrame | None) -> tuple[DataFrame | None, DataFrame | None]:
     """Unstack an ``incremental_dedup_delta`` table (any number of round
     deltas unioned) into the (state_fps, state_bands) pair
-    ``incremental_dedup`` consumes."""
+    ``_label_against_state`` consumes."""
     if state is None:
         return None, None
     return (
@@ -585,8 +521,15 @@ def incremental_dedup_delta(
     """One round's dedup output as a SINGLE stacked frame — the crawl
     driver's per-round doc-dedup write (one job, like the bloom delta):
 
-    - ``kind='verdict'`` rows: (doc_id, status) for every input doc
-      (``incremental_dedup`` semantics vs the accumulated state)
+    - ``kind='verdict'`` rows: (doc_id, status) for every input doc,
+      status ∈ {exact_dup, near_dup, kept} vs the accumulated state:
+      ``exact_dup`` = fingerprint already in the state, or a lower-id
+      doc IN THIS BATCH shares it (within-batch keep-first);
+      ``near_dup`` = not an exact dup, but shares ≥1 MinHash-LSH band
+      with the state (within-batch near-dups are the batch-mode
+      ``minhash_candidate_pairs``'s job — the contract is new-vs-prior);
+      ``kept`` = neither. ``doc_id`` is the id cast to string (the
+      stacked frame's common type); cast it back to a numeric id type.
     - ``kind='fp'`` / ``kind='band'`` rows: the KEPT docs' fingerprints
       and LSH band hashes — the next round's state delta
     - one ``kind='meta'`` row: the dedup_scheme marker (family/k/bands)
@@ -594,7 +537,11 @@ def incremental_dedup_delta(
 
     Sentinels ('' / -1) fill the unused columns so the frame is
     NULL-free (stacking convention). Round deltas union into the full
-    state; ``split_dedup_state`` unstacks for the next round.
+    state (pass None for round 0); ``split_dedup_state`` unstacks it.
+    The state carries NO text: ~16 bytes (fp) + ``bands`` band hashes
+    per kept doc, so round k+1 dedups against it without rescanning
+    any prior round's text — the MinHash analogue of the bloom
+    seen-state.
 
     The three row kinds all derive from ONE ``dedup_signatures`` frame;
     the union references it from three branches, so callers should pass
@@ -615,7 +562,9 @@ def incremental_dedup_delta(
     s_int = F.lit(-1).cast("int")
     v_rows = verdicts.select(
         F.lit("verdict").alias("kind"),
-        F.col(id_col).alias("doc_id"),
+        # string, as the sentinel rows' '': a numeric id would make the
+        # union cast '' to a number and fail
+        F.col(id_col).cast("string").alias("doc_id"),
         "status",
         F.lit("").alias("fp"),
         s_int.alias("band_id"),
@@ -658,72 +607,6 @@ def incremental_dedup_delta(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    node_col: str = "node",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over near-dup candidate pairs — the final
-    step of a dedup pipeline (a near-dup CLUSTER keeps one
-    representative, not one survivor per pairwise edge). Returns
-    (node, component) with component = min node id in the cluster.
-
-    Iterative min-label propagation as a driver loop: each iteration
-    joins labels across edges and takes the elementwise min — one
-    shuffle per iteration, converging in O(diameter) rounds (near-dup
-    clusters are shallow: boilerplate stars, chains of revisions —
-    single digits). ``localCheckpoint`` truncates the growing lineage so
-    iteration k does not replay 1..k-1. The loop exits as soon as an
-    iteration changes no label; ``max_iter`` bounds pathological chains
-    (a 10^10-node path graph is not a dedup workload)."""
-    spark = pairs.sparkSession
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    if nodes is None:
-        nodes = edges.select(F.col("src").alias(node_col)).distinct()
-    else:
-        nodes = nodes.select(F.col(node_col))
-    labels = nodes.select(
-        F.col(node_col), F.col(node_col).alias("component")
-    ).localCheckpoint()
-    edges = edges.localCheckpoint()
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col(node_col).alias("src"),
-                    F.col("component").alias("_nc"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias(node_col))
-            .agg(F.min("_nc").alias("_nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, node_col, "left")
-            .select(
-                F.col(node_col),
-                F.least(
-                    F.col("component"), F.coalesce("_nmin", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("_nmin", F.col("component"))
-                    < F.col("component")
-                ).alias("_changed"),
-            )
-        ).localCheckpoint()
-        changed = new_labels.where(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels
-
-
 def connected_components_star(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -737,8 +620,10 @@ def connected_components_star(
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14 — public algorithm): converges in O(log n) rounds
     INDEPENDENT of graph diameter, vs min-label propagation's
-    O(diameter). Same output contract as ``connected_components``:
-    (node, component) with component = min node id in the cluster.
+    O(diameter). Returns (node, component) with component = min node id
+    in the cluster — the final step of a dedup pipeline (a near-dup
+    CLUSTER keeps one representative, not one survivor per pairwise
+    edge).
 
     Per round over the undirected edge set E:
     - large-star: for each node u, connect every strictly-LARGER
@@ -752,10 +637,7 @@ def connected_components_star(
     total where propagation needs n.
 
     ``stats`` (optional dict) gets ``rounds`` filled in — the chain-
-    graph convergence test asserts the log bound. Use this variant when
-    near-dup graphs may be chain-shaped (e.g. drifting boilerplate
-    revisions); ``connected_components`` remains the cheaper choice for
-    shallow star-shaped dup clusters."""
+    graph convergence test asserts the log bound."""
     e = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -940,7 +822,7 @@ def simhash_hamming_pairs(
     exact-dup group shares ALL ``bands`` band values, so g identical
     boilerplate docs alone emit g²/2 candidate pairs per band:
     - ``pre_dedup``: collapse exact duplicates to their min-id
-      representative first (exact dups belong to ``exact_dedup``)
+      representative first (exact dups are the fingerprint's job)
     - ``max_bucket``: band values whose bucket exceeds the cap are
       excluded from pair generation, bounding any task's join work at
       max_bucket² regardless of corpus skew (degenerate case: every
@@ -999,30 +881,3 @@ def simhash_hamming_pairs(
         .where(F.col("hamming") <= max_distance)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def simhash16(text_col):
-    """16-bit simhash: each token's md5 first 4 hex nibbles vote ±1 on 16
-    bits; the signature bit is the sign of the vote sum. Cross-engine
-    reproducible (md5 + integer arithmetic only)."""
-    toks = tokens(F.lower(text_col))
-    hexd = F.lit("0123456789abcdef")
-
-    def nibble(tok, pos):
-        return F.instr(hexd, F.substring(F.md5(tok), pos + 1, 1)) - 1
-
-    def vote_fn(nib: int, bit: int):
-        def step(acc, t):
-            return acc + F.when(
-                (F.floor(nibble(t, nib) / F.lit(2 ** bit)) % 2) == 1, F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        return step
-
-    total = F.lit(0)
-    for b in range(16):
-        nib, bit = divmod(b, 4)
-        # vote_b over tokens: +1 if the bit is set else -1
-        vote = F.aggregate(toks, F.lit(0), vote_fn(nib, bit))
-        total = total + F.when(vote > 0, F.lit(2 ** b)).otherwise(F.lit(0))
-    return total

@@ -18,6 +18,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def politeness_order() -> list:
+    """The politeness ordering keys, (depth, priority, discovery_seq,
+    url) ascending: the per-host rank of ``politeness_schedule`` and of
+    the budgeted crawl's queue (streaming/delta_frontier.py), and the
+    per-domain fetch order both stamp as queue_pos. The url tie-break:
+    discovery_seq is unique per domain only within one frontier
+    generation; rows of different generations can collide, and the
+    ranks must be deterministic. Built per call — F.col needs an active
+    session on classic pyspark."""
+    return [
+        F.col("depth").asc(), F.col("priority").asc(),
+        F.col("discovery_seq").asc(), F.col("url").asc(),
+    ]
+
+
 def politeness_schedule(
     frontier: DataFrame, budget: int | None, salt_partitions: int = 32
 ) -> tuple[DataFrame, DataFrame]:
@@ -42,13 +57,7 @@ def politeness_schedule(
     """
     if budget is None:
         return frontier, frontier.limit(0)
-    # url tie-break: discovery_seq is unique per domain only within one
-    # frontier generation; rows of different generations can collide,
-    # and the ranks below must be deterministic
-    order = [
-        F.col("depth").asc(), F.col("priority").asc(),
-        F.col("discovery_seq").asc(), F.col("url").asc(),
-    ]
+    order = politeness_order()
     salted = frontier.withColumn(
         "_salt", F.pmod(F.xxhash64("url"), F.lit(salt_partitions))
     )

@@ -69,6 +69,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from webcrawlerfull_spark import config as C
 from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.operators import bloom
+from webcrawlerfull_spark.plans.round import politeness_order
 
 CURSOR = StructType(
     [
@@ -87,14 +88,6 @@ QUEUE = StructType(
 # above this many distinct needed bands the isin() band filter is
 # dropped (correct either way — skipping is purely a read optimization)
 MAX_BAND_INLIST = 128
-
-def _order():
-    # the politeness ordering keys (identical to plans.round); built
-    # lazily — F.col needs an active session on classic pyspark
-    return [
-        F.col("depth").asc(), F.col("priority").asc(),
-        F.col("discovery_seq").asc(), F.col("url").asc(),
-    ]
 
 
 def band_size_for(cfg: C.CrawlConfig) -> int:
@@ -123,7 +116,7 @@ def assign_positions(
     """Dense per-host positions for one insertion batch: politeness-key
     rank within the batch, offset past the host's ``next_pos``. The
     window sorts ONE round's delta only — never the backlog."""
-    w = Window.partitionBy("host").orderBy(*_order())
+    w = Window.partitionBy("host").orderBy(*politeness_order())
     ranked = rows.withColumn("_rk", F.row_number().over(w) - 1)
     if cursor is not None:
         ranked = ranked.join(
@@ -305,7 +298,7 @@ def schedule_slice(
     been fetched since — bloom-gated exact, no false negatives), then
     stamp the dense per-domain fetch-order queue_pos every downstream
     consumer reads (first-touch attribution, floor(queue_pos/10) batch
-    visibility) — identical keys to plans.round.politeness_schedule.
+    visibility) — the politeness_schedule keys (plans.round).
 
     The keep-first dedup is the first_touch min(struct) aggregate (r7,
     VERDICT r6 finding #2): map-side partial aggregation instead of a
@@ -319,7 +312,7 @@ def schedule_slice(
         cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
     )
     fetch_key = "domain" if "domain" in candidates.columns else "host"
-    w_fetch = Window.partitionBy(fetch_key).orderBy(*_order())
+    w_fetch = Window.partitionBy(fetch_key).orderBy(*politeness_order())
     return (
         unseen.withColumn(
             "queue_pos", (F.row_number().over(w_fetch) - 1).cast("long")

@@ -53,18 +53,27 @@ from webcrawlerfull_spark.streaming import delta_frontier as dfq
 from webcrawlerfull_spark.synthgen import World
 
 
+# per-task row targets for round_partitions: fetch+parse is heavy per
+# row, while the post-parse shuffles (joins/windows over slim link rows)
+# are light
+FETCH_ROWS_PER_TASK = 50
+SHUFFLE_ROWS_PER_TASK = 500
+
+
 def round_partitions(frontier_size: int, cfg: CrawlConfig) -> tuple[int, int]:
-    """(shuffle_parts, fetch_parts) for one round, sized to its frontier.
-    Discovered-link rows explode ~10-50x past the frontier, so the
-    shuffle target divides by ``shuffle_rows_per_task`` only after a 20x
-    fan-out allowance; both are clamped to [1, shuffle_partitions]."""
-    if not cfg.adaptive_partitions or frontier_size <= 0:
-        return cfg.shuffle_partitions, cfg.shuffle_partitions
+    """(shuffle_parts, fetch_parts) for one round, sized to its frontier
+    instead of running every round at shuffle_partitions = cores (a small
+    round otherwise pays per-task and Python-worker overhead that grows
+    with the core count while the data doesn't). Discovered-link rows
+    explode ~10-50x past the frontier, so the shuffle target divides by
+    ``SHUFFLE_ROWS_PER_TASK`` only after a 20x fan-out allowance; both
+    are clamped to [1, shuffle_partitions]. An unknown (<= 0) frontier
+    size gets the ceiling."""
     cap = cfg.shuffle_partitions
-    fetch = max(1, min(cap, -(-frontier_size // cfg.fetch_rows_per_task)))
-    shuffle = max(
-        1, min(cap, -(-frontier_size * 20 // cfg.shuffle_rows_per_task))
-    )
+    if frontier_size <= 0:
+        return cap, cap
+    fetch = max(1, min(cap, -(-frontier_size // FETCH_ROWS_PER_TASK)))
+    shuffle = max(1, min(cap, -(-frontier_size * 20 // SHUFFLE_ROWS_PER_TASK)))
     return shuffle, fetch
 
 
