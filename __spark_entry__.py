@@ -659,12 +659,11 @@ def _q_winnow_fp(spark, sf_dir):
     """Winnowing (rolling-hash) fingerprints: count + set hash per doc,
     and the overlap property is what dedup consumers join on."""
     _register(spark, sf_dir)
-    docs = spark.table("documents")
-    fps = T.winnow_fingerprints(F.col("text"))
+    docs = T.winnow_fingerprints(spark.table("documents"), "text")
     return docs.select(
         "doc_id",
-        F.size(fps).alias("n_fp"),
-        F.md5(F.concat_ws("|", fps)).alias("fp_set_hash"),
+        F.size("fps").alias("n_fp"),
+        F.md5(F.concat_ws("|", "fps")).alias("fp_set_hash"),
     )
 
 

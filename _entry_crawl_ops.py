@@ -3,10 +3,10 @@ verified only through the pytest parity suite: P3, P8, P10, P11, H2,
 O1, O2, O7, A1/A2/A4/A5, J2, J3 (SURVEY.md §2 / VERDICT round-1 item 1).
 
 Every query here exercises the REAL engine code path (run_cascade,
-discovered_links, build_next_frontier, first_touch, parser_stats, the
-ai_slot functions) over a links corpus derived — by ONE shared SQL text —
-from the same parquet tables DuckDB sees, so both engines consume
-bit-identical inputs.
+discovered_links, build_next_frontier, first_touch_or_packed,
+parser_stats, the ai_slot functions) over a links corpus derived — by
+ONE shared SQL text — from the same parquet tables DuckDB sees, so both
+engines consume bit-identical inputs.
 
 Corpus shape: pages of quadratically-growing size (page k holds the
 corpus rows with floor(sqrt(seq)) == k, i.e. 2k+1 links), each page with
@@ -31,7 +31,7 @@ from webcrawlerfull_spark.functions import ai_slot
 from webcrawlerfull_spark.functions import predicates as P
 from webcrawlerfull_spark.operators import frontier as fr
 from webcrawlerfull_spark.operators.aggregates import parser_stats
-from webcrawlerfull_spark.operators.attribution import first_touch
+from webcrawlerfull_spark.operators.attribution import first_touch_or_packed
 from webcrawlerfull_spark.operators.cascade import run_cascade
 
 # ---------------------------------------------------------------------------
@@ -339,9 +339,10 @@ def _cascade_products(spark, sf_dir):
             except Exception:
                 pass  # dead session: nothing to unpersist
         mentions, page_stats, _ = run_cascade(_pages_corpus(spark, sf_dir))
-        products = first_touch(
-            mentions, ["queue_pos", "parser_rank"], ["domain", "url"]
-        )
+        # the crawl's products chain helper: queue_pos is the page id,
+        # so (domain, url, queue_pos) is unique as the packing requires,
+        # and every corpus page has depth 0
+        products = first_touch_or_packed(mentions, max_depth=0)
         _CASCADE_CACHE["key"] = (spark, sf_dir)
         _CASCADE_CACHE["value"] = (
             mentions, page_stats.persist(), products.persist()

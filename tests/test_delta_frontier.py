@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.config import CrawlConfig
+from webcrawlerfull_spark.operators import frontier as frontier_ops
 from webcrawlerfull_spark.sources.catalog import Catalog
 from webcrawlerfull_spark.streaming import delta_frontier as dfq
 from webcrawlerfull_spark.streaming.driver import crawl
@@ -65,19 +66,22 @@ def test_delta_drains_to_parity_seen_set(spark, tmp_path_factory):
         assert all(r["n"] <= 3 for r in per_host)
 
 
-def test_delta_deterministic_under_parallelism(spark, tmp_path_factory):
+def test_delta_deterministic_under_parallelism(
+    spark, tmp_path_factory, monkeypatch
+):
     """North-rule determinism for the delta layout: identical seen rounds,
-    lineage counters and products at shuffle_partitions 2 and 16."""
+    lineage counters and products at shuffle and salt partitions 2 and
+    16."""
     world = World(seed=77, n_hosts=4, base_pages=50)
     results = []
     for parts in (2, 16):
+        monkeypatch.setattr(frontier_ops, "SALT_PARTITIONS", parts)
         cat = Catalog(spark, str(tmp_path_factory.mktemp(f"par{parts}")))
         res = crawl(
             spark, world.seeds(),
             CrawlConfig(
                 max_depth=2, politeness_budget=5, use_bloom=True,
-                compact_every=2,
-                shuffle_partitions=parts, salt_partitions=parts,
+                compact_every=2, shuffle_partitions=parts,
             ),
             world, cat,
         )
@@ -256,7 +260,7 @@ def test_chain_failure_joins_threads_and_resumes(
     _assert_resumes_to(spark, world, cfg, cat, snap_ref, lin_ref)
 
 
-def test_delta_compaction_transparent(spark, tmp_path_factory):
+def test_delta_compaction_transparent(spark, tmp_path_factory, monkeypatch):
     """Queue compaction (dir-count-triggered) folds cursor deltas to
     latest-per-host and reclaims consumed queue rows without changing
     the crawl."""
@@ -265,10 +269,10 @@ def test_delta_compaction_transparent(spark, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("nc")), world,
         politeness_budget=5, use_bloom=True,
     )
+    monkeypatch.setattr(dfq, "QUEUE_COMPACT_DIRS", 2)
     res_b, cat = _crawl(
         spark, str(tmp_path_factory.mktemp("c")), world,
-        politeness_budget=5, use_bloom=True,
-        compact_every=2, frontier_compact_dirs=2,
+        politeness_budget=5, use_bloom=True, compact_every=2,
     )
     assert _snap(res_b) == _snap(res_a)
     # compaction actually ran: cursor rounds folded + one row per host
@@ -282,7 +286,7 @@ def test_delta_compaction_transparent(spark, tmp_path_factory):
     assert per_host.count() > 0
 
 
-def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory):
+def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory, monkeypatch):
     """Starvation-freedom on a Zipf-skewed world (the hot host visits
     about twice the URLs of each other host): a frontier_q row at
     position p of host h that first becomes visible in round r0, with
@@ -292,9 +296,10 @@ def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory):
     reclaimed before it is read."""
     budget = 3
     world = World(seed=42, n_hosts=4, base_pages=40, zipf_a=1.5)
+    monkeypatch.setattr(dfq, "QUEUE_COMPACT_DIRS", 10_000)
     _, cat = _crawl(
         spark, str(tmp_path_factory.mktemp("zipf")), world, max_depth=3,
-        politeness_budget=budget, frontier_compact_dirs=10_000,
+        politeness_budget=budget,
     )
     cursor = {}  # host -> [(dir round, consumed)] in round order
     for r in sorted(
@@ -514,20 +519,6 @@ def test_resume_refuses_band_directory_layout(spark, tmp_path_factory):
         crawl(spark, world.seeds(), cfg, world, Catalog(spark, root))
 
 
-def test_band_size_below_budget_rejected():
-    """ADVICE r6: frontier_band_size < politeness_budget would make a
-    round's per-host window span >2 bands — middle-band rows
-    would be skipped then deleted by compaction. Must fail loudly."""
-    cfg = CrawlConfig(politeness_budget=5, frontier_band_size=3)
-    with pytest.raises(ValueError, match="frontier_band_size"):
-        dfq.band_size_for(cfg)
-    # band_size == budget and band_size > budget are both fine
-    assert dfq.band_size_for(
-        CrawlConfig(politeness_budget=5, frontier_band_size=5)
-    ) == 5
-    assert dfq.band_size_for(CrawlConfig(politeness_budget=5)) == 5
-
-
 def test_resume_frontier_mode_mismatch_raises(spark, tmp_path_factory):
     """ADVICE r6: resuming a catalog with the other politeness_budget
     setting must raise (each direction) instead of silently reporting
@@ -567,13 +558,15 @@ def test_resume_frontier_mode_mismatch_raises(spark, tmp_path_factory):
 
 
 def test_delta_all_disposed_round(spark, tmp_path_factory):
-    """Inherited r6 bug (found in r7): a round whose WHOLE candidate
-    slice is disposed (dup-insert already fetched -> empty scheduled
-    write) made Observation.get raise — AQE's empty-relation propagation
-    dropped the observed candidates subtree from the final write plan
-    and the metrics row came back schema-less. The seed-42 / 4-host /
-    budget-3 world hits exactly that at round 10. The crawl must run to
-    drain and match parity mode's seen/product sets."""
+    """A round whose WHOLE candidate slice is disposed (every candidate
+    a duplicate insert whose first copy was already fetched) writes an
+    empty scheduled table and fetches nothing while queued work remains;
+    the seed-42 / 4-host / budget-3 world has one at round 10. Such a
+    round must not end the crawl: it stops only when the loop-top
+    backlog is drained, and must match parity mode's seen/product
+    sets. (The round once also lost the disposed-count observation,
+    which AQE's empty-relation propagation pruned from the write plan;
+    the driver no longer observes that count.)"""
     world = World(seed=42, n_hosts=4, base_pages=40)
     res_d, _ = _crawl(
         spark, str(tmp_path_factory.mktemp("ad")), world,

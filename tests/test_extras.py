@@ -3,6 +3,10 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import hashlib
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +68,42 @@ def test_simhash_similar_docs_close(spark, docs):
     ham_13 = bin(out[1] ^ out[3]).count("1")
     assert ham_12 < ham_13
     assert out[5] == out[1]  # tokens are lowercased and ws-split
+
+
+def _winnow_py(text: str, k: int = 8, w: int = 16) -> list[str]:
+    """The winnowing definition, one k-gram and one window at a time."""
+    t = re.sub(r"\s+", " ", text).lower()
+    hashes = [
+        hashlib.md5(t[i:i + k].encode()).hexdigest()
+        for i in range(max(len(t) - (k - 1), 1))
+    ]
+    return sorted({
+        min(hashes[j:j + w]) for j in range(max(len(hashes) - (w - 1), 1))
+    })
+
+
+def test_winnow_fingerprints_match_python(spark):
+    """winnow_fingerprints equals the pure-Python definition on empty,
+    short (fewer than k characters, fewer than w k-grams) and long
+    documents, the longest several thousand characters."""
+    rng = random.Random(7)
+    words = ["Spark", "crawl", "the", "FRONTIER", "of", "a", "queue", "shop"]
+    long_text = "\t".join(
+        " ".join(rng.choice(words) for _ in range(rng.randint(1, 9)))
+        for _ in range(700)
+    )
+    texts = [
+        "", "Short", "exactly8", "twenty-two characters!",
+        "The quick  brown fox\njumps over the lazy dog",
+        long_text,
+    ]
+    assert len(long_text) > 4000
+    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    got = {
+        r["doc_id"]: r["fps"]
+        for r in T.winnow_fingerprints(docs, "text").collect()
+    }
+    assert got == {i: _winnow_py(t) for i, t in enumerate(texts)}
 
 
 def test_lang_guess(spark, docs):

@@ -201,13 +201,10 @@ class CrawlConfig:
 
     max_depth: int = 3
     politeness_budget: int | None = None
-    frontier_cap: int = FRONTIER_CAP_PER_DOMAIN
-    seed: int = 42
     task_id: str = "task-0"
     # the per-round ceiling: streaming.driver.round_partitions sizes
     # each round's shuffles and fetch fan-out to its frontier below it
     shuffle_partitions: int = 32
-    salt_partitions: int = 32     # host-hash salting fan-out for skew
     use_bloom: bool = False       # bloom-bucket seen filter (scale path)
     bloom_buckets: int = 64
     bloom_fpp: float = 0.01
@@ -243,17 +240,6 @@ class CrawlConfig:
     # the one budgeted frontier layout (streaming.delta_frontier) is
     # "delta"; kept as an accepted spelling, any other value raises
     frontier_mode: str = "delta"
-    # frontier_q band width in queue positions (band = pos // width; the
-    # queue files are sorted on band so a round's band filter skips the
-    # rest); None -> politeness_budget (a round's per-host read window
-    # then spans at most two bands)
-    frontier_band_size: int | None = None
-    # delta-mode queue maintenance trigger: fold frontier_q round dirs +
-    # reclaim consumed rows only when the committed dir count exceeds
-    # this (NOT on the compact_every cadence — queue compaction is
-    # O(pending), the one backlog-sized job in delta mode, so it runs on
-    # read-amplification pressure, not a clock)
-    frontier_compact_dirs: int = 8
 
     def __post_init__(self):
         if self.frontier_mode != "delta":

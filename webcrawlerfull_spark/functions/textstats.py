@@ -1,6 +1,7 @@
 """Text-analysis column functions for the training-data pipeline:
 language-ID heuristic, quality scoring, token counting, document
-fingerprinting. All native column expressions (codegen, no Python).
+fingerprinting. All native column expressions (codegen, no Python);
+``winnow_fingerprints`` adds its column through projections.
 
 These extend the engine beyond the reference's operator set (which has
 no text analytics) — they are the operations a large-scale training-data
@@ -9,7 +10,7 @@ pipeline runs over the crawled ``documents`` table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # tiny, deliberately-portable stopword lists (identical literals are
@@ -85,24 +86,40 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.regexp_replace(text, r"\s+", " ")))
 
 
-def winnow_fingerprints(text: Column, k: int = 8, w: int = 16) -> Column:
-    """Winnowing document fingerprints (the rolling-hash family,
-    Schleimer/Wilkerson/Aiken's public algorithm): hash every character
-    k-gram, keep the minimum of each w-length window, distinct + sorted.
-    Two documents sharing a sufficiently long substring share a
-    fingerprint, so overlap detection is a set intersection — unlike the
-    whole-document ``fingerprint`` above, partial plagiarism/quotation
-    is visible. Expressed as native array expressions (md5 per k-gram;
-    the O(n·w) window-min is fine at oracle scale — a 100 TB run swaps
-    in an Arrow UDF doing the true O(n) rolling scan, same output)."""
-    t = F.lower(F.regexp_replace(text, r"\s+", " "))
-    n_grams = F.greatest(F.length(t) - (k - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_grams), lambda i: F.md5(F.substr(t, i, F.lit(k)))
+def winnow_fingerprints(
+    docs: DataFrame, text: str, out: str = "fps", k: int = 8, w: int = 16
+) -> DataFrame:
+    """``docs`` plus column ``out``: the winnowing fingerprints of
+    ``text`` (the rolling-hash family, Schleimer/Wilkerson/Aiken's
+    public algorithm): hash every character k-gram, keep the minimum of
+    each w-length window, distinct + sorted. Two documents sharing a
+    sufficiently long substring share a fingerprint, so overlap
+    detection is a set intersection — unlike the whole-document
+    ``fingerprint`` above, partial plagiarism/quotation is visible.
+
+    The normalized text and the k-gram hash array are each projected
+    once per document: a ``transform`` lambda re-evaluates a captured
+    expression once per ELEMENT (the hazard ``textdedup.shingles``
+    records), so capturing them unprojected re-normalized the text per
+    k-gram and rehashed it per window, quadratic in document length.
+    Each projected column is read twice by the next projection (a size
+    and the lambda), which keeps the optimizer from inlining it back.
+    The window-min stays O(n·w) (a 100 TB run swaps in an Arrow UDF
+    doing the true O(n) rolling scan, same output)."""
+    normed = docs.withColumn(
+        "_wt", F.lower(F.regexp_replace(F.col(text), r"\s+", " "))
     )
-    n_windows = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
+    hashed = normed.withColumn(
+        "_wh",
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length("_wt") - (k - 1), F.lit(1))),
+            lambda i: F.md5(F.substr(F.col("_wt"), i, F.lit(k))),
+        ),
+    )
     mins = F.transform(
-        F.sequence(F.lit(1), n_windows),
-        lambda j: F.array_min(F.slice(hashes, j, w)),
+        F.sequence(F.lit(1), F.greatest(F.size("_wh") - (w - 1), F.lit(1))),
+        lambda j: F.array_min(F.slice(F.col("_wh"), j, w)),
     )
-    return F.array_sort(F.array_distinct(mins))
+    return hashed.withColumn(out, F.array_sort(F.array_distinct(mins))).drop(
+        "_wt", "_wh"
+    )

@@ -87,6 +87,20 @@ def first_touch_products(
     )
 
 
+def first_touch_or_packed(mentions: DataFrame, max_depth: int) -> DataFrame:
+    """(domain, url, parser, depth) of each (domain, url)'s first
+    mention in crawl order (queue_pos, parser_rank): the packed
+    ``first_touch_products`` when it fits, else the generic struct-min
+    ``first_touch``, which picks the identical row under the same
+    precondition."""
+    products = first_touch_products(mentions, max_depth)
+    if products is None:
+        products = first_touch(
+            mentions, ["queue_pos", "parser_rank"], ["domain", "url"]
+        ).select("domain", "url", "parser", "depth")
+    return products
+
+
 def first_touch(
     mentions: DataFrame,
     order_cols: list[str] | None = None,

@@ -140,7 +140,7 @@ def build_next_frontier(
     # category-priority + conditional 500-cap (per domain), hot-domain-safe
     links = links.withColumn("priority", P.category_priority(F.col("url")))
     capped = conditional_priority_cap(
-        links, frontier_cap, salt_partitions=(cfg.salt_partitions if cfg else 16)
+        links, frontier_cap, salt_partitions=SALT_PARTITIONS
     )
     return (
         capped
@@ -156,6 +156,11 @@ def build_next_frontier(
             (F.col("_rn") - 1).alias("queue_pos"),
         )
     )
+
+
+# the crawl's host-hash salting fan-out for the cap's phase-1 windows
+# (output is identical for any value; it bounds a hot domain's task size)
+SALT_PARTITIONS = 32
 
 
 def conditional_priority_cap(

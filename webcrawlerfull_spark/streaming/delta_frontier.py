@@ -62,7 +62,7 @@ import glob
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -89,25 +89,20 @@ QUEUE = StructType(
 # dropped (correct either way — skipping is purely a read optimization)
 MAX_BAND_INLIST = 128
 
+# the driver runs compact() once the committed frontier_q dirs exceed this
+QUEUE_COMPACT_DIRS = 8
+
 
 def band_size_for(cfg: C.CrawlConfig) -> int:
-    """band_size >= budget guarantees a round's per-host read window
-    [consumed, consumed+budget) spans at most two bands —
+    """The frontier_q band width in queue positions: the politeness
+    budget. band_size >= budget guarantees a round's per-host read
+    window [consumed, consumed+budget) spans at most two bands —
     backlog_and_bands collects only each host's lo and hi bands, so a
     smaller band size would silently skip (and then compact away)
     middle-band queue rows (ADVICE r6)."""
     if cfg.politeness_budget is None:
         raise ValueError("the delta frontier requires a politeness_budget")
-    band_size = cfg.frontier_band_size or cfg.politeness_budget
-    if band_size < cfg.politeness_budget:
-        raise ValueError(
-            f"frontier_band_size={band_size} < politeness_budget="
-            f"{cfg.politeness_budget}: a round's per-host window would "
-            "span more than two bands and middle-band rows "
-            "would be skipped then deleted by compaction; set "
-            "frontier_band_size >= politeness_budget (or leave it None)"
-        )
-    return band_size
+    return cfg.politeness_budget
 
 
 def assign_positions(
@@ -146,13 +141,10 @@ def _banded(q: DataFrame) -> DataFrame:
     )
 
 
-def write_queue(catalog, q: DataFrame, round_id: int, obs=None) -> None:
+def write_queue(catalog, q: DataFrame, round_id: int) -> None:
     """Write ``q`` (QUEUE columns) as frontier_q round ``round_id`` in the
-    band-sorted layout; ``obs`` observes its row count on the write."""
-    q = _banded(q)
-    if obs is not None:
-        q = q.observe(obs, F.count(F.lit(1)).alias("n"))
-    catalog.write_round(q, "frontier_q", round_id)
+    band-sorted layout."""
+    catalog.write_round(_banded(q), "frontier_q", round_id)
 
 
 def bootstrap(catalog, seeds_df: DataFrame, band_size: int) -> None:
@@ -329,7 +321,7 @@ def append_delta(
     candidates: DataFrame,
     band_size: int,
     round_id: int,
-) -> int:
+) -> None:
     """Insert one round's discoveries and advance the cursors. ``fresh``
     is build_next_frontier output (already seen-filtered and capped);
     the anti-join vs this round's scheduled slice drops the
@@ -337,19 +329,14 @@ def append_delta(
     schedule (identical outcome — they occupied cap space, they are
     never fetched — without keeping them in the queue). Writes
     frontier_q r=round_id+1 and frontier_cursor r=round_id+1 (touched
-    hosts only). Returns the inserted-row count (observed on the delta
-    write — no dedicated count job)."""
-    from pyspark.sql import Observation
-
+    hosts only)."""
     fresh = fresh.drop("queue_pos").join(
         scheduled.select("url"), "url", "left_anti"
     )
     delta = assign_positions(fresh, cursor, band_size).select(
         *[f.name for f in QUEUE.fields]
     )
-    obs = Observation()
-    write_queue(catalog, delta, round_id + 1, obs)
-    inserted_n = int(obs.get["n"])
+    write_queue(catalog, delta, round_id + 1)
     inserted = catalog.read_round("frontier_q", round_id + 1, schema=QUEUE)
 
     disposed = candidates.groupBy("host").agg(
@@ -374,16 +361,15 @@ def append_delta(
         )
     )
     catalog.write_round(new_cursor, "frontier_cursor", round_id + 1)
-    return inserted_n
 
 
 def compact(catalog, up_to: int, band_size: int) -> None:
     """Amortized queue maintenance: fold the cursor deltas to
     latest-per-host and rewrite frontier_q keeping only undisposed rows
     (pos >= the host's consumed), in the same band-sorted layout so later
-    rounds still skip by band. O(pending) every compact_every rounds — the only
-    backlog-sized work in delta mode, and it is optional hygiene, not a
-    per-round stage."""
+    rounds still skip by band. O(pending), run once the round dirs
+    exceed ``QUEUE_COMPACT_DIRS`` — the only backlog-sized work in delta
+    mode, and optional hygiene, not a per-round stage."""
     cursor = read_cursor(catalog, up_to)
     if cursor is None:
         return
