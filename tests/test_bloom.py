@@ -14,7 +14,6 @@ from webcrawlerfull_spark.synthgen import World
 
 B = 8
 CAP = 5_000
-FPP = 0.01
 
 
 def _urls(spark, n, prefix):
@@ -25,8 +24,8 @@ def _urls(spark, n, prefix):
 
 def test_no_false_negatives(spark):
     seen = _urls(spark, 2000, "seen")
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
-    probed = bloom.probe(seen, filters, B, CAP, FPP)
+    filters = bloom.update_filters(seen, None, B, CAP)
+    probed = bloom.probe(seen, filters, B, CAP)
     missed = probed.where(~F.col("maybe_seen")).count()
     assert missed == 0
 
@@ -34,30 +33,30 @@ def test_no_false_negatives(spark):
 def test_false_positive_rate_bounded(spark):
     seen = _urls(spark, 2000, "seen")
     fresh = _urls(spark, 2000, "fresh")
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
-    fp = bloom.probe(fresh, filters, B, CAP, FPP).where(F.col("maybe_seen")).count()
-    assert fp / 2000 < 10 * FPP
+    filters = bloom.update_filters(seen, None, B, CAP)
+    fp = bloom.probe(fresh, filters, B, CAP).where(F.col("maybe_seen")).count()
+    assert fp / 2000 < 10 * bloom.FPP
 
 
 def test_incremental_update(spark):
     s1 = _urls(spark, 500, "a")
     s2 = _urls(spark, 500, "b")
-    f1 = bloom.update_filters(s1, None, B, CAP, FPP)
-    f2 = bloom.update_filters(s2, f1, B, CAP, FPP)
+    f1 = bloom.update_filters(s1, None, B, CAP)
+    f2 = bloom.update_filters(s2, f1, B, CAP)
     both = s1.unionByName(s2)
-    assert bloom.probe(both, f2, B, CAP, FPP).where(~F.col("maybe_seen")).count() == 0
+    assert bloom.probe(both, f2, B, CAP).where(~F.col("maybe_seen")).count() == 0
 
 
 def test_anti_join_equivalence(spark):
     seen = _urls(spark, 1500, "seen")
     cands = _urls(spark, 1000, "seen").unionByName(_urls(spark, 1000, "new"))
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
+    filters = bloom.update_filters(seen, None, B, CAP)
     exact = {
         r["url"] for r in bloom.seen_anti_join(cands, seen, None, B).collect()
     }
     bloomed = {
         r["url"]
-        for r in bloom.seen_anti_join(cands, seen, filters, B, CAP, FPP).collect()
+        for r in bloom.seen_anti_join(cands, seen, filters, B, CAP).collect()
     }
     assert bloomed == exact
 
@@ -95,9 +94,9 @@ def test_anti_join_keeps_every_column_and_null(spark):
     ]
     cands = spark.createDataFrame(rows, schema)
     seen = _urls(spark, 300, "seen")
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
+    filters = bloom.update_filters(seen, None, B, CAP)
     exact = bloom.seen_anti_join(cands, seen, None, B)
-    bloomed = bloom.seen_anti_join(cands, seen, filters, B, CAP, FPP)
+    bloomed = bloom.seen_anti_join(cands, seen, filters, B, CAP)
     assert bloomed.schema == exact.schema
     got, want = (sorted(map(tuple, df.collect()), key=repr)
                  for df in (bloomed, exact))
@@ -114,8 +113,8 @@ def test_anti_join_scans_candidates_once(spark, tmp_path):
     ).write.parquet(src)
     cands = spark.read.parquet(src)
     seen = _urls(spark, 400, "seen")
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
-    out = bloom.seen_anti_join(cands, seen, filters, B, CAP, FPP)
+    filters = bloom.update_filters(seen, None, B, CAP)
+    out = bloom.seen_anti_join(cands, seen, filters, B, CAP)
     assert len(out.collect()) == 600  # 100 unseen "seen/" urls + 500 new
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
@@ -126,16 +125,19 @@ def test_anti_join_scans_candidates_once(spark, tmp_path):
 
 def test_scheme_versioning(spark):
     seen = _urls(spark, 500, "seen")
-    filters = bloom.update_filters(seen, None, B, CAP, FPP)
-    assert bloom.scheme_ok(filters)
+    filters = bloom.update_filters(seen, None, B, CAP)
+    assert bloom.scheme_ok(filters, B, CAP)
+    # another geometry (bucket count or capacity) sets other bits
+    assert not bloom.scheme_ok(filters, 2 * B, CAP)
+    assert not bloom.scheme_ok(filters, B, 2 * CAP)
     # a foreign scheme string and legacy no-column state must both fail
     foreign = filters.withColumn("scheme", F.lit("blake2b-v1"))
-    assert not bloom.scheme_ok(foreign)
+    assert not bloom.scheme_ok(foreign, B, CAP)
     legacy = filters.drop("scheme")
-    assert not bloom.scheme_ok(legacy)
+    assert not bloom.scheme_ok(legacy, B, CAP)
     # merging INTO legacy bytes is refused (their hash family is unknown)
     try:
-        bloom.update_filters(_urls(spark, 10, "x"), legacy, B, CAP, FPP)
+        bloom.update_filters(_urls(spark, 10, "x"), legacy, B, CAP)
         assert False, "expected ValueError for legacy filter state"
     except ValueError:
         pass
@@ -151,7 +153,7 @@ def test_resume_rebuilds_stale_scheme_filters(spark, tmp_path_factory):
     cfg = CrawlConfig(
         max_depth=3, politeness_budget=None, shuffle_partitions=8,
         use_bloom=True, bloom_buckets=B,
-        bloom_capacity_per_bucket=CAP, bloom_fpp=FPP,
+        bloom_capacity_per_bucket=CAP,
     )
 
     cat_ref = Catalog(spark, str(tmp_path_factory.mktemp("ref")))
@@ -177,7 +179,33 @@ def test_resume_rebuilds_stale_scheme_filters(spark, tmp_path_factory):
     }
     # and the rebuilt state is stamped with the current scheme
     rebuilt = cat.read_bloom()
-    assert bloom.scheme_ok(rebuilt)
+    assert bloom.scheme_ok(rebuilt, B, CAP)
+
+
+def test_resume_with_other_bloom_geometry_refetches_nothing(
+    spark, tmp_path_factory
+):
+    """A resume with another bucket count must not probe the persisted
+    filters: their bits were set under the old bucket routing, so seen
+    URLs would pass the gate as new and be fetched again. The geometry
+    is part of the persisted scheme stamp, so the resume rebuilds the
+    filters from the exact seen table."""
+    world = World(seed=42, n_hosts=4, base_pages=40)
+    base = dict(
+        max_depth=4, politeness_budget=None, shuffle_partitions=8,
+        use_bloom=True, bloom_capacity_per_bucket=1000,
+    )
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("geometry")))
+    crawl(spark, world.seeds(), CrawlConfig(**base, bloom_buckets=4), world,
+          cat, max_rounds=2)
+    res = crawl(spark, world.seeds(), CrawlConfig(**base, bloom_buckets=16),
+                world, cat)
+    assert res.rounds_run == 2
+    seen = res.seen.agg(
+        F.count("*").alias("n"), F.countDistinct("url").alias("d")
+    ).first()
+    assert seen["n"] == seen["d"]
+    assert bloom.scheme_ok(cat.read_bloom(), 16, 1000)
 
 
 def test_crawl_bloom_equals_exact(spark, tmp_path_factory):
@@ -191,7 +219,7 @@ def test_crawl_bloom_equals_exact(spark, tmp_path_factory):
     cat_b = Catalog(spark, str(tmp_path_factory.mktemp("bloom")))
     cfg_b = CrawlConfig(
         **base_cfg, use_bloom=True, bloom_buckets=B,
-        bloom_capacity_per_bucket=CAP, bloom_fpp=FPP,
+        bloom_capacity_per_bucket=CAP,
     )
     res_b = crawl(spark, seeds, cfg_b, world, cat_b)
 

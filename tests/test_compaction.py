@@ -12,7 +12,7 @@ from webcrawlerfull_spark.sources.catalog import Catalog
 from webcrawlerfull_spark.streaming.driver import crawl
 from webcrawlerfull_spark.synthgen import World
 
-B, CAP, FPP = 8, 10_000, 0.01
+B, CAP = 8, 10_000
 
 
 def _snap(res):
@@ -30,13 +30,20 @@ def test_compaction_preserves_state_and_resume(spark, tmp_path_factory):
     res_plain = crawl(spark, seeds, CrawlConfig(**base), world, cat_plain)
 
     cat_c = Catalog(spark, str(tmp_path_factory.mktemp("compact")))
-    cfg_c = CrawlConfig(**base, compact_every=1)
+    cfg_c = CrawlConfig(
+        **base, compact_every=1, use_bloom=True, bloom_buckets=B,
+        bloom_capacity_per_bucket=CAP,
+    )
     res_c = crawl(spark, seeds, cfg_c, world, cat_c)
 
     assert _snap(res_c) == _snap(res_plain)
-    # every compaction rewrote all prior rounds into one directory
-    assert len(cat_c.committed_rounds("products")) == 1
-    assert len(cat_c.committed_rounds("seen")) == 1
+    # every compaction rewrote all prior rounds into one directory (the
+    # bloom filters too: one row per bucket, the newest)
+    assert res_c.rounds_run > 1
+    for table in ("products", "seen", "seen_bloom"):
+        assert len(cat_c.committed_rounds(table)) == 1, table
+    buckets = [r["bucket_id"] for r in cat_c.read_bloom().collect()]
+    assert len(buckets) == len(set(buckets))
     # rows keep their round data column (row-level lineage survives)
     rounds_in_data = {
         r["round"] for r in cat_c.read_all("products").select("round").collect()
@@ -70,8 +77,8 @@ def test_compaction_mid_crawl_resume(spark, tmp_path_factory):
 def test_bloom_touched_only_delta_and_reconstruction(spark):
     s1 = spark.createDataFrame([(f"u{i}",) for i in range(20)], ["url"])
     s2 = spark.createDataFrame([("u5",), ("zz-new",)], ["url"])
-    full1 = bloom.update_filters(s1, None, B, CAP, FPP)
-    delta2 = bloom.update_filters(s2, full1, B, CAP, FPP, touched_only=True)
+    full1 = bloom.update_filters(s1, None, B, CAP)
+    delta2 = bloom.update_filters(s2, full1, B, CAP, touched_only=True)
     # the delta holds only the buckets s2 touched
     touched = {
         r["b"]
@@ -81,7 +88,7 @@ def test_bloom_touched_only_delta_and_reconstruction(spark):
     }
     assert {r["bucket_id"] for r in delta2.collect()} == touched
     # latest-per-bucket reconstruction == the full-state update
-    full2 = bloom.update_filters(s2, full1, B, CAP, FPP)
+    full2 = bloom.update_filters(s2, full1, B, CAP)
     recon = {
         r["bucket_id"]: bytes(r["filter_bytes"])
         for r in delta2.unionByName(

@@ -286,21 +286,32 @@ def test_delta_compaction_transparent(spark, tmp_path_factory, monkeypatch):
     assert per_host.count() > 0
 
 
-def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory, monkeypatch):
-    """Starvation-freedom on a Zipf-skewed world (the hot host visits
-    about twice the URLs of each other host): a frontier_q row at
+ZIPF_BUDGET = 3
+
+
+@pytest.fixture(scope="module")
+def zipf_catalog(spark, tmp_path_factory):
+    """A drained budgeted crawl of a Zipf-skewed world (the hot host
+    visits about twice the URLs of each other host), with queue
+    compaction held off so every frontier_q and frontier_cursor delta
+    is still on disk."""
+    world = World(seed=42, n_hosts=4, base_pages=40, zipf_a=1.5)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dfq, "QUEUE_COMPACT_DIRS", 10_000)
+        _, cat = _crawl(
+            spark, str(tmp_path_factory.mktemp("zipf")), world, max_depth=3,
+            politeness_budget=ZIPF_BUDGET,
+        )
+    return cat
+
+
+def test_zipf_queue_wait_is_bounded(zipf_catalog):
+    """Starvation-freedom on a Zipf-skewed world: a frontier_q row at
     position p of host h that first becomes visible in round r0, with
     h's cursor at c, is consumed by round
     r0 - 1 + ceil((p - c + 1) / budget). Read from the frontier_q and
-    frontier_cursor deltas; queue compaction is held off so no row is
-    reclaimed before it is read."""
-    budget = 3
-    world = World(seed=42, n_hosts=4, base_pages=40, zipf_a=1.5)
-    monkeypatch.setattr(dfq, "QUEUE_COMPACT_DIRS", 10_000)
-    _, cat = _crawl(
-        spark, str(tmp_path_factory.mktemp("zipf")), world, max_depth=3,
-        politeness_budget=budget,
-    )
+    frontier_cursor deltas."""
+    budget, cat = ZIPF_BUDGET, zipf_catalog
     cursor = {}  # host -> [(dir round, consumed)] in round order
     for r in sorted(
         cat.read_all_with_round("frontier_cursor").collect(),
@@ -324,9 +335,42 @@ def test_zipf_queue_wait_is_bounded(spark, tmp_path_factory, monkeypatch):
     assert max(waits) >= 3
 
 
+def test_cursor_advances_by_budget_up_to_next_pos(zipf_catalog):
+    """After every round of a budgeted crawl each host's cursor is
+    consumed = min(previous consumed + budget, previous next_pos) and
+    next_pos = previous next_pos + the rows the round inserted for it:
+    append_delta keeps the books from the cursor alone, without
+    counting the disposed slice."""
+    budget, cat = ZIPF_BUDGET, zipf_catalog
+
+    def state(r):
+        return {
+            row["host"]: (row["consumed"], row["next_pos"])
+            for row in dfq.read_cursor(cat, up_to_round=r).collect()
+        }
+
+    rounds = cat.committed_rounds("lineage")
+    short = 0  # host-rounds with less than a budget pending
+    for r in rounds:
+        before, after = state(r), state(r + 1)
+        inserted = {
+            row["host"]: row["n"]
+            for row in cat.read_round("frontier_q", r + 1)
+            .groupBy("host").agg(F.count("*").alias("n")).collect()
+        }
+        for host, (consumed, next_pos) in after.items():
+            c0, n0 = before.get(host, (0, 0))
+            assert consumed == min(c0 + budget, n0), (r, host)
+            assert next_pos == n0 + inserted.get(host, 0), (r, host)
+            short += c0 < n0 < c0 + budget
+    assert short > 0
+    # the crawl drained: the last round left no pending host
+    assert all(c == n for c, n in state(rounds[-1] + 1).values())
+
+
 def test_positions_dense_and_banded(spark):
     """assign_positions: dense per-host positions offset past next_pos,
-    politeness-ordered within the batch, band = pos // band_size."""
+    politeness-ordered within the batch, band = pos // budget."""
     rows = [
         {
             "url": f"https://h{i % 2}.x/p/{i}", "host": f"h{i % 2}.x",
@@ -340,7 +384,7 @@ def test_positions_dense_and_banded(spark):
     cursor = spark.createDataFrame(
         [{"host": "h0.x", "consumed": 2, "next_pos": 7}], schema=dfq.CURSOR
     )
-    out = dfq.assign_positions(df, cursor, band_size=4).collect()
+    out = dfq.assign_positions(df, cursor, budget=4).collect()
     for host, off in (("h0.x", 7), ("h1.x", 0)):
         sl = sorted(
             (r for r in out if r["host"] == host),
@@ -375,9 +419,9 @@ def test_first_slice_matches_politeness_schedule(spark, seed, budget):
     ]
     frontier = spark.createDataFrame(rows, schema=schemas.FRONTIER)
     cfg = CrawlConfig(politeness_budget=budget)
-    candidates = dfq.assign_positions(
-        frontier, None, dfq.band_size_for(cfg)
-    ).where(F.col("pos") < budget)
+    candidates = dfq.assign_positions(frontier, None, budget).where(
+        F.col("pos") < budget
+    )
     seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
     delta = dfq.schedule_slice(candidates, seen, None, cfg)
     scheduled, _ = politeness_schedule(frontier, budget, salt_partitions=4)
@@ -396,7 +440,7 @@ def test_first_slice_matches_politeness_schedule(spark, seed, budget):
     )
 
 
-def _queue_catalog(spark, root, band_size=5):
+def _queue_catalog(spark, root, budget=5):
     """A catalog whose frontier_q r=0 holds hosts a, b, c with 30, 14
     and 5 rows at positions 0..n-1, written by bootstrap (the production
     write path)."""
@@ -411,7 +455,7 @@ def _queue_catalog(spark, root, band_size=5):
         for p in range(n)
     ]
     dfq.bootstrap(
-        cat, spark.createDataFrame(rows, schema=schemas.FRONTIER), band_size
+        cat, spark.createDataFrame(rows, schema=schemas.FRONTIER), budget
     )
     return cat
 
@@ -427,7 +471,7 @@ def test_backlog_bands_and_band_filtered_read(spark, tmp_path_factory):
         ],
         schema=dfq.CURSOR,
     )
-    bk = dfq.backlog_and_bands(cursor, budget=5, band_size=5)
+    bk = dfq.backlog_and_bands(cursor, budget=5)
     # a: [0,5) -> band 0; b: [13,18) -> bands 2,3; c: drained
     assert (bk.pending, bk.pending_hosts, bk.bands) == (31, 2, [0, 2, 3])
 
@@ -452,7 +496,7 @@ def test_unfiltered_candidate_read_runs_no_job(spark, tmp_path_factory):
         ],
         schema=dfq.CURSOR,
     )
-    bk = dfq.backlog_and_bands(cursor, budget=5, band_size=5)
+    bk = dfq.backlog_and_bands(cursor, budget=5)
     assert bk.bands is None and bk.pending_hosts == n
     cat = _queue_catalog(spark, str(tmp_path_factory.mktemp("wide")))
     cand, jobs = _jobs_of(
@@ -491,9 +535,7 @@ def test_queue_files_are_flat_and_band_filter_is_pushed(
         assert not [n for n in os.listdir(d)
                     if os.path.isdir(os.path.join(d, n))], d
     cursor = dfq.read_cursor(cat, up_to_round=2)
-    bk = dfq.backlog_and_bands(
-        cursor, cfg.politeness_budget, dfq.band_size_for(cfg)
-    )
+    bk = dfq.backlog_and_bands(cursor, cfg.politeness_budget)
     assert bk.pending > 0 and bk.bands
     cand = dfq.read_candidates(cat, cursor, cfg.politeness_budget, 2, bk.bands)
     assert cand.count() > 0

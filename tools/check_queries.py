@@ -1,11 +1,14 @@
-"""Local mirror of the driver's correctness gate: run every
-__spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB
-over the same sf dir; compare row count, column names, and
-order-insensitive values. Usage: python tools/check_queries.py [sf_dir]
+"""Local mirror of the driver's correctness gate: run __spark_entry__
+queries() entries on Spark and their oracle_sql() on DuckDB over the
+same sf dir; compare row count, column names, and order-insensitive
+values. With no NAME every entry runs, then the entry() smoke check.
+
+Usage: python tools/check_queries.py [NAME ...] --sf SF_DIR
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -38,7 +41,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
-def main(sf_dir: str) -> int:
+def main(sf_dir: str, names: list[str] | None = None) -> int:
     spark = get_spark(app_name="check-queries", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -49,9 +52,13 @@ def main(sf_dir: str) -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
-    for name, fn in qs.items():
+    for name in names or list(qs):
+        if name not in qs:
+            print(f"FAIL {name}: no such entry")
+            failures += 1
+            continue
         try:
-            got = canon(fn(spark, sf_dir).toPandas())
+            got = canon(qs[name](spark, sf_dir).toPandas())
         except Exception as e:
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failures += 1
@@ -78,17 +85,22 @@ def main(sf_dir: str) -> int:
             failures += 1
         else:
             print(f"OK   {name} ({len(got)} rows)")
-    # smoke entry()
-    try:
-        n = entrymod.entry(spark).count()
-        print(f"OK   entry() -> {n} rows")
-    except Exception as e:
-        print(f"FAIL entry(): {e}")
-        failures += 1
+    if not names:
+        try:
+            n = entrymod.entry(spark).count()
+            print(f"OK   entry() -> {n} rows")
+        except Exception as e:
+            print(f"FAIL entry(): {e}")
+            failures += 1
     spark.stop()
     return failures
 
 
 if __name__ == "__main__":
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    raise SystemExit(main(sf))
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", metavar="NAME",
+                    help="queries() entries to check (default: all)")
+    ap.add_argument("--sf", required=True,
+                    help="scale-factor dir of the input parquet tables")
+    args = ap.parse_args()
+    raise SystemExit(main(args.sf, args.names))

@@ -207,7 +207,6 @@ class CrawlConfig:
     shuffle_partitions: int = 32
     use_bloom: bool = False       # bloom-bucket seen filter (scale path)
     bloom_buckets: int = 64
-    bloom_fpp: float = 0.01
     bloom_capacity_per_bucket: int = 1_000_000
     # MERGE-equivalent state compaction: every N rounds, rewrite the
     # products/seen round dirs into one (bounds read amplification on a

@@ -47,13 +47,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# In-bucket hash-family version stamped into every persisted filter row.
-# Probing filter bytes with a DIFFERENT hash family than the one that set
-# them yields silent false negatives (seen URLs pass the gate and the
-# exact anti-join's pruning assumption breaks -> re-fetches on resume).
-# Bump this string whenever _positions/_SEED_* / _params change shape;
-# the driver rebuilds stale state from the exact seen table on mismatch.
+# In-bucket hash-family version, stamped (with the filter geometry, see
+# scheme()) into every persisted filter row. Probing filter bytes with a
+# DIFFERENT hash family than the one that set them yields silent false
+# negatives (seen URLs pass the gate and the exact anti-join's pruning
+# assumption breaks -> re-fetches on resume). Bump this string whenever
+# _positions/_SEED_* / _params change shape; the driver rebuilds stale
+# state from the exact seen table on mismatch.
 HASH_SCHEME = "xxh64-dh-v2"
+
+# target false-positive rate of every filter (sizes m and k in _params)
+FPP = 0.01
 
 FILTERS_SCHEMA = StructType(
     [
@@ -64,15 +68,27 @@ FILTERS_SCHEMA = StructType(
 )
 
 
-def scheme_ok(filters: DataFrame) -> bool:
+def scheme(buckets: int, capacity: int) -> str:
+    """The stamp a filter row carries: the hash family plus the geometry
+    its bytes were set under. Bucket routing (``buckets``) and the
+    in-bucket positions (``m``, ``k``) all decide which bits a URL
+    sets, so filters written under any other geometry give false
+    negatives too."""
+    m, k = _params(capacity)
+    return f"{HASH_SCHEME}/b={buckets}/m={m}/k={k}"
+
+
+def scheme_ok(filters: DataFrame, buckets: int, capacity: int) -> bool:
     """True iff every persisted filter row was written by the CURRENT
-    in-bucket hash family. Legacy state (no ``scheme`` column — written
-    before versioning existed) and any foreign scheme string both fail,
-    which routes the caller to the rebuild-from-exact-seen path."""
+    in-bucket hash family under this run's geometry. Legacy state (no
+    ``scheme`` column — written before versioning existed), a foreign
+    scheme string and another bucket count or capacity all fail, which
+    routes the caller to the rebuild-from-exact-seen path."""
     if "scheme" not in filters.columns:
         return False
     bad = filters.where(
-        F.col("scheme").isNull() | (F.col("scheme") != HASH_SCHEME)
+        F.col("scheme").isNull()
+        | (F.col("scheme") != scheme(buckets, capacity))
     ).limit(1)
     return len(bad.take(1)) == 0
 
@@ -82,9 +98,10 @@ _SEED_H1 = 0x51ED
 _SEED_H2 = 0xB100
 
 
-def _params(capacity: int, fpp: float) -> tuple[int, int]:
-    """(m bits, k hashes) for a target capacity/false-positive rate."""
-    m = max(64, int(math.ceil(-capacity * math.log(fpp) / (math.log(2) ** 2))))
+def _params(capacity: int) -> tuple[int, int]:
+    """(m bits, k hashes) for a target capacity at false-positive rate
+    ``FPP``."""
+    m = max(64, int(math.ceil(-capacity * math.log(FPP) / (math.log(2) ** 2))))
     m = (m + 7) // 8 * 8
     k = max(1, round(m / capacity * math.log(2)))
     return m, k
@@ -134,7 +151,6 @@ def update_filters(
     old_filters: DataFrame | None,
     buckets: int,
     capacity: int = 1_000_000,
-    fpp: float = 0.01,
     url_col: str = "url",
     touched_only: bool = False,
 ) -> DataFrame:
@@ -143,7 +159,8 @@ def update_filters(
     bucket rows (the MERGE-style delta a round persists — the reader
     reconstructs the live state as latest-row-per-bucket, so a round that
     touches 5 of 64 buckets writes 5 rows, not the whole state)."""
-    m, k = _params(capacity, fpp)
+    m, k = _params(capacity)
+    stamp = scheme(buckets, capacity)
     spark = new_urls.sparkSession
     new_b = new_urls.select(
         F.col(url_col).alias("url"), *_hash_cols(url_col, buckets)
@@ -178,7 +195,7 @@ def update_filters(
             {
                 "bucket_id": [bucket_id],
                 "filter_bytes": [bits.tobytes()],
-                "scheme": [HASH_SCHEME],
+                "scheme": [stamp],
             }
         )
 
@@ -205,7 +222,6 @@ def probe(
     filters: DataFrame,
     buckets: int,
     capacity: int = 1_000_000,
-    fpp: float = 0.01,
     url_col: str = "url",
 ) -> DataFrame:
     """Every candidate row with a ``maybe_seen`` flag appended — no false
@@ -214,7 +230,7 @@ def probe(
     referenced once in the plan: no url-only projection joined back."""
     import pyarrow as pa
 
-    m, k = _params(capacity, fpp)
+    m, k = _params(capacity)
     bucket, h1, h2 = _PROBE_COLS
     cand = candidates.select("*", *_hash_cols(url_col, buckets, _PROBE_COLS))
     schema = StructType(
@@ -246,7 +262,6 @@ def seen_anti_join(
     filters: DataFrame | None,
     buckets: int,
     capacity: int = 1_000_000,
-    fpp: float = 0.01,
     url_col: str = "url",
 ) -> DataFrame:
     """J1 at scale: definite-new URLs skip the exact join entirely; only
@@ -258,7 +273,7 @@ def seen_anti_join(
     # both branches read the one probe output; its input exchange is
     # shared between them (exchange reuse), so the candidate source is
     # computed once
-    flagged = probe(candidates, filters, buckets, capacity, fpp, url_col=url_col)
+    flagged = probe(candidates, filters, buckets, capacity, url_col=url_col)
     definite_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
     verified_new = suspects.join(

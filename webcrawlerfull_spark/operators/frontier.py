@@ -114,7 +114,7 @@ def build_next_frontier(
     cfg = cfg or C.CrawlConfig()
     links = bloom.seen_anti_join(
         links, seen, seen_filters, cfg.bloom_buckets,
-        cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
+        cfg.bloom_capacity_per_bucket,
     )
 
     # batch-visibility rule: drop urls scheduled this round in a batch

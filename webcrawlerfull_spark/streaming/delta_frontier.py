@@ -9,7 +9,7 @@ instead a queue the round never has to re-rank:
 - ``frontier_q`` — an APPEND-ONLY per-host queue. Every row gets a dense
   per-host position ``pos`` when it is inserted (ranked by the politeness
   keys *within its insertion round*: depth, priority, discovery_seq,
-  url) and a ``band = pos // band_size`` column. Each delta is written
+  url) and a ``band = pos // budget`` column. Each delta is written
   as a few files sorted by (band, host, pos) — one for a small round —
   so a band filter skips row groups and pages by their statistics,
   with no directory per band to list or open. Rows are never updated
@@ -22,7 +22,7 @@ instead a queue the round never has to re-rank:
 
 A round then:
 1. reads ONLY the bands holding each pending host's next ``budget``
-   positions (``band_size >= budget`` ⇒ at most two bands per host; with
+   positions (band width = budget ⇒ at most two bands per host; with
    uniform per-host progress the global band set is tiny, and the
    ``band IN (...)`` filter is pushed into the Parquet scan, where the
    band-sorted files let it skip every other row group and page — so
@@ -31,7 +31,9 @@ A round then:
    URLs (keep-first by pos) and already-seen URLs (bloom-gated exact
    anti-join — the safety net for duplicate inserts whose first copy was
    fetched after this copy was queued) are skipped forever, the rest is
-   the scheduled slice; ``consumed`` advances past everything read;
+   the scheduled slice; ``consumed`` advances past everything read —
+   ``min(budget, pending)`` positions, known from the cursor alone
+   because positions are dense per host;
 3. appends the round's discoveries as ONE new delta (positions offset
    past ``next_pos``), writes the touched cursor rows, and never touches
    the rest of the queue.
@@ -93,20 +95,8 @@ MAX_BAND_INLIST = 128
 QUEUE_COMPACT_DIRS = 8
 
 
-def band_size_for(cfg: C.CrawlConfig) -> int:
-    """The frontier_q band width in queue positions: the politeness
-    budget. band_size >= budget guarantees a round's per-host read
-    window [consumed, consumed+budget) spans at most two bands —
-    backlog_and_bands collects only each host's lo and hi bands, so a
-    smaller band size would silently skip (and then compact away)
-    middle-band queue rows (ADVICE r6)."""
-    if cfg.politeness_budget is None:
-        raise ValueError("the delta frontier requires a politeness_budget")
-    return cfg.politeness_budget
-
-
 def assign_positions(
-    rows: DataFrame, cursor: DataFrame | None, band_size: int
+    rows: DataFrame, cursor: DataFrame | None, budget: int
 ) -> DataFrame:
     """Dense per-host positions for one insertion batch: politeness-key
     rank within the batch, offset past the host's ``next_pos``. The
@@ -123,7 +113,7 @@ def assign_positions(
         ranked.withColumn(
             "pos", F.coalesce(F.col("next_pos"), F.lit(0)) + F.col("_rk")
         )
-        .withColumn("band", F.floor(F.col("pos") / F.lit(band_size)))
+        .withColumn("band", F.floor(F.col("pos") / F.lit(budget)))
         .drop("_rk", "next_pos")
     )
 
@@ -147,12 +137,12 @@ def write_queue(catalog, q: DataFrame, round_id: int) -> None:
     catalog.write_round(_banded(q), "frontier_q", round_id)
 
 
-def bootstrap(catalog, seeds_df: DataFrame, band_size: int) -> None:
+def bootstrap(catalog, seeds_df: DataFrame, budget: int) -> None:
     """Seed the queue: frontier_q r=0 + cursor r=0 (consumed 0)."""
     q0 = assign_positions(
         seeds_df.select(*[f.name for f in schemas.FRONTIER.fields]),
         None,
-        band_size,
+        budget,
     )
     write_queue(catalog, q0, 0)
     cursor0 = (
@@ -213,19 +203,19 @@ def backlog(cursor: DataFrame | None) -> Backlog:
     return Backlog(int(row["p"]), int(row["h"]))
 
 
-def backlog_and_bands(
-    cursor: DataFrame | None, budget: int, band_size: int
-) -> Backlog:
+def backlog_and_bands(cursor: DataFrame | None, budget: int) -> Backlog:
     """backlog() + the bands this round reads, in ONE aggregation job —
     the only per-round driver-side job the delta layout adds to the loop
-    top. Each pending host's read window [consumed, consumed+budget)
-    touches ≤2 bands (band_size >= budget); bands=None (no band filter)
-    when the distinct set outgrows an isin() filter — correct either
-    way."""
+    top. The band width is the budget, so each pending host's read
+    window [consumed, consumed+budget) touches at most two bands, and
+    only each host's lo and hi bands are collected: a narrower band
+    would silently skip (and compaction then drop) middle-band queue
+    rows (ADVICE r6). bands=None (no band filter) when the distinct set
+    outgrows an isin() filter — correct either way."""
     if cursor is None:
         return Backlog(0, 0, [])
-    lo = F.floor(F.col("consumed") / F.lit(band_size))
-    hi = F.floor((F.col("consumed") + F.lit(budget - 1)) / F.lit(band_size))
+    lo = F.floor(F.col("consumed") / F.lit(budget))
+    hi = F.floor((F.col("consumed") + F.lit(budget - 1)) / F.lit(budget))
     row = (
         cursor.where(F.col("consumed") < F.col("next_pos"))
         .agg(
@@ -301,10 +291,9 @@ def schedule_slice(
     slice_ = first_touch(candidates, ["pos"], ["url"])
     unseen = bloom.seen_anti_join(
         slice_, seen, seen_filters, cfg.bloom_buckets,
-        cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
+        cfg.bloom_capacity_per_bucket,
     )
-    fetch_key = "domain" if "domain" in candidates.columns else "host"
-    w_fetch = Window.partitionBy(fetch_key).orderBy(*politeness_order())
+    w_fetch = Window.partitionBy("domain").orderBy(*politeness_order())
     return (
         unseen.withColumn(
             "queue_pos", (F.row_number().over(w_fetch) - 1).cast("long")
@@ -318,8 +307,7 @@ def append_delta(
     fresh: DataFrame,
     scheduled: DataFrame,
     cursor: DataFrame,
-    candidates: DataFrame,
-    band_size: int,
+    budget: int,
     round_id: int,
 ) -> None:
     """Insert one round's discoveries and advance the cursors. ``fresh``
@@ -328,42 +316,38 @@ def append_delta(
     batch-visibility carve-over rows here instead of at next round's
     schedule (identical outcome — they occupied cap space, they are
     never fetched — without keeping them in the queue). Writes
-    frontier_q r=round_id+1 and frontier_cursor r=round_id+1 (touched
-    hosts only)."""
+    frontier_q r=round_id+1 and frontier_cursor r=round_id+1: one row
+    per touched host (pending work or inserts). The round disposed each
+    pending host's whole window, and positions are dense per host, so
+    ``consumed`` advances to ``min(consumed + budget, next_pos)``
+    without counting the slice."""
     fresh = fresh.drop("queue_pos").join(
         scheduled.select("url"), "url", "left_anti"
     )
-    delta = assign_positions(fresh, cursor, band_size).select(
+    delta = assign_positions(fresh, cursor, budget).select(
         *[f.name for f in QUEUE.fields]
     )
     write_queue(catalog, delta, round_id + 1)
-    inserted = catalog.read_round("frontier_q", round_id + 1, schema=QUEUE)
-
-    disposed = candidates.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("_disp")
+    ins = (
+        catalog.read_round("frontier_q", round_id + 1, schema=QUEUE)
+        .groupBy("host")
+        .agg(F.count(F.lit(1)).cast("long").alias("_ins"))
     )
-    ins = inserted.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("_ins")
-    )
-    touched = disposed.join(ins, "host", "full_outer")
+    consumed = F.coalesce(F.col("consumed"), F.lit(0))
+    next_pos = F.coalesce(F.col("next_pos"), F.lit(0))
     new_cursor = (
-        touched.join(cursor, "host", "left")
+        cursor.join(ins, "host", "full_outer")
+        .where((consumed < next_pos) | F.col("_ins").isNotNull())
         .select(
             "host",
-            (
-                F.coalesce(F.col("consumed"), F.lit(0))
-                + F.coalesce(F.col("_disp"), F.lit(0))
-            ).alias("consumed"),
-            (
-                F.coalesce(F.col("next_pos"), F.lit(0))
-                + F.coalesce(F.col("_ins"), F.lit(0))
-            ).alias("next_pos"),
+            F.least(consumed + F.lit(budget), next_pos).alias("consumed"),
+            (next_pos + F.coalesce(F.col("_ins"), F.lit(0))).alias("next_pos"),
         )
     )
     catalog.write_round(new_cursor, "frontier_cursor", round_id + 1)
 
 
-def compact(catalog, up_to: int, band_size: int) -> None:
+def compact(catalog, up_to: int) -> None:
     """Amortized queue maintenance: fold the cursor deltas to
     latest-per-host and rewrite frontier_q keeping only undisposed rows
     (pos >= the host's consumed), in the same band-sorted layout so later

@@ -89,19 +89,17 @@ class _Slice:
     """The schedule stage's round input: ``size`` is lineage's
     frontier_size, ``round_size`` (the rows it may schedule) sizes the
     round's partitions. Parity keeps the ``frontier``; a budgeted round
-    persists its ``cursor`` and ``candidates`` for the frontier chain."""
+    persists its ``cursor`` for the frontier chain."""
 
     size: int
     round_size: int
     frontier: DataFrame | None = None
     cursor: DataFrame | None = None
     bands: list[int] | None = None  # queue bands to read; None: all
-    candidates: DataFrame | None = None
 
     def release(self) -> None:
-        for df in (self.cursor, self.candidates):
-            if df is not None:
-                df.unpersist()
+        if self.cursor is not None:
+            self.cursor.unpersist()
 
 
 def _pending(
@@ -119,9 +117,7 @@ def _pending(
     discovered nothing, and its observed 0 stops the crawl here."""
     if delta_mode:
         cursor = dfq.read_cursor(catalog, up_to_round=round_id).persist()
-        bk = dfq.backlog_and_bands(
-            cursor, cfg.politeness_budget, dfq.band_size_for(cfg)
-        )
+        bk = dfq.backlog_and_bands(cursor, cfg.politeness_budget)
         round_size = min(
             bk.pending, cfg.politeness_budget * max(bk.pending_hosts, 1)
         )
@@ -138,21 +134,24 @@ def _seen_state(
     """The URL-seen state at round start: the exact seen table and, with
     ``use_bloom``, the cumulative bloom filters. ``validate`` (a crawl()
     call's first round; this driver only writes current-scheme deltas)
-    drops persisted filters of an older hash scheme, whose silent false
-    negatives would re-fetch seen URLs. Missing filters (stale, or bloom
+    drops persisted filters of another hash scheme or geometry (bucket
+    count, bits, hashes), whose silent false negatives would re-fetch
+    seen URLs. Missing filters (stale, or bloom
     switched on at a resume) are rebuilt from the exact seen table: they
     must cover every URL in it."""
     seen = catalog.read_all("seen", up_to_round=round_id - 1) or _empty_seen(spark)
     if not cfg.use_bloom or round_id == 0:
         return seen, None
     seen_filters = catalog.read_bloom(up_to_round=round_id - 1)
-    if seen_filters is not None and validate and not scheme_ok(seen_filters):
+    if seen_filters is not None and validate and not scheme_ok(
+        seen_filters, cfg.bloom_buckets, cfg.bloom_capacity_per_bucket
+    ):
         catalog.drop_table("seen_bloom")
         seen_filters = None
     if seen_filters is None:
         seeded = update_filters(
             seen.select("url"), None, cfg.bloom_buckets,
-            cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
+            cfg.bloom_capacity_per_bucket,
         )
         catalog.write_round(seeded, "seen_bloom", round_id - 1)
         seen_filters = catalog.read_bloom(up_to_round=round_id - 1)
@@ -191,11 +190,11 @@ def _schedule(
     Nothing is committed until lineage lands, so a crash mid-round is
     safe."""
     if delta_mode:
-        sl.candidates = dfq.read_candidates(
+        candidates = dfq.read_candidates(
             catalog, sl.cursor, cfg.politeness_budget, round_id, sl.bands
-        ).persist()
+        )
         scheduled = dfq.schedule_slice(
-            apply_robots(sl.candidates, robots), seen, seen_filters, cfg
+            apply_robots(candidates, robots), seen, seen_filters, cfg
         )
     else:
         scheduled = apply_robots(sl.frontier, robots)
@@ -257,8 +256,8 @@ def _frontier_chain(
     )
     if delta_mode:
         dfq.append_delta(
-            catalog, next_frontier, scheduled, sl.cursor, sl.candidates,
-            dfq.band_size_for(cfg), round_id,
+            catalog, next_frontier, scheduled, sl.cursor,
+            cfg.politeness_budget, round_id,
         )
         return None
     obs = Observation()
@@ -388,21 +387,24 @@ def _commit(
     """Commit stage, once the round's chains have joined: the lineage row
     LAST, as the commit marker (one driver-local pyarrow row, no Spark
     job), then compaction after it. Every ``compact_every`` rounds the
-    growing state tables merge into one dir, so read_all's fan-in stays
-    O(1); a budgeted crawl's queue compacts on dir-count pressure, not
-    on that clock (an O(pending) rewrite per clock tick cost more than
-    the reads it saved)."""
+    growing state tables (bloom filters included) merge into one dir, so
+    read_all's fan-in stays O(1); a budgeted crawl's queue compacts on
+    dir-count pressure, not on that clock (an O(pending) rewrite per
+    clock tick cost more than the reads it saved)."""
     catalog.write_round_local([lineage], "lineage", round_id, schemas.LINEAGE)
     if cfg.compact_every and (round_id + 1) % cfg.compact_every == 0:
         catalog.compact("products", round_id, ["task_id", "domain", "url"])
         catalog.compact("seen", round_id, ["url"])
+        if cfg.use_bloom:
+            # touched-bucket deltas: keep the newest row per bucket
+            catalog.compact_latest("seen_bloom", round_id, ["bucket_id"])
         if cfg.doc_dedup:
             # pure dir-merge (deltas are disjoint; no dedup keys)
             catalog.compact("doc_dedup_state", round_id)
     if delta_mode and (
         len(catalog.committed_rounds("frontier_q")) > dfq.QUEUE_COMPACT_DIRS
     ):
-        dfq.compact(catalog, round_id + 1, dfq.band_size_for(cfg))
+        dfq.compact(catalog, round_id + 1)
     sl.release()
 
 
@@ -475,7 +477,7 @@ def crawl(
         round_id = 0
         frontier = seed_frontier(spark, seeds)
         if delta_mode:
-            dfq.bootstrap(catalog, frontier, dfq.band_size_for(cfg))
+            dfq.bootstrap(catalog, frontier, cfg.politeness_budget)
         else:
             catalog.write_round(frontier, "frontier", 0)
     else:
@@ -546,8 +548,8 @@ def _run_rounds(
         #   - bloom delta: waits for `scheduled` (probes the pre-round
         #     seen_filters);
         #   - next frontier: waits for `documents` (reads documents,
-        #     scheduled, seen, seen_filters, plus the round's cursor and
-        #     candidates in delta mode) — nothing doc-dedup or the
+        #     scheduled, seen, seen_filters, plus the round's cursor in
+        #     delta mode) — nothing doc-dedup or the
         #     cascade produce;
         #   - cascade→products: waits for doc-dedup (kept documents) and
         #     reads products up to the previous round.
@@ -564,8 +566,7 @@ def _run_rounds(
                 # round persists only the buckets it actually updated
                 new_filters = update_filters(
                     scheduled.select("url"), seen_filters, cfg.bloom_buckets,
-                    cfg.bloom_capacity_per_bucket, cfg.bloom_fpp,
-                    touched_only=True,
+                    cfg.bloom_capacity_per_bucket, touched_only=True,
                 )
                 chains.append(pool.submit(
                     catalog.write_round, new_filters, "seen_bloom", round_id
