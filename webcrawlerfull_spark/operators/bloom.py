@@ -47,17 +47,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# In-bucket hash-family version, stamped (with the filter geometry, see
-# scheme()) into every persisted filter row. Probing filter bytes with a
-# DIFFERENT hash family than the one that set them yields silent false
-# negatives (seen URLs pass the gate and the exact anti-join's pruning
-# assumption breaks -> re-fetches on resume). Bump this string whenever
-# _positions/_SEED_* / _params change shape; the driver rebuilds stale
-# state from the exact seen table on mismatch.
+# In-bucket hash-family version stamped into every persisted filter row
+# (see scheme()). Probing filter bytes with a DIFFERENT hash family than
+# the one that set them yields silent false negatives (seen URLs pass
+# the gate and the exact anti-join's pruning assumption breaks ->
+# re-fetches on resume). Bump this string whenever _positions/_SEED_* /
+# _params change shape; the driver rebuilds stale state on mismatch.
 HASH_SCHEME = "xxh64-dh-v2"
-
-# target false-positive rate of every filter (sizes m and k in _params)
-FPP = 0.01
+FPP = 0.01  # target false-positive rate; sizes m and k in _params
 
 FILTERS_SCHEMA = StructType(
     [
@@ -69,11 +66,9 @@ FILTERS_SCHEMA = StructType(
 
 
 def scheme(buckets: int, capacity: int) -> str:
-    """The stamp a filter row carries: the hash family plus the geometry
-    its bytes were set under. Bucket routing (``buckets``) and the
-    in-bucket positions (``m``, ``k``) all decide which bits a URL
-    sets, so filters written under any other geometry give false
-    negatives too."""
+    """A filter row's stamp: the hash family plus the geometry (bucket
+    routing, ``m``, ``k``) that decides which bits a URL sets — filters
+    of any other geometry give false negatives too."""
     m, k = _params(capacity)
     return f"{HASH_SCHEME}/b={buckets}/m={m}/k={k}"
 
@@ -99,8 +94,7 @@ _SEED_H2 = 0xB100
 
 
 def _params(capacity: int) -> tuple[int, int]:
-    """(m bits, k hashes) for a target capacity at false-positive rate
-    ``FPP``."""
+    """(m bits, k hashes) for a target capacity at rate ``FPP``."""
     m = max(64, int(math.ceil(-capacity * math.log(FPP) / (math.log(2) ** 2))))
     m = (m + 7) // 8 * 8
     k = max(1, round(m / capacity * math.log(2)))

@@ -396,7 +396,6 @@ def _commit(
         catalog.compact("products", round_id, ["task_id", "domain", "url"])
         catalog.compact("seen", round_id, ["url"])
         if cfg.use_bloom:
-            # touched-bucket deltas: keep the newest row per bucket
             catalog.compact_latest("seen_bloom", round_id, ["bucket_id"])
         if cfg.doc_dedup:
             # pure dir-merge (deltas are disjoint; no dedup keys)
