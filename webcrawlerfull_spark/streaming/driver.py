@@ -136,9 +136,9 @@ def _seen_state(
     call's first round; this driver only writes current-scheme deltas)
     drops persisted filters of another hash scheme or geometry (bucket
     count, bits, hashes), whose silent false negatives would re-fetch
-    seen URLs. Missing filters (stale, or bloom
-    switched on at a resume) are rebuilt from the exact seen table: they
-    must cover every URL in it."""
+    seen URLs. Missing filters (stale, or bloom switched on at a resume)
+    are rebuilt from the exact seen table: they must cover every URL in
+    it."""
     seen = catalog.read_all("seen", up_to_round=round_id - 1) or _empty_seen(spark)
     if not cfg.use_bloom or round_id == 0:
         return seen, None
@@ -548,8 +548,7 @@ def _run_rounds(
         #     seen_filters);
         #   - next frontier: waits for `documents` (reads documents,
         #     scheduled, seen, seen_filters, plus the round's cursor in
-        #     delta mode) — nothing doc-dedup or the
-        #     cascade produce;
+        #     delta mode) — nothing doc-dedup or the cascade produce;
         #   - cascade→products: waits for doc-dedup (kept documents) and
         #     reads products up to the previous round.
         # Nothing in this round reads a chain's output; the next round
