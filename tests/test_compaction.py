@@ -74,31 +74,36 @@ def test_compaction_mid_crawl_resume(spark, tmp_path_factory):
     assert not dupes
 
 
-def test_bloom_touched_only_delta_and_reconstruction(spark):
+def test_bloom_touched_only_delta_and_reconstruction(spark, tmp_path):
+    """A round's bloom delta holds only the buckets it touched, and the
+    catalog's latest-per-bucket read of the deltas is the state one
+    update over every URL builds (bitwise OR is order-free, so the bytes
+    match exactly)."""
     s1 = spark.createDataFrame([(f"u{i}",) for i in range(20)], ["url"])
     s2 = spark.createDataFrame([("u5",), ("zz-new",)], ["url"])
+    cat = Catalog(spark, str(tmp_path / "cat"))
     full1 = bloom.update_filters(s1, None, B, CAP)
-    delta2 = bloom.update_filters(s2, full1, B, CAP, touched_only=True)
-    # the delta holds only the buckets s2 touched
+    cat.write_round(full1, "seen_bloom", 0)
+    delta2 = bloom.update_filters(s2, cat.read_bloom(), B, CAP)
+    cat.write_round(delta2, "seen_bloom", 1)
     touched = {
         r["b"]
         for r in s2.select(bloom.bucket_col(F.col("url"), B).alias("b"))
         .distinct()
         .collect()
     }
-    assert {r["bucket_id"] for r in delta2.collect()} == touched
-    # latest-per-bucket reconstruction == the full-state update
-    full2 = bloom.update_filters(s2, full1, B, CAP)
-    recon = {
+    assert {
+        r["bucket_id"] for r in cat.read_round("seen_bloom", 1).collect()
+    } == touched
+    got = {
         r["bucket_id"]: bytes(r["filter_bytes"])
-        for r in delta2.unionByName(
-            full1.join(delta2.select("bucket_id"), "bucket_id", "left_anti")
-        ).collect()
+        for r in cat.read_bloom().collect()
     }
     expect = {
-        r["bucket_id"]: bytes(r["filter_bytes"]) for r in full2.collect()
+        r["bucket_id"]: bytes(r["filter_bytes"])
+        for r in bloom.update_filters(s1.unionByName(s2), None, B, CAP).collect()
     }
-    assert recon == expect
+    assert got == expect
 
 
 def test_mid_round_crash_resume(spark, tmp_path_factory):

@@ -146,13 +146,13 @@ def update_filters(
     buckets: int,
     capacity: int = 1_000_000,
     url_col: str = "url",
-    touched_only: bool = False,
 ) -> DataFrame:
     """Merge newly-seen URLs into the bucketized filter state. Returns
-    the FULL new filter table, or with ``touched_only`` just the updated
-    bucket rows (the MERGE-style delta a round persists — the reader
-    reconstructs the live state as latest-row-per-bucket, so a round that
-    touches 5 of 64 buckets writes 5 rows, not the whole state)."""
+    the updated bucket rows only: the MERGE-style delta a round persists
+    (the reader reconstructs the live state as latest-row-per-bucket, so
+    a round that touches 5 of 64 buckets writes 5 rows, not the whole
+    state). With ``old_filters=None`` those rows are the whole state of
+    ``new_urls``."""
     m, k = _params(capacity)
     stamp = scheme(buckets, capacity)
     spark = new_urls.sparkSession
@@ -170,8 +170,7 @@ def update_filters(
 
     def merge(key, urls_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(urls_pdf):
-            # filter-only bucket: not touched this round (the untouched
-            # branch below carries it in full-state mode)
+            # filter-only bucket: not touched this round, no delta row
             return pd.DataFrame(
                 {
                     "bucket_id": pd.Series([], dtype="int32"),
@@ -193,17 +192,11 @@ def update_filters(
             }
         )
 
-    touched = (
+    return (
         new_b.groupBy("bucket_id")
         .cogroup(old_filters.groupBy("bucket_id"))
         .applyInPandas(merge, schema=FILTERS_SCHEMA)
     )
-    if touched_only:
-        return touched
-    untouched = old_filters.join(
-        new_b.select("bucket_id").distinct(), "bucket_id", "left_anti"
-    )
-    return touched.unionByName(untouched)
 
 
 # probe's helper columns on the candidate rows (private names, so they

@@ -18,9 +18,12 @@ so this parquet layout is the documented stand-in — same semantics
 (append-only snapshots keyed by round, atomic-enough commit marker,
 time-travel by round). The REAL code path exists below as
 ``IcebergCatalog`` (same interface: ``writeTo`` snapshots,
-``overwritePartitions`` round redo, ``MERGE INTO`` upsert) behind the
-``iceberg_available`` feature gate — a constructor swap when the jar
-and a ``spark.sql.catalog.<name>`` are configured.
+``overwritePartitions`` round redo, keep-first compaction as the
+upsert) behind the ``iceberg_available`` feature gate — a constructor
+swap when the jar and a ``spark.sql.catalog.<name>`` are configured.
+Both classes inherit every rule above storage from ``RoundStore``, so
+the Iceberg path's reads, derived seen table and compaction are the
+code the parquet catalog runs.
 
 Vendoring the jar was re-attempted round 5: Maven Central is
 unreachable from this sandbox (HTTP 000 on
@@ -76,8 +79,42 @@ def _shape(schema: StructType):
     return strip(schema.jsonValue())
 
 
-class Catalog:
+
+
+def _first_per_key(df: DataFrame, keys: list[str], order) -> DataFrame:
+    """One row per ``keys`` value: the first under ``order``."""
+    w = Window.partitionBy(*keys).orderBy(order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+class RoundStore:
+    """The catalog rules that do not depend on storage, written once for
+    both backends: the derived seen table, whole-table and
+    latest-per-key reads, compaction and resume cleanup. A backend
+    supplies the storage primitives:
+
+    - ``_rounds(table)``: the committed rounds of a stored table;
+    - ``_scan(table, up_to_round, after)``: the rows of the rounds in
+      (after, up_to_round], with their round in an ``r`` column (None
+      when there is nothing to read);
+    - ``_read_round(table, round_id, schema)``: one round's rows;
+    - ``_write_round(df, table, round_id)``: replace one round's rows;
+    - ``has_round`` and ``write_round_local``;
+    - ``_swap(df, table, up_to, rounds)``: stage ``df`` and replace the
+      rounds <= ``up_to`` with it as round ``up_to``, crash-safe;
+    - ``_drop_after(table, keep)``: drop the rounds after ``keep``;
+    - ``drop_table`` and ``destroy``."""
+
     TABLES = ("frontier", "seen", "scheduled", "documents", "products", "lineage", "mentions", "page_stats", "seen_bloom", "doc_dedup_state", "frontier_q", "frontier_cursor")
+    # frontier/round=k+1 is written BY round k (likewise the
+    # delta-frontier queue/cursor deltas), so resume keeps round
+    # committed+1 of these; everything else beyond the committed round
+    # is partial output
+    NEXT_ROUND_TABLES = ("frontier", "frontier_q", "frontier_cursor")
 
     # ``seen`` is a DERIVED table: a round's seen slice is exactly the
     # url projection of that round's scheduled slice (the driver marks
@@ -85,10 +122,152 @@ class Catalog:
     # write happens at all — one fewer Spark job per round, which is the
     # dominant cost of a small budgeted round (VERDICT r4 item 1:
     # per-round fixed overhead is the budgeted-mode scale killer).
-    # Physical seen dirs exist only as COMPACTION outputs: the slim
+    # Physical seen rounds exist only as COMPACTION outputs: the slim
     # (url, round) merge of everything at-or-below the boundary. Reads
-    # stitch [physical seen dirs] ∪ [scheduled dirs past the boundary,
-    # projected via the fetch_round data column].
+    # stitch [physical seen rounds] ∪ [scheduled rounds past the
+    # boundary, projected via the fetch_round data column].
+
+    def write_round(self, df: DataFrame, table: str, round_id: int) -> None:
+        """Write ``df`` as round ``round_id`` of ``table``, replacing
+        that round (a rerun of a round is idempotent)."""
+        if table == "scheduled" and "fetch_round" not in df.columns:
+            # the derived-seen contract depends on this data column
+            # (_seen_projection); a scheduled slice written for round k
+            # was by definition fetched in round k, so stamp it here
+            # rather than trusting every caller (ADVICE r5)
+            df = df.withColumn("fetch_round", F.lit(round_id))
+        self._write_round(df, table, round_id)
+
+    def read_round(self, table: str, round_id: int, schema=None) -> DataFrame:
+        if table == "seen" and not self.has_round("seen", round_id):
+            # derived: this round's scheduled slice, projected (the scan
+            # is column-pruned to url + fetch_round)
+            return _seen_projection(self.read_round("scheduled", round_id))
+        return self._read_round(table, round_id, schema)
+
+    def committed_rounds(self, table: str) -> list[int]:
+        if table == "seen":
+            phys = self._rounds("seen")
+            base = max(phys, default=-1)
+            return sorted(
+                set(phys) | {r for r in self._rounds("scheduled") if r > base}
+            )
+        return self._rounds(table)
+
+    def read_all(self, table: str, up_to_round: int | None = None) -> DataFrame | None:
+        if table == "seen":
+            return self._read_seen(up_to_round)
+        df = self._scan(table, up_to_round)
+        return None if df is None else df.drop("r")
+
+    def _read_seen(self, up_to_round: int | None) -> DataFrame | None:
+        phys = [
+            r for r in self._rounds("seen")
+            if up_to_round is None or r <= up_to_round
+        ]
+        sched = self._scan("scheduled", up_to_round, after=max(phys, default=-1))
+        parts = []
+        if phys:
+            parts.append(self._scan("seen", up_to_round).drop("r"))
+        if sched is not None:
+            parts.append(_seen_projection(sched.drop("r")))
+        if not parts:
+            return None
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def read_all_with_round(
+        self, table: str, up_to_round: int | None = None
+    ) -> DataFrame | None:
+        """Like read_all but keeps the ``r`` column (which round each row
+        was written in)."""
+        if table == "seen":
+            # committed_rounds("seen") advertises scheduled-DERIVED rounds
+            # with no physical seen round — a per-round read of them
+            # would raise (parquet) or silently miss rows (Iceberg).
+            # No caller needs per-round seen rows; fail loudly (ADVICE r5).
+            raise NotImplementedError(
+                "read_all_with_round('seen'): seen is derived from the "
+                "scheduled table past the last compaction boundary — use "
+                "read_all('seen') (rows carry their fetch round in the "
+                "'round' data column)"
+            )
+        return self._scan(table, up_to_round)
+
+    def read_latest(
+        self, table: str, keys: list[str], up_to_round: int | None = None
+    ) -> DataFrame | None:
+        """The live state of a per-round delta table: each round writes
+        only the keys it changed (S7's touched-rows-only MERGE shape), so
+        the state is the newest row per ``keys`` across committed
+        rounds."""
+        df = self.read_all_with_round(table, up_to_round)
+        if df is None:
+            return None
+        return _first_per_key(df, keys, F.col("r").desc()).drop("r")
+
+    def read_bloom(self, up_to_round: int | None = None) -> DataFrame | None:
+        """Current bloom filter state: rounds write only their TOUCHED
+        buckets (at 10^10 URLs the full-state rewrite per round is the
+        first scale killer), so the live state is the latest row per
+        bucket."""
+        return self.read_latest("seen_bloom", ["bucket_id"], up_to_round)
+
+    def compact(
+        self,
+        table: str,
+        up_to: int,
+        dedup_keys: list[str] | None = None,
+        transform=None,
+    ) -> bool:
+        """MERGE-equivalent compaction (reference upsert-union,
+        storage.py:140-186 / SURVEY S7+J5): rewrite every committed round
+        <= ``up_to`` into the single round ``up_to``, keep-first deduped
+        on ``dedup_keys`` (rows keep their ``round`` DATA column, so
+        row-level lineage survives; round-level time-travel below
+        ``up_to`` is traded away — the Iceberg snapshot-expiry analogue).
+        ``transform`` (DataFrame -> DataFrame) lets the caller drop dead
+        rows during the rewrite and keep its file layout (delta-frontier
+        consumed-row reclaim, band-sorted). The backend's ``_swap`` makes
+        the rewrite crash-safe."""
+        rounds = [r for r in self.committed_rounds(table) if r <= up_to]
+        if len(rounds) <= 1:
+            return False
+        df = self.read_all(table, up_to_round=up_to)
+        if dedup_keys:
+            df = _first_per_key(df, dedup_keys, F.col("round").asc())
+        if transform is not None:
+            df = transform(df)
+        self._swap(df, table, up_to, rounds)
+        return True
+
+    def compact_latest(self, table: str, up_to: int, key_cols: list[str]) -> bool:
+        """Compaction for latest-row-per-key delta tables (seen_bloom,
+        frontier_cursor): keep only the NEWEST row per key — the
+        reader's latest-per-key reconstruction is unchanged, just over
+        one round. The whole-table rows carry no round to order by, so
+        the transform reads the latest rows itself."""
+        return self.compact(
+            table, up_to,
+            transform=lambda _: self.read_latest(table, key_cols, up_to),
+        )
+
+    def max_committed_round(self) -> int | None:
+        """Resume point: lineage is written last per round (commit marker)."""
+        rounds = self.committed_rounds("lineage")
+        return max(rounds) if rounds else None
+
+    def drop_rounds_after(self, round_id: int) -> None:
+        """Discard partial state from a crashed round (called on resume)."""
+        for table in self.TABLES:
+            keep = round_id + 1 if table in self.NEXT_ROUND_TABLES else round_id
+            self._drop_after(table, keep)
+
+
+class Catalog(RoundStore):
+    """Parquet round dirs: ``{base}/{table}/r={k}/*.parquet``."""
 
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
@@ -128,17 +307,11 @@ class Catalog:
             d = os.path.join(d, f"r={round_id}")
         return d
 
-    def write_round(self, df: DataFrame, table: str, round_id: int) -> None:
-        """Write ``df`` as the files of one round dir, replacing it (a
-        rerun of a round is idempotent). The dir has no subdirectories:
-        a layout a reader relies on (frontier_q's band-sorted files) is
-        the caller's partitioning and sort of ``df``."""
-        if table == "scheduled" and "fetch_round" not in df.columns:
-            # the derived-seen contract depends on this data column
-            # (_seen_projection); a scheduled slice written for round k
-            # was by definition fetched in round k, so stamp it here
-            # rather than trusting every caller (ADVICE r5)
-            df = df.withColumn("fetch_round", F.lit(round_id))
+    def _write_round(self, df: DataFrame, table: str, round_id: int) -> None:
+        """The files of one round dir, replacing it. The dir has no
+        subdirectories: a layout a reader relies on (frontier_q's
+        band-sorted files) is the caller's partitioning and sort of
+        ``df``."""
         df.write.mode("overwrite").parquet(self._dir(table, round_id))
         self._remember(table, df.schema)
 
@@ -183,8 +356,8 @@ class Catalog:
         )
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema.fields}
         d = self._dir(table, round_id)
-        # dot-prefixed tmp name: _dir_rounds only recognizes "r=" dirs,
-        # so a crash between the _SUCCESS write and the swap leaves an
+        # dot-prefixed tmp name: _rounds only recognizes "r=" dirs, so a
+        # crash between the _SUCCESS write and the swap leaves an
         # ignored scratch dir (NOT a half-round that int() would choke
         # on), overwritten by the next attempt
         tmp = os.path.join(self._dir(table), f".local={round_id}.inprogress")
@@ -205,27 +378,13 @@ class Catalog:
         d = self._dir(table, round_id)
         return os.path.exists(os.path.join(d, "_SUCCESS"))
 
-    def read_round(self, table: str, round_id: int, schema=None) -> DataFrame:
-        if table == "seen" and not self.has_round("seen", round_id):
-            # derived: this round's scheduled slice, projected (the
-            # parquet scan is column-pruned to url + fetch_round)
-            return _seen_projection(self.read_round("scheduled", round_id))
+    def _read_round(self, table: str, round_id: int, schema) -> DataFrame:
         # delta tables that can legitimately be empty (frontier_q on a
         # discovery-free round) pass their declared schema, so the read
         # never depends on what an empty write left behind
         return self._reader(table, schema).parquet(self._dir(table, round_id))
 
-    def committed_rounds(self, table: str) -> list[int]:
-        if table == "seen":
-            phys = self._dir_rounds("seen")
-            base = max(phys, default=-1)
-            return sorted(
-                set(phys)
-                | {r for r in self._dir_rounds("scheduled") if r > base}
-            )
-        return self._dir_rounds(table)
-
-    def _dir_rounds(self, table: str) -> list[int]:
+    def _rounds(self, table: str) -> list[int]:
         d = self._dir(table)
         if not os.path.isdir(d):
             return []
@@ -237,75 +396,13 @@ class Catalog:
                 out.append(int(name.split("=", 1)[1]))
         return sorted(out)
 
-    def read_all(self, table: str, up_to_round: int | None = None) -> DataFrame | None:
-        if table == "seen":
-            return self._read_seen(up_to_round)
-        rounds = self.committed_rounds(table)
-        if up_to_round is not None:
-            rounds = [r for r in rounds if r <= up_to_round]
-        if not rounds:
-            return None
-        paths = [self._dir(table, r) for r in rounds]
-        df = (
-            self._reader(table)
-            .option("basePath", self._dir(table))
-            .parquet(*paths)
-        )
-        return df.drop("r")
-
-    def _read_seen(self, up_to_round: int | None) -> DataFrame | None:
-        phys = self._dir_rounds("seen")
-        if up_to_round is not None:
-            phys = [r for r in phys if r <= up_to_round]
-        base = max(phys, default=-1)
-        sched = [
-            r
-            for r in self._dir_rounds("scheduled")
-            if r > base and (up_to_round is None or r <= up_to_round)
-        ]
-        parts = []
-        if phys:
-            paths = [self._dir("seen", r) for r in phys]
-            parts.append(
-                self.spark.read.option("basePath", self._dir("seen"))
-                .parquet(*paths)
-                .drop("r")
-            )
-        if sched:
-            paths = [self._dir("scheduled", r) for r in sched]
-            df = (
-                self._reader("scheduled")
-                .option("basePath", self._dir("scheduled"))
-                .parquet(*paths)
-                .drop("r")
-            )
-            parts.append(_seen_projection(df))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def read_all_with_round(
-        self, table: str, up_to_round: int | None = None
+    def _scan(
+        self, table: str, up_to_round: int | None = None, after: int = -1
     ) -> DataFrame | None:
-        """Like read_all but keeps the ``r`` partition column (which round
-        directory each row came from)."""
-        if table == "seen":
-            # committed_rounds("seen") advertises scheduled-DERIVED rounds
-            # with no physical seen/r=N dir — building paths to them here
-            # would raise (parquet) or silently miss rows (Iceberg).
-            # No caller needs per-dir seen rows; fail loudly (ADVICE r5).
-            raise NotImplementedError(
-                "read_all_with_round('seen'): seen is derived from the "
-                "scheduled table past the last compaction boundary — use "
-                "read_all('seen') (rows carry their fetch round in the "
-                "'round' data column)"
-            )
-        rounds = self.committed_rounds(table)
-        if up_to_round is not None:
-            rounds = [r for r in rounds if r <= up_to_round]
+        rounds = [
+            r for r in self._rounds(table)
+            if r > after and (up_to_round is None or r <= up_to_round)
+        ]
         if not rounds:
             return None
         paths = [self._dir(table, r) for r in rounds]
@@ -315,80 +412,14 @@ class Catalog:
             .parquet(*paths)
         )
 
-    def read_bloom(self, up_to_round: int | None = None) -> DataFrame | None:
-        """Current bloom filter state: rounds write only their TOUCHED
-        buckets (S7's touched-rows-only MERGE shape — at 10^10 URLs the
-        full-state rewrite per round is the first scale killer), so the
-        live state is the latest row per bucket across committed rounds."""
-        df = self.read_all_with_round("seen_bloom", up_to_round)
-        if df is None:
-            return None
-        w = Window.partitionBy("bucket_id").orderBy(F.col("r").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "r")
-        )
-
-    def compact(
-        self,
-        table: str,
-        up_to: int,
-        dedup_keys: list[str] | None = None,
-        transform=None,
-    ) -> bool:
-        """MERGE-equivalent compaction (reference upsert-union,
-        storage.py:140-186 / SURVEY S7+J5): rewrite every committed round
-        directory <= ``up_to`` into the single ``r=up_to`` directory,
-        keep-first deduped on ``dedup_keys`` (rows keep their ``round``
-        DATA column, so row-level lineage survives; directory-level
-        time-travel below ``up_to`` is traded away — the Iceberg
-        snapshot-expiry analogue). ``transform`` (DataFrame -> DataFrame)
-        lets the caller drop dead rows during the rewrite and keep its
-        file layout (delta-frontier consumed-row reclaim, band-sorted).
-        Crash-safe: the merged data lands in a committed .compact tmp dir
-        first and ``__init__`` finishes any interrupted swap."""
-        rounds = [r for r in self.committed_rounds(table) if r <= up_to]
-        if len(rounds) <= 1:
-            return False
-        df = self.read_all(table, up_to_round=up_to)
-        if dedup_keys:
-            w = Window.partitionBy(*dedup_keys).orderBy(F.col("round").asc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if transform is not None:
-            df = transform(df)
-        tmp = self._dir(table, None) + f"/.compact={up_to}"
+    def _swap(self, df: DataFrame, table: str, up_to: int, rounds: list[int]) -> None:
+        """The merged data lands in a committed .compact tmp dir first
+        and ``__init__`` finishes any interrupted swap."""
+        tmp = self._dir(table) + f"/.compact={up_to}"
         df.write.mode("overwrite").parquet(tmp)
         for r in rounds:
             shutil.rmtree(self._dir(table, r), ignore_errors=True)
         os.rename(tmp, self._dir(table, up_to))
-        return True
-
-    def compact_latest(self, table: str, up_to: int, key_cols: list[str]) -> bool:
-        """Compaction for latest-row-per-key delta tables (frontier_cursor;
-        the bloom state is the same shape): rewrite rounds <= ``up_to``
-        keeping only the NEWEST row per key — the reader's
-        latest-per-key reconstruction is unchanged, just over one dir."""
-        rounds = [r for r in self.committed_rounds(table) if r <= up_to]
-        if len(rounds) <= 1:
-            return False
-        df = self.read_all_with_round(table, up_to_round=up_to)
-        w = Window.partitionBy(*key_cols).orderBy(F.col("r").desc())
-        df = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "r")
-        )
-        tmp = self._dir(table, None) + f"/.compact={up_to}"
-        df.write.mode("overwrite").parquet(tmp)
-        for r in rounds:
-            shutil.rmtree(self._dir(table, r), ignore_errors=True)
-        os.rename(tmp, self._dir(table, up_to))
-        return True
 
     def _finish_pending_compactions(self) -> None:
         """Recovery for a crash between the round-dir removals and the
@@ -405,31 +436,15 @@ class Catalog:
                     shutil.rmtree(tmp, ignore_errors=True)
                     continue
                 up_to = int(name.split("=", 1)[1])
-                for r in self.committed_rounds(table):
+                for r in self._rounds(table):
                     if r <= up_to:
                         shutil.rmtree(self._dir(table, r), ignore_errors=True)
                 os.rename(tmp, self._dir(table, up_to))
 
-    def max_committed_round(self) -> int | None:
-        """Resume point: lineage is written last per round (commit marker)."""
-        rounds = self.committed_rounds("lineage")
-        return max(rounds) if rounds else None
-
-    def drop_rounds_after(self, round_id: int) -> None:
-        """Discard partial state from a crashed round (called on resume)."""
-        for table in self.TABLES:
-            for r in self.committed_rounds(table):
-                if self._should_drop(table, r, round_id):
-                    shutil.rmtree(self._dir(table, r), ignore_errors=True)
-
-    @staticmethod
-    def _should_drop(table: str, r: int, committed: int) -> bool:
-        # frontier/round=k+1 is written BY round k, keep it (likewise the
-        # delta-frontier queue/cursor deltas); everything else beyond the
-        # committed round is partial output
-        if table in ("frontier", "frontier_q", "frontier_cursor"):
-            return r > committed + 1
-        return r > committed
+    def _drop_after(self, table: str, keep: int) -> None:
+        for r in self._rounds(table):
+            if r > keep:
+                shutil.rmtree(self._dir(table, r), ignore_errors=True)
 
     def drop_table(self, table: str) -> None:
         """Remove EVERY round of one table (used when persisted state is
@@ -453,10 +468,12 @@ def iceberg_available(spark: SparkSession, catalog_name: str = "local") -> bool:
         return False
 
 
-class IcebergCatalog:
-    """The SAME catalog interface over real Iceberg tables —
-    ``writeTo(...).append()`` snapshots + ``MERGE INTO`` for the S7
-    upsert-union (reference: worker/src/db/storage.py:140-186).
+
+
+class IcebergCatalog(RoundStore):
+    """The SAME catalog over real Iceberg tables: ``writeTo`` snapshots,
+    with the S7 upsert-union (reference: worker/src/db/storage.py:140-186)
+    done by the shared keep-first compaction.
 
     Feature-flagged: requires the iceberg-spark-runtime jar and a
     configured catalog (``spark.sql.catalog.<name>`` +
@@ -465,11 +482,13 @@ class IcebergCatalog:
     and the parquet ``Catalog`` above is the documented stand-in with
     identical semantics. The code path exists so that pointing the
     engine at a real lakehouse is a constructor swap, not a rewrite:
-    round-keyed idempotent redo = DELETE round partition + append;
-    commit marker = the lineage append (atomic in Iceberg); compaction =
-    keep-first rewrite staged through a scratch table + ONE atomic
-    ``overwrite(_r <= up_to)`` snapshot (crash-safe: see
-    tests/test_iceberg_gate.py::test_compact_is_staged_single_overwrite,
+    every rule above storage is ``RoundStore``'s, shared with
+    ``Catalog``; this class supplies the storage primitives.
+    Round-keyed idempotent redo = dynamic overwrite of the round's
+    ``_r`` partition; commit marker = the lineage write (atomic in
+    Iceberg); compaction = the merged rows staged through a scratch
+    table + ONE atomic ``overwrite(_r <= up_to)`` snapshot (crash-safe:
+    see tests/test_iceberg_gate.py::test_compact_is_staged_single_overwrite,
     which pins the statement order); time-travel by round = the ``_r``
     partition column, or Iceberg's own snapshot history.
 
@@ -512,11 +531,9 @@ class IcebergCatalog:
         )
         self._sweep_compaction_scratch()
 
-    TABLES = Catalog.TABLES
-
     def _sweep_compaction_scratch(self) -> None:
         """Recovery mirror of the parquet Catalog's
-        _finish_pending_compactions: a crash between compact()'s scratch
+        _finish_pending_compactions: a crash between _swap's scratch
         create() and its final DROP leaks a tmp_compact_<table> table
         that no other path cleans up (it is not in TABLES). The scratch
         is only ever an uncommitted intermediate — the target table is
@@ -533,7 +550,7 @@ class IcebergCatalog:
     def _exists(self, table: str) -> bool:
         return self.spark.catalog.tableExists(self._tbl(table))
 
-    def write_round(self, df: DataFrame, table: str, round_id: int) -> None:
+    def _write_round(self, df: DataFrame, table: str, round_id: int) -> None:
         t = self._tbl(table)
         df = df.withColumn("_r", F.lit(round_id))
         if self._exists(table):
@@ -553,17 +570,6 @@ class IcebergCatalog:
             self.spark.createDataFrame(rows, schema=schema), table, round_id
         )
 
-    def merge_upsert(self, df: DataFrame, table: str, keys: list[str]) -> None:
-        """The literal S7 MERGE shape: insert rows whose key is absent
-        (reference set-union upsert, storage.py:158-162)."""
-        t = self._tbl(table)
-        df.createOrReplaceTempView("_updates")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        self.spark.sql(
-            f"MERGE INTO {t} t USING _updates s ON {on} "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-
     def has_round(self, table: str, round_id: int) -> bool:
         if not self._exists(table):
             return False
@@ -575,28 +581,15 @@ class IcebergCatalog:
             > 0
         )
 
-    def read_round(self, table: str, round_id: int, schema=None) -> DataFrame:
+    def _read_round(self, table: str, round_id: int, schema) -> DataFrame:
         # schema is a no-op here: Iceberg tables always carry theirs
-        if table == "seen" and not self.has_round("seen", round_id):
-            # derived from scheduled (see parquet Catalog: the seen
-            # table is only materialized by compaction)
-            return _seen_projection(self.read_round("scheduled", round_id))
         return (
             self.spark.table(self._tbl(table))
             .where(F.col("_r") == round_id)
             .drop("_r")
         )
 
-    def committed_rounds(self, table: str) -> list[int]:
-        if table == "seen":
-            phys = self._tbl_rounds("seen")
-            base = max(phys, default=-1)
-            return sorted(
-                set(phys) | {r for r in self._tbl_rounds("scheduled") if r > base}
-            )
-        return self._tbl_rounds(table)
-
-    def _tbl_rounds(self, table: str) -> list[int]:
+    def _rounds(self, table: str) -> list[int]:
         if not self._exists(table):
             return []
         return sorted(
@@ -607,91 +600,21 @@ class IcebergCatalog:
             .collect()
         )
 
-    def read_all(self, table: str, up_to_round: int | None = None) -> DataFrame | None:
-        if table == "seen":
-            return self._read_seen(up_to_round)
-        if not self._exists(table):
-            return None
-        df = self.spark.table(self._tbl(table))
-        if up_to_round is not None:
-            df = df.where(F.col("_r") <= up_to_round)
-        return df.drop("_r")
-
-    def _read_seen(self, up_to_round: int | None) -> DataFrame | None:
-        phys = self._tbl_rounds("seen")
-        if up_to_round is not None:
-            phys = [r for r in phys if r <= up_to_round]
-        base = max(phys, default=-1)
-        parts = []
-        if phys:
-            parts.append(
-                self.spark.table(self._tbl("seen"))
-                .where(F.col("_r") <= base)
-                .drop("_r")
-            )
-        if self._exists("scheduled"):
-            sched = self.spark.table(self._tbl("scheduled")).where(
-                F.col("_r") > base
-            )
-            if up_to_round is not None:
-                sched = sched.where(F.col("_r") <= up_to_round)
-            parts.append(_seen_projection(sched.drop("_r")))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def read_all_with_round(
-        self, table: str, up_to_round: int | None = None
+    def _scan(
+        self, table: str, up_to_round: int | None = None, after: int = -1
     ) -> DataFrame | None:
-        if table == "seen":
-            # same trap as the parquet Catalog: committed_rounds("seen")
-            # includes scheduled-derived rounds the physical table lacks
-            raise NotImplementedError(
-                "read_all_with_round('seen'): seen is derived from the "
-                "scheduled table past the last compaction boundary — use "
-                "read_all('seen')"
-            )
         if not self._exists(table):
             return None
-        df = self.spark.table(self._tbl(table)).withColumnRenamed("_r", "r")
+        df = (
+            self.spark.table(self._tbl(table))
+            .withColumnRenamed("_r", "r")
+            .where(F.col("r") > after)
+        )
         if up_to_round is not None:
             df = df.where(F.col("r") <= up_to_round)
         return df
 
-    def read_bloom(self, up_to_round: int | None = None) -> DataFrame | None:
-        df = self.read_all_with_round("seen_bloom", up_to_round)
-        if df is None:
-            return None
-        w = Window.partitionBy("bucket_id").orderBy(F.col("r").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "r")
-        )
-
-    def compact(
-        self,
-        table: str,
-        up_to: int,
-        dedup_keys: list[str] | None = None,
-        transform=None,
-    ) -> bool:
-        rounds = [r for r in self.committed_rounds(table) if r <= up_to]
-        if len(rounds) <= 1:
-            return False
-        df = self.read_all(table, up_to_round=up_to)
-        if dedup_keys:
-            w = Window.partitionBy(*dedup_keys).orderBy(F.col("round").asc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if transform is not None:
-            df = transform(df)
+    def _swap(self, df: DataFrame, table: str, up_to: int, rounds: list[int]) -> None:
         # Crash-safe two-step mirroring the parquet Catalog's .compact
         # marker: (1) stage the merged rows in a scratch table — a crash
         # here leaves the target untouched (the scratch is dropped and
@@ -715,46 +638,10 @@ class IcebergCatalog:
                 F.col("_r")
             ).create()
         self.spark.sql(f"DROP TABLE IF EXISTS {scratch}")
-        return True
 
-    def compact_latest(self, table: str, up_to: int, key_cols: list[str]) -> bool:
-        """Latest-row-per-key compaction (see parquet Catalog) via the
-        same staged scratch-table + single atomic overwrite shape."""
-        rounds = [r for r in self.committed_rounds(table) if r <= up_to]
-        if len(rounds) <= 1:
-            return False
-        df = self.read_all_with_round(table, up_to_round=up_to)
-        w = Window.partitionBy(*key_cols).orderBy(F.col("r").desc())
-        df = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "r")
-        )
-        scratch = self._tbl(f"tmp_compact_{table}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {scratch}")
-        df.withColumn("_r", F.lit(up_to)).writeTo(scratch).create()
-        self.spark.table(scratch).writeTo(self._tbl(table)).overwrite(
-            F.col("_r") <= up_to
-        )
-        self.spark.sql(f"DROP TABLE IF EXISTS {scratch}")
-        return True
-
-    def max_committed_round(self) -> int | None:
-        rounds = self.committed_rounds("lineage")
-        return max(rounds) if rounds else None
-
-    def drop_rounds_after(self, round_id: int) -> None:
-        for table in self.TABLES:
-            if not self._exists(table):
-                continue
-            keep = (
-                round_id + 1
-                if table in ("frontier", "frontier_q", "frontier_cursor")
-                else round_id
-            )
-            self.spark.sql(
-                f"DELETE FROM {self._tbl(table)} WHERE _r > {keep}"
-            )
+    def _drop_after(self, table: str, keep: int) -> None:
+        if self._exists(table):
+            self.spark.sql(f"DELETE FROM {self._tbl(table)} WHERE _r > {keep}")
 
     def drop_table(self, table: str) -> None:
         if self._exists(table):
@@ -763,5 +650,4 @@ class IcebergCatalog:
     def destroy(self) -> None:
         self._sweep_compaction_scratch()
         for table in self.TABLES:
-            if self._exists(table):
-                self.spark.sql(f"DROP TABLE {self._tbl(table)}")
+            self.drop_table(table)

@@ -167,15 +167,7 @@ def band_dirs(catalog) -> list[str]:
 
 def read_cursor(catalog, up_to_round: int) -> DataFrame | None:
     """Live cursor state = latest row per host across committed deltas."""
-    df = catalog.read_all_with_round("frontier_cursor", up_to_round)
-    if df is None:
-        return None
-    w = Window.partitionBy("host").orderBy(F.col("r").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "r")
-    )
+    return catalog.read_latest("frontier_cursor", ["host"], up_to_round)
 
 
 @dataclass
@@ -254,13 +246,12 @@ def read_candidates(
     the ``band IN (...)`` filter is pushed into the Parquet scan, which
     skips the row groups and pages of every other band; None reads every
     band. Defining the frame runs no Spark job."""
-    q = catalog.read_all_with_round("frontier_q", up_to_round=round_id)
+    q = catalog.read_all("frontier_q", up_to_round=round_id)
     if bands is not None:
         q = q.where(F.col("band").isin(bands))
     pend = cursor.where(F.col("consumed") < F.col("next_pos"))
     return (
-        q.drop("r")
-        .join(pend, "host")
+        q.join(pend, "host")
         .where(
             (F.col("pos") >= F.col("consumed"))
             & (F.col("pos") < F.col("consumed") + F.lit(budget))
@@ -354,11 +345,10 @@ def compact(catalog, up_to: int) -> None:
     rounds still skip by band. O(pending), run once the round dirs
     exceed ``QUEUE_COMPACT_DIRS`` — the only backlog-sized work in delta
     mode, and optional hygiene, not a per-round stage."""
+    catalog.compact_latest("frontier_cursor", up_to, ["host"])
     cursor = read_cursor(catalog, up_to)
     if cursor is None:
         return
-    catalog.compact_latest("frontier_cursor", up_to, ["host"])
-    cursor = read_cursor(catalog, up_to)
 
     def live_rows(q: DataFrame) -> DataFrame:
         return _banded(

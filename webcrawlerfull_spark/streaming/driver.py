@@ -564,7 +564,7 @@ def _run_rounds(
                 # round persists only the buckets it actually updated
                 new_filters = update_filters(
                     scheduled.select("url"), seen_filters, cfg.bloom_buckets,
-                    cfg.bloom_capacity_per_bucket, touched_only=True,
+                    cfg.bloom_capacity_per_bucket,
                 )
                 chains.append(pool.submit(
                     catalog.write_round, new_filters, "seen_bloom", round_id
