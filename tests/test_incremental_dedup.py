@@ -104,3 +104,40 @@ def test_incremental_no_state_round_zero(spark):
     )
     got = _verdicts(_delta(r0, None))
     assert got == {1: "kept", 2: "exact_dup", 3: "kept"}
+
+
+def test_delta_plan_reads_signatures_once(spark, tmp_path):
+    """The stacked delta is one chain over its signature frame: the
+    executed plan runs the signature kernel (one MapInPandas) once and
+    caches nothing, so the round's text is scanned once without a
+    persist."""
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id string, text string")
+
+    prior = docs([
+        ("a", "the quick brown fox jumps over the lazy dog every day"),
+        ("b", "spark shuffles partition data across the cluster nodes"),
+    ])
+    TD.incremental_dedup_delta(
+        prior, None, k=16, bands=4, family="fast"
+    ).write.parquet(str(tmp_path / "state"))
+    state = spark.read.parquet(str(tmp_path / "state"))
+    new = docs([
+        ("c", "the quick brown fox jumps over the lazy dog every day"),
+        ("d", "the quick brown fox jumps over the lazy dog every"),
+        ("e", "a totally unrelated document about gardening and tulips"),
+        ("f", "a totally unrelated document about gardening and tulips"),
+    ])
+    sigs = TD.dedup_signatures(new, k=16, bands=4, family="fast", kernel=True)
+    delta = TD.incremental_dedup_delta(
+        new, state, k=16, bands=4, sigs=sigs, family="fast"
+    )
+    got = {
+        r["doc_id"]: r["status"]
+        for r in delta.where(F.col("kind") == "verdict").collect()
+    }
+    assert got == {"c": "exact_dup", "d": "near_dup", "e": "kept", "f": "exact_dup"}
+    # the adaptive plan's final physical plan, without its initial plan
+    text = delta._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert text.count("MapInPandas") == 1, text
+    assert "InMemoryRelation" not in text and "InMemoryTableScan" not in text

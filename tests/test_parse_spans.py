@@ -78,11 +78,14 @@ def test_external_links_never_pagination(spark, world):
     assert spans[0]["kind"] == "link"
 
 
-def test_lazy_layout_spans_view_equals_eager(spark, world):
-    """The crawl's lazy documents layout (primitive arrays + slim
-    link_spans) must reconstruct, via spans_view, exactly the spans the
-    eager path materializes — and the pre-extracted link_spans must equal
-    the eager derivation."""
+def test_crawl_layout_spans_view_equals_oracle(spark, world):
+    """The crawl's own fetch+parse path (the mapInArrow kernel writing
+    primitive arrays + slim link_spans) must reconstruct, via
+    spans_view, exactly the oracle's spans per doc, and its link_spans
+    must be the oracle's anchors — also after a round-trip through
+    parquet, the stored documents layout."""
+    import tempfile
+
     from webcrawlerfull_spark.operators.parse_spans import (
         fetch_and_parse,
         spans_view,
@@ -103,28 +106,28 @@ def test_lazy_layout_spans_view_equals_eager(spark, world):
             for i, s in enumerate(seeds)
         ]
     )
-    eager = fetch_and_parse(frontier, world, extra_cols=["queue_pos"])
-    lazy = fetch_and_parse(
-        frontier, world, extra_cols=["queue_pos"], materialize_spans=False
-    )
+    expected = {}
+    for s in seeds:
+        spans = rp.parse_spans(world.fetch(s), s, urlparse(s).netloc)
+        links = [
+            (x["kind"], x["media_ref"], x["offset"])
+            for x in spans
+            if x["kind"] not in ("text", "media")
+        ]
+        assert links
+        expected[s] = (spans, links)
 
     def snap(df):
         return {
             r["doc_id"]: (
-                [tuple(s) for s in (r["spans"] or [])],
-                [tuple(s) for s in (r["link_spans"] or [])],
-                r["status"],
+                [x.asDict() for x in r["spans"]],
+                [tuple(x) for x in r["link_spans"]],
             )
-            for r in df.select("doc_id", "spans", "link_spans", "status").collect()
+            for r in spans_view(df).select("doc_id", "spans", "link_spans").collect()
         }
 
-    got_eager = snap(eager)
-    got_lazy = snap(spans_view(lazy))
-    assert got_eager == got_lazy and len(got_eager) == len(seeds)
-    # round-trips through parquet (the stored layout) unchanged
-    import tempfile
-
+    docs = fetch_and_parse(frontier, world)
+    assert snap(docs) == expected
     with tempfile.TemporaryDirectory() as tmp:
-        lazy.write.parquet(tmp + "/docs")
-        stored = spark.read.parquet(tmp + "/docs")
-        assert snap(spans_view(stored)) == got_eager
+        docs.write.parquet(tmp + "/docs")
+        assert snap(spark.read.parquet(tmp + "/docs")) == expected

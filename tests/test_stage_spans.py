@@ -30,8 +30,8 @@ def test_budgeted_crawl_reports_every_stage_span(spark, tmp_path):
                   "attribution", "frontier", "delta_frontier"):
         assert layer in layers, layer
     names = [(s.layer, s.name) for s in tracer.spans]
-    # the signature pass is reached only through driver.dedup_signatures
-    assert names.count(("textdedup", "signatures")) == 2
+    # the signature kernel runs inside the round's one doc-dedup write
+    assert names.count(("textdedup", "doc_dedup_state")) == 2
     assert names.count(("delta_frontier", "backlog_and_bands")) == 2
     # one commit marker per round
     assert sum(s.name.endswith(":lineage") for s in tracer.spans) == 2

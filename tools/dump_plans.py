@@ -43,28 +43,25 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     world = World(seed=42, n_hosts=4, base_pages=40)
     frontier = seed_frontier(spark, world.seeds())
-    pages = fetch_and_parse(frontier, world, extra_cols=["queue_pos"])
+    pages = fetch_and_parse(frontier, world)
     mentions, page_stats, _arrays = run_cascade(pages)
     seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
     nf = build_next_frontier(pages, frontier, seen, 3, 0)
     sched, _ = politeness_schedule(frontier, budget=5, salt_partitions=8)
 
     # the crawl driver's per-round doc-dedup write (stage 2b): delta over
-    # a persisted signature frame vs a one-round prior state
+    # the signature kernel's frame vs a one-round prior state
     from webcrawlerfull_spark.operators.textdedup import (
         dedup_signatures,
         incremental_dedup_delta,
     )
 
-    # the driver's stage-2b shape: lazy-spans documents (primitive
-    # kinds/texts/refs arrays, materialize_spans=False)
-    pages_lazy = fetch_and_parse(
-        frontier, world, extra_cols=["queue_pos"], materialize_spans=False
-    )
-    ok_docs = pages_lazy.where(F.col("status") == "ok").select(
+    ok_docs = pages.where(F.col("status") == "ok").select(
         "doc_id", F.concat_ws(" ", "texts").alias("_text")
     )
-    dd_sigs = dedup_signatures(ok_docs, "doc_id", "_text", 16, 4).persist()
+    dd_sigs = dedup_signatures(
+        ok_docs, "doc_id", "_text", 16, 4, family="fast", kernel=True
+    )
     dd_state = spark.createDataFrame(
         [("fp", "", "", "x" * 32, -1, ""), ("band", "", "", "", 0, "y" * 32)],
         "kind string, doc_id string, status string, fp string, "
@@ -72,14 +69,14 @@ def main() -> None:
     )
     dd_delta = incremental_dedup_delta(
         ok_docs, dd_state, id_col="doc_id", text_col="_text", k=16, bands=4,
-        sigs=dd_sigs,
+        sigs=dd_sigs, family="fast",
     )
 
     sections = [
         (
             "cascade → mentions (per-page semantics, zero shuffle until explode)",
             mentions,
-            "Expect: mapInPandas (fetch+parse) → ONE Project with the array "
+            "Expect: mapInArrow (fetch+parse) → ONE Project with the array "
             "expressions → Generate (explode). No Exchange before the explode: "
             "per-page cascade/seqgen never shuffles.",
         ),
@@ -101,12 +98,15 @@ def main() -> None:
         (
             "crawl doc-dedup round delta (stage 2b, one write per round)",
             dd_delta,
-            "Expect: every branch of the three-way Union (verdicts / kept "
-            "fps / kept bands) reads the PERSISTED signature frame "
-            "(InMemoryTableScan) — the round's text is scanned ONCE to "
-            "build it; prior rounds contribute only fixed-width hash keys "
-            "(fp md5 / band md5) through semi/left joins. No text column "
-            "appears anywhere in this plan. The state-side joins show as "
+            "Expect: one signature node, one chain — a single MapInPandas "
+            "(the signature kernel, the plan's only read of the round's "
+            "text) feeds a window on _fp, the left join on the state "
+            "fingerprints, a Generate of slim band rows, the left join on "
+            "the state bands, one aggregate per doc and one Generate of "
+            "the output rows; the only Union adds the meta row. No "
+            "InMemoryTableScan: nothing is cached. Prior rounds contribute "
+            "only fixed-width hash keys (fp md5 / band md5). The "
+            "state-side joins show as "
             "static SortMergeJoin only because this demo's state is an "
             "ExistingRDD with unknown stats; under AdaptiveSparkPlan (and "
             "in the driver, where the state is a size-known parquet read) "

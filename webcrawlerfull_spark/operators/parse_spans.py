@@ -153,28 +153,28 @@ def parse_spans_udf(
     )
 
 
-def fetch_and_parse(
-    frontier: DataFrame,
-    world: World,
-    extra_cols: list[str] | None = None,
-    materialize_spans: bool = True,
-) -> DataFrame:
+def fetch_and_parse(frontier: DataFrame, world: World) -> DataFrame:
     """S1/S2+H1 — the fetch+parse stage over a scheduled frontier slice.
 
-    ``mapInPandas`` so fetch (deterministic synthetic, synthgen.World —
+    ``mapInArrow`` so fetch (deterministic synthetic, synthgen.World —
     replaces aiohttp, fetcher.py:227-269) and parse happen in one pass
     with no HTML ever shuffled. Input must carry
-    (url, host, domain, depth, priority, discovery_seq); ``extra_cols``
-    (e.g. queue_pos) pass straight through so no re-join is needed.
-    Failed fetches keep the row with status='failed' and null spans (the
-    reference marks them visited but parses nothing, tasks.py:600-602).
+    (url, host, domain, depth, priority, discovery_seq, queue_pos); they
+    pass straight through so no re-join is needed. Failed fetches keep
+    the row with status='failed' and null spans (the reference marks
+    them visited but parses nothing, tasks.py:600-602).
+
+    The output is the stored documents layout: the interleaved spans
+    stay as three primitive arrays (kinds, texts, refs) — parquet's
+    layout for array<struct> is the same shredded columns, but the JVM
+    skips building one struct per span before the write — plus the slim
+    ``link_spans``. ``spans_view()`` reconstructs the input_hint shape.
 
     ``host`` carries the crawl's domain_netloc (the SEED's netloc,
     tasks.py:407) — the reference classifies internal links against it,
     not against each page's own host.
     """
-    extra_cols = extra_cols or []
-    cols = ["url", "host", "domain", "depth", "priority", "discovery_seq"] + extra_cols
+    cols = ["url", "host", "domain", "depth", "priority", "discovery_seq", "queue_pos"]
     inp = frontier.select(*cols)
     raw_cols = cols + [
         "status", "doc_id", "kinds", "texts", "refs", "_lk", "_lr", "_lo",
@@ -264,17 +264,7 @@ def fetch_and_parse(
             ),
         ),
     )
-    with_links = raw.withColumn("link_spans", link_spans).drop(
-        "_lk", "_lr", "_lo"
-    )
-    if not materialize_spans:
-        # lazy layout (the crawl's hot path): the interleaved spans stay
-        # as three primitive arrays — parquet's layout for array<struct>
-        # is the same shredded columns, but the JVM skips building one
-        # struct per span before the write. spans_view() reconstructs the
-        # input_hint shape on read.
-        return with_links
-    return spans_view(with_links)
+    return raw.withColumn("link_spans", link_spans).drop("_lk", "_lr", "_lo")
 
 
 def spans_view(documents: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ strings per doc, not the documents themselves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webcrawlerfull_spark.functions.textstats import fingerprint, tokens
@@ -354,9 +354,8 @@ def dedup_signatures(
     incremental dedup path needs: the exact-dedup fingerprint plus the
     LSH band-hash array (empty for content-free docs, whose NULL MinHash
     signature carries no shingle evidence; empty for bands=0 exact-only
-    mode). The per-doc record is fixed-width (~16 B + 32 B × bands), so
-    callers that consume it from several branches persist THIS instead
-    of rescanning text.
+    mode). The per-doc record is fixed-width (~16 B + 32 B × bands);
+    ``incremental_dedup_delta`` reads it once and never the text.
 
     ``family`` picks the MinHash hash family: 'md5' (oracle-replicable,
     expensive — K md5s per shingle) or 'fast' (crc32 + universal
@@ -411,51 +410,51 @@ def _label_against_state(
     state_bands: DataFrame | None,
     id_col: str,
 ) -> DataFrame:
-    """The incremental-dedup verdict over a ``dedup_signatures`` frame:
-    adds ``_exact`` (fp in state, or a lower-id doc in this batch shares
-    it — keep-first) and ``_near`` (≥1 band shared with the state) to
-    each sig row. Hash-key joins only; text is never touched."""
-    reps = sigs.groupBy("_fp").agg(F.min(id_col).alias("_rep"))
-    labeled = sigs.join(reps, "_fp")
+    """The incremental-dedup verdict over a ``dedup_signatures`` frame,
+    one row per doc with a fingerprint: (id, ``_fp``, ``_exact`` (fp in
+    state, or a lower-id doc in this batch shares it — keep-first),
+    ``_near`` (≥1 band shared with the state), ``_blist`` (the doc's
+    (band_id, band_hash) structs; empty for exact dups)).
+
+    One linear chain that reads ``sigs`` once: a window for the
+    keep-first representative, a left join on the state fingerprints,
+    the non-exact docs' bands exploded into slim rows (never the whole
+    array) and left-joined to the state bands, then one group per doc.
+    Hash-key joins only; text is never touched."""
+    labeled = sigs.where(F.col("_fp").isNotNull()).withColumn(
+        "_rep", F.min(id_col).over(Window.partitionBy("_fp"))
+    )
+    exact = F.col(id_col) != F.col("_rep")
     if state_fps is not None:
         labeled = labeled.join(
-            state_fps.select(
-                F.col("fp").alias("_fp"), F.lit(True).alias("_in_state")
-            ),
+            state_fps.select(F.col("fp").alias("_fp"), F.lit(True).alias("_in")),
             "_fp",
             "left",
         )
-    else:
-        labeled = labeled.withColumn("_in_state", F.lit(None).cast("boolean"))
-    is_exact = (F.col(id_col) != F.col("_rep")) | F.coalesce(
-        "_in_state", F.lit(False)
+        exact = exact | F.col("_in").isNotNull()
+    slim = labeled.withColumn("_exact", exact).select(
+        id_col,
+        "_fp",
+        "_exact",
+        F.posexplode_outer(F.when(~F.col("_exact"), F.col("_bands"))).alias(
+            "band_id", "band_hash"
+        ),
     )
-    labeled = labeled.withColumn("_exact", is_exact)
+    near = F.lit(False)
     if state_bands is not None:
-        sb = labeled.where(~F.col("_exact")).select(
-            F.col(id_col),
-            F.posexplode("_bands").alias("band_id", "band_hash"),
+        slim = slim.join(
+            state_bands.select("band_id", "band_hash", F.lit(True).alias("_hit")),
+            ["band_id", "band_hash"],
+            "left",
         )
-        near_ids = (
-            sb.join(state_bands, ["band_id", "band_hash"], "left_semi")
-            .select(F.col(id_col).alias("_nid"))
-            .distinct()
-            .withColumn("_near", F.lit(True))
-        )
-        labeled = labeled.join(
-            near_ids, labeled[id_col] == F.col("_nid"), "left"
-        ).drop("_nid")
-    else:
-        labeled = labeled.withColumn("_near", F.lit(None).cast("boolean"))
-    return labeled
-
-
-def _verdict_col():
-    return (
-        F.when(F.col("_exact"), F.lit("exact_dup"))
-        .when(F.coalesce("_near", F.lit(False)), F.lit("near_dup"))
-        .otherwise(F.lit("kept"))
-        .alias("status")
+        near = F.max(F.col("_hit").isNotNull())
+    return slim.groupBy(id_col, "_fp", "_exact").agg(
+        near.alias("_near"),
+        F.collect_list(
+            F.when(
+                F.col("band_hash").isNotNull(), F.struct("band_id", "band_hash")
+            )
+        ).alias("_blist"),
     )
 
 
@@ -543,66 +542,63 @@ def incremental_dedup_delta(
     any prior round's text — the MinHash analogue of the bloom
     seen-state.
 
-    The three row kinds all derive from ONE ``dedup_signatures`` frame;
-    the union references it from three branches, so callers should pass
-    a PERSISTED ``sigs`` (the crawl driver does) — otherwise each branch
-    re-scans the text for its MinHash. Scale shape: hash-key joins only,
-    prior text never rescanned; the state rows per round are O(kept docs
-    × bands), fixed-width."""
+    Every row derives from ONE read of the ``dedup_signatures`` frame
+    (``_label_against_state``): each doc emits its verdict row, plus its
+    fp row and band rows if kept, from one explode; the fp and band rows
+    are deduped, then the meta row is unioned. Scale shape: hash-key
+    joins only, prior text never rescanned; the state rows per round are
+    O(kept docs × bands), fixed-width."""
     state_fps, state_bands = split_dedup_state(state)
     if sigs is None:
         sigs = dedup_signatures(docs, id_col, text_col, k, bands, family)
     labeled = _label_against_state(
         sigs, state_fps, state_bands if bands > 0 else None, id_col
     )
-    verdicts = labeled.select(F.col(id_col), _verdict_col())
-    kept_sigs = labeled.where(
-        ~F.col("_exact") & ~F.coalesce("_near", F.lit(False))
-    )
-    s_int = F.lit(-1).cast("int")
-    v_rows = verdicts.select(
-        F.lit("verdict").alias("kind"),
-        # string, as the sentinel rows' '': a numeric id would make the
-        # union cast '' to a number and fail
-        F.col(id_col).cast("string").alias("doc_id"),
-        "status",
-        F.lit("").alias("fp"),
-        s_int.alias("band_id"),
-        F.lit("").alias("band_hash"),
-    )
-    fp_rows = kept_sigs.select(F.col("_fp").alias("fp")).distinct().select(
-        F.lit("fp").alias("kind"),
-        F.lit("").alias("doc_id"),
-        F.lit("").alias("status"),
-        "fp",
-        s_int.alias("band_id"),
-        F.lit("").alias("band_hash"),
-    )
-    band_rows = (
-        kept_sigs.select(F.posexplode("_bands").alias("band_id", "band_hash"))
-        .distinct()
-        .select(
-            F.lit("band").alias("kind"),
-            F.lit("").alias("doc_id"),
-            F.lit("").alias("status"),
-            F.lit("").alias("fp"),
-            F.col("band_id").cast("int").alias("band_id"),
-            "band_hash",
+    near = F.col("_near")
+    s_str, s_int = F.lit(""), F.lit(-1).cast("int")
+
+    def row(kind, doc_id=s_str, status=s_str, fp=s_str, band_id=s_int,
+            band_hash=s_str):
+        return F.struct(
+            F.lit(kind).alias("kind"),
+            doc_id.alias("doc_id"),
+            status.alias("status"),
+            fp.alias("fp"),
+            band_id.alias("band_id"),
+            band_hash.alias("band_hash"),
         )
+
+    verdict = row(
+        "verdict",
+        # string, as the sentinel rows' '': a numeric id would not stack
+        doc_id=F.col(id_col).cast("string"),
+        status=F.when(F.col("_exact"), F.lit("exact_dup"))
+        .when(near, F.lit("near_dup"))
+        .otherwise(F.lit("kept")),
+    )
+    kept_rows = F.concat(
+        F.array(verdict, row("fp", fp=F.col("_fp"))),
+        F.transform(
+            "_blist",
+            lambda b: row("band", band_id=b["band_id"], band_hash=b["band_hash"]),
+        ),
+    )
+    rows = F.when(~F.col("_exact") & ~near, kept_rows).otherwise(
+        F.array(verdict)
     )
     # one meta row per delta: the hash-scheme marker the crawl driver
     # validates on resume (the bloom HASH_SCHEME pattern — probing band
     # hashes written by a different family/k/bands silently misses
     # every near-dup)
-    spark = docs.sparkSession
-    meta_row = spark.createDataFrame(
+    meta_row = docs.sparkSession.createDataFrame(
         [("meta", "", dedup_scheme(k, bands, family), "", -1, "")],
         "kind string, doc_id string, status string, fp string, "
         "band_id int, band_hash string",
     )
     return (
-        v_rows.unionByName(fp_rows)
-        .unionByName(band_rows)
+        labeled.select(F.explode(rows).alias("_row"))
+        .select("_row.*")
+        .distinct()
         .unionByName(meta_row)
     )
 

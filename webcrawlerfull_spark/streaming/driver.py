@@ -222,8 +222,7 @@ def _fetch(
     Returns the documents and the fetched/parsed counts, observed on the
     write (one row per scheduled URL)."""
     pages = fetch_and_parse(
-        scheduled.repartition(n_fetch, F.xxhash64("url")), world,
-        extra_cols=["queue_pos"], materialize_spans=False,
+        scheduled.repartition(n_fetch, F.xxhash64("url")), world
     )
     obs = Observation()
     catalog.write_round(
@@ -292,21 +291,13 @@ def _doc_dedup(
     ok_docs = docs.where(F.col("status") == "ok").select(
         "doc_id", F.concat_ws(" ", "texts").alias("_text")
     )
-    # one text scan per round: the per-doc signature record (fp + band
-    # hashes, fixed-width) is persisted because the stacked delta
-    # consumes it from three union branches
+    # the stacked delta is one linear chain over sigs, so the round's
+    # text is scanned once by the write itself
     sigs = dedup_signatures(
         ok_docs, "doc_id", "_text", cfg.dedup_k, cfg.dedup_bands,
         cfg.dedup_family,
         kernel=(cfg.dedup_family == "fast" and cfg.dedup_bands > 0),
-    ).persist()
-    # MATERIALIZE the cache before building the delta: the stacked frame
-    # references sigs SIX times (three union branches, each reading sigs
-    # plus the reps frame derived from sigs), and a cold persist races —
-    # every reference re-scans the round's full text (measured 190 s vs
-    # ~25 s on a 200k-doc round at 32 cores, BENCH §8). One count() runs
-    # the text scan exactly once and the six readers hit the cache.
-    sigs.count()
+    )
     delta = incremental_dedup_delta(
         ok_docs, dd_state, id_col="doc_id", text_col="_text",
         k=cfg.dedup_k, bands=cfg.dedup_bands, sigs=sigs,
@@ -327,7 +318,6 @@ def _doc_dedup(
         round_id,
     )
     dropped = int(obs_dedup.get["dropped"])
-    sigs.unpersist()
     kept_ids = (
         catalog.read_round("doc_dedup_state", round_id)
         .where((F.col("kind") == "verdict") & (F.col("status") == "kept"))
