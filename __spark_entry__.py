@@ -35,7 +35,7 @@ from webcrawlerfull_spark.operators import seqgen  # noqa: E402
 from webcrawlerfull_spark.operators.aggregates import urls_count_by_domain  # noqa: E402
 from webcrawlerfull_spark.operators.attribution import first_touch  # noqa: E402
 from webcrawlerfull_spark.operators.parse_spans import links_view, parse_spans_udf  # noqa: E402
-from webcrawlerfull_spark.plans.round import politeness_schedule  # noqa: E402
+from webcrawlerfull_spark.streaming.delta_frontier import assign_positions  # noqa: E402
 
 # shared URL corpus (ONE SQL text, both engines) + the crawl-operator
 # oracle suite live in _entry_crawl_ops; re-exported here for the tools
@@ -198,19 +198,19 @@ def _q_frontier_topk(spark, sf_dir, cap=15):
 
 
 def _q_politeness(spark, sf_dir, budget=5):
+    """Each host's first budgeted slice, ranked by the crawl's queue."""
     c = _corpus(spark, sf_dir).select(
         "url",
         _netloc(F.col("url")).alias("host"),
-        F.lit("d").alias("domain"),
         F.lit(0).alias("depth"),
         P.category_priority(F.col("url")).alias("priority"),
         F.col("seq").alias("discovery_seq"),
-        F.lit(0).alias("salt_bucket"),
-        F.lit(0).alias("round"),
-        F.col("seq").alias("queue_pos"),
     )
-    scheduled, _deferred = politeness_schedule(c, budget, salt_partitions=8)
-    return scheduled.select("host", "url")
+    return (
+        assign_positions(c, None, budget)
+        .where(F.col("pos") < budget)
+        .select("host", "url")
+    )
 
 
 def _q_seen_antijoin(spark, sf_dir):

@@ -11,6 +11,7 @@ band pruning correctness."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -395,16 +396,15 @@ def test_positions_dense_and_banded(spark):
 
 
 @pytest.mark.parametrize("seed,budget", [(1, 1), (2, 3), (3, 7)])
-def test_first_slice_matches_politeness_schedule(spark, seed, budget):
+def test_first_slice_matches_python_reference(spark, seed, budget):
     """On a URL-unique frontier with nothing seen, the budgeted crawl's
     first slice (assign_positions -> each host's window pos < budget ->
-    schedule_slice) schedules exactly what politeness_schedule (the
-    operator the o5_politeness_budget gate pins) schedules, with the
-    same per-domain queue_pos. Hosts of uneven size share domains, and
-    discovery_seq collides within a host so the url tie-break counts."""
+    schedule_slice) is a plain-Python reference: each host's rows sorted
+    by (depth, priority, discovery_seq, url) and cut at the budget, then
+    queue_pos = the dense per-domain rank in that order. Hosts of uneven
+    size share domains, and discovery_seq collides within a host so the
+    url tie-break counts."""
     import random
-
-    from webcrawlerfull_spark.plans.round import politeness_schedule
 
     rng = random.Random(seed)
     rows = [
@@ -424,20 +424,60 @@ def test_first_slice_matches_politeness_schedule(spark, seed, budget):
     )
     seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
     delta = dfq.schedule_slice(candidates, seen, None, cfg)
-    scheduled, _ = politeness_schedule(frontier, budget, salt_partitions=4)
 
-    def key(df):
-        return sorted(
-            (r["host"], r["url"], r["queue_pos"])
-            for r in df.select("host", "url", "queue_pos").collect()
-        )
+    def order(r):
+        return (r["depth"], r["priority"], r["discovery_seq"], r["url"])
 
-    got = key(delta)
-    assert got == key(scheduled)
+    picked = []
+    for h in {r["host"] for r in rows}:
+        picked += sorted((r for r in rows if r["host"] == h), key=order)[:budget]
+    want = []
+    for d in {r["domain"] for r in picked}:
+        in_domain = sorted((r for r in picked if r["domain"] == d), key=order)
+        want += [(r["host"], r["url"], q) for q, r in enumerate(in_domain)]
+    got = sorted(
+        (r["host"], r["url"], r["queue_pos"])
+        for r in delta.select("host", "url", "queue_pos").collect()
+    )
+    assert got == sorted(want)
     assert len(got) == sum(
         min(budget, sum(r["host"] == h for r in rows))
         for h in {r["host"] for r in rows}
     )
+
+
+def test_o5_gate_entry_matches_oracle(spark, sf_dir, monkeypatch):
+    """The o5_politeness_budget gate entry (assign_positions over the
+    corpus, pos < 5) equals its DuckDB oracle_sql(), order-insensitive:
+    200 rows at sf0.001, duplicate URLs included. The corpus's
+    discovery_seq is unique, so that check cannot see the url
+    tie-break: the entry then runs on seq % 3 against the same oracle
+    with url appended to its ORDER BY."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    con = duckdb.connect()
+    part = os.path.join(sf_dir, "part.parquet")
+    con.execute(f"CREATE VIEW part AS SELECT * FROM read_parquet('{part}')")
+    oracle = entry.oracle_sql()["o5_politeness_budget"]
+
+    def check(sql):
+        got = entry.queries()["o5_politeness_budget"](spark, sf_dir)
+        got = sorted(tuple(r) for r in got.collect())
+        assert got == sorted(con.execute(sql).fetchall())
+        return got
+
+    assert len(check(oracle)) == 200
+    tied = oracle.replace("p_partkey AS seq", "p_partkey % 3 AS seq")
+    tied = tied.replace("ORDER BY priority, seq)", "ORDER BY priority, seq, url)")
+    assert tied.count("% 3 AS seq") == 1 and tied.count("seq, url)") == 1
+    corpus = entry._corpus
+    monkeypatch.setattr(
+        entry, "_corpus",
+        lambda s, d: corpus(s, d).withColumn("seq", F.col("seq") % 3),
+    )
+    check(tied)
 
 
 def _queue_catalog(spark, root, budget=5):

@@ -298,6 +298,7 @@ def test_first_touch_products_matches_generic(spark):
     the products-chain attribution must pick exactly the rows the
     generic struct-min first_touch picks, including multi-domain urls,
     rank ties across pages, and depth recovery."""
+    from webcrawlerfull_spark.config import MAX_DEPTH, CrawlConfig
     from webcrawlerfull_spark.operators.attribution import (
         first_touch,
         first_touch_products,
@@ -321,7 +322,6 @@ def test_first_touch_products_matches_generic(spark):
     )
     for max_depth in (3, 1000):
         fast = first_touch_products(m, max_depth)
-        assert fast is not None
         got = {
             (r["domain"], r["url"]): (r["parser"], r["depth"])
             for r in fast.collect()
@@ -333,17 +333,21 @@ def test_first_touch_products_matches_generic(spark):
         }
         assert got == want
     assert fast.schema["depth"].dataType.simpleString() == "int"
-    # absurd depth -> generic fallback signal
-    assert first_touch_products(m, 1 << 60) is None
+    # a depth past the packing is refused, by the config up front too
+    first_touch_products(m, MAX_DEPTH)
+    with pytest.raises(ValueError, match="max_depth"):
+        first_touch_products(m, MAX_DEPTH + 1)
+    with pytest.raises(ValueError, match="max_depth"):
+        CrawlConfig(max_depth=MAX_DEPTH + 1)
+    CrawlConfig(max_depth=MAX_DEPTH)
 
 
-def test_first_touch_products_falls_back_past_four_parsers(
+def test_first_touch_products_rejects_a_fifth_parser(
     spark, tmp_path, monkeypatch
 ):
     """parser_rank rides in 2 bits of the packed attribution key: with a
-    fifth cascade parser the specialization must decline, and the
-    products chain must attribute through the generic first_touch (a
-    packed rank 4 would alias to rank 0, 'simple')."""
+    fifth cascade parser the specialization and the products chain must
+    raise (a packed rank 4 would alias to rank 0, 'simple')."""
     from webcrawlerfull_spark.config import CrawlConfig
     from webcrawlerfull_spark.operators import cascade
     from webcrawlerfull_spark.operators.attribution import first_touch_products
@@ -360,17 +364,13 @@ def test_first_touch_products_falls_back_past_four_parsers(
         "page_url string, host string, domain string, depth int, "
         "queue_pos long, url string, parser string, parser_rank int",
     )
-    assert first_touch_products(m, 3) is not None
+    first_touch_products(m, 3)
     monkeypatch.setattr(cascade, "PARSER_RANK", five)
-    assert first_touch_products(m, 3) is None
+    with pytest.raises(ValueError, match="5 parsers"):
+        first_touch_products(m, 3)
 
     cat = Catalog(spark, str(tmp_path))
     stats = spark.createDataFrame([("d/pg0", 1)], "page_url string, n int")
     # m stands in for the cascade's page_arrays base too
-    n = _products_chain(cat, CrawlConfig(max_depth=3), m, stats, m, 0)
-    got = {
-        r["url"]: (r["parser"], r["depth"])
-        for r in cat.read_round("products", 0).collect()
-    }
-    assert n == 2
-    assert got == {"u/x": ("extra", 1), "u/y": ("simple", 1)}
+    with pytest.raises(ValueError, match="5 parsers"):
+        _products_chain(cat, CrawlConfig(max_depth=3), m, stats, m, 0)

@@ -1,5 +1,5 @@
-"""Scale-path operators the reference can't express: the per-host
-politeness_schedule operator, robots gating, and the Structured
+"""Scale-path operators the reference can't express: a budgeted
+crawl's first per-host slice, robots gating, and the Structured
 Streaming analogue over the events table. Budgeted crawls themselves
 are tested in test_delta_frontier.py."""
 
@@ -7,8 +7,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.config import CrawlConfig
-from webcrawlerfull_spark.plans.round import apply_robots, politeness_schedule
+from webcrawlerfull_spark.functions.robots import apply_robots
+from webcrawlerfull_spark.streaming.delta_frontier import (
+    assign_positions,
+    schedule_slice,
+)
 from webcrawlerfull_spark.streaming.driver import round_partitions
 
 
@@ -32,14 +37,28 @@ def _frontier(spark, n_per_host=50, hosts=("a", "b", "c")):
     return spark.createDataFrame(rows)
 
 
+def _first_slice(f, budget):
+    """(scheduled, waiting): the crawl's first budgeted slice of frontier
+    ``f`` with nothing seen (assign_positions -> pos < budget ->
+    schedule_slice) and the rows left in the queue."""
+    spark = f.sparkSession
+    ranked = assign_positions(f, None, budget)
+    seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
+    scheduled = schedule_slice(
+        ranked.where(F.col("pos") < budget), seen, None,
+        CrawlConfig(politeness_budget=budget),
+    )
+    return scheduled, ranked.where(F.col("pos") >= budget)
+
+
 def test_politeness_budget_respected(spark):
     f = _frontier(spark)
-    scheduled, deferred = politeness_schedule(f, budget=7, salt_partitions=4)
+    scheduled, deferred = _first_slice(f, 7)
     per_host = {
         r["host"]: r["n"]
         for r in scheduled.groupBy("host").agg(F.count("*").alias("n")).collect()
     }
-    assert all(n == 7 for n in per_host.values())
+    assert sorted(per_host.values()) == [7, 7, 7]
     assert deferred.count() == 3 * (50 - 7)
     # scheduled are the budget-best by (depth, priority, discovery_seq)
     got = sorted(
@@ -53,7 +72,7 @@ def test_politeness_budget_respected(spark):
 
 
 def test_scheduled_queue_pos_is_dense_fetch_order(spark):
-    """politeness_schedule re-derives queue_pos on the scheduled slice as
+    """schedule_slice re-derives queue_pos on the scheduled slice as
     the dense per-domain rank under the politeness ordering keys — the
     consumers (first-touch attribution, floor(queue_pos/10) batch
     visibility) read it as fetch order, so the input frontier's
@@ -76,7 +95,7 @@ def test_scheduled_queue_pos_is_dense_fetch_order(spark):
                 }
             )
     f = spark.createDataFrame(rows)
-    scheduled, _ = politeness_schedule(f, budget=8, salt_partitions=4)
+    scheduled, _ = _first_slice(f, 8)
     got = scheduled.collect()
     for dom in {r["domain"] for r in got}:
         sl = [r for r in got if r["domain"] == dom]

@@ -23,8 +23,8 @@ from webcrawlerfull_spark.operators.frontier import (  # noqa: E402
     seed_frontier,
 )
 from webcrawlerfull_spark.operators.parse_spans import fetch_and_parse  # noqa: E402
-from webcrawlerfull_spark.plans.round import politeness_schedule  # noqa: E402
 from webcrawlerfull_spark.session import get_spark  # noqa: E402
+from webcrawlerfull_spark.streaming import delta_frontier as dfq  # noqa: E402
 from webcrawlerfull_spark.synthgen import World  # noqa: E402
 from webcrawlerfull_spark import schemas  # noqa: E402
 
@@ -47,7 +47,10 @@ def main() -> None:
     mentions, page_stats, _arrays = run_cascade(pages)
     seen = spark.createDataFrame([], schema=schemas.SEEN_EXACT)
     nf = build_next_frontier(pages, frontier, seen, 3, 0)
-    sched, _ = politeness_schedule(frontier, budget=5, salt_partitions=8)
+    first_slice = dfq.schedule_slice(
+        dfq.assign_positions(frontier, None, 5).where(F.col("pos") < 5),
+        seen, None, CrawlConfig(politeness_budget=5),
+    )
 
     # the crawl driver's per-round doc-dedup write (stage 2b): delta over
     # the signature kernel's frame vs a one-round prior state
@@ -90,10 +93,13 @@ def main() -> None:
             "bounded survivors — no task ever sorts a hot domain alone.",
         ),
         (
-            "politeness schedule (salted two-phase top-k)",
-            sched,
-            "Expect: two window stages; phase 1 partitions by (host, salt) so "
-            "a hot host's sort is spread; phase 2 ranks the reduced set.",
+            "budgeted first slice (assign_positions → pos < budget → schedule_slice)",
+            first_slice,
+            "Expect: one window per host under the politeness order (the "
+            "queue's insertion rank) and the pos < budget filter; the "
+            "keep-first-by-pos aggregate on url; the seen anti-join; one "
+            "window per domain stamping queue_pos. Budgeted rounds read "
+            "their slice from frontier_q instead of ranking here.",
         ),
         (
             "crawl doc-dedup round delta (stage 2b, one write per round)",

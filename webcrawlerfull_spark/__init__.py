@@ -7,8 +7,9 @@ stack; this package replaces it with DataFrame-resident state:
 - ``operators.parse_spans``   — HTML → interleaved spans (the input_hint payload)
 - ``functions.urlnorm``       — URL normalization as native Spark columns
 - ``functions.predicates``    — pagination / product / category predicates
-- ``plans.round``             — schedule-side round operators (politeness, robots)
+- ``functions.robots``        — robots.txt rules and the per-round robots gate
 - ``streaming.driver``        — micro-batch crawl loop with resume
+- ``streaming.delta_frontier`` — the budgeted per-host queue and its politeness order
 - ``operators.bloom``         — partitioned bloom URL-seen filter
 - ``oracle``                  — vendored single-process reference semantics
   (the pytest golden oracle; intentionally NOT Spark)

@@ -121,6 +121,11 @@ SEQGEN_MIN_PRODUCTS = 3           # tasks.py:114
 SEQGEN_SAMPLE = 10                # tasks.py:132
 SEQGEN_MAX_URLS = 30              # tasks.py:112
 
+# the deepest crawl the products chain attributes: first_touch_products
+# packs queue_pos (45 bits), parser_rank (2) and depth (its bit length
+# + 1) into one bigint
+MAX_DEPTH = (1 << 15) - 1
+
 
 def combined_regex(patterns: list[str]) -> str:
     """OR-combine a pattern list into one regex (compiled once JVM-side)."""
@@ -241,6 +246,10 @@ class CrawlConfig:
     frontier_mode: str = "delta"
 
     def __post_init__(self):
+        if self.max_depth > MAX_DEPTH:
+            raise ValueError(
+                f"max_depth={self.max_depth}: at most {MAX_DEPTH}"
+            )
         if self.frontier_mode != "delta":
             raise ValueError(
                 f"frontier_mode={self.frontier_mode!r}: the only frontier "

@@ -12,7 +12,7 @@ literal (documented divergence).
 The per-line state machine (am I inside a ``*`` section?) folds over the
 line array with ``aggregate`` — native, codegen-eligible, no Python. At
 crawl scale the robots table is one small row per host, broadcast-joined
-against the frontier (plans/round.apply_robots).
+against the frontier (``apply_robots``).
 """
 
 from __future__ import annotations
@@ -124,7 +124,7 @@ def parse_robots(
     df: DataFrame, host_col: str = "host", txt_col: str = "robots_txt"
 ) -> DataFrame:
     """(host, robots_txt) -> (host, rules, disallow_prefixes) — the
-    shape plans/round.apply_robots consumes (``rules`` drives the
+    shape ``apply_robots`` consumes (``rules`` drives the
     longest-match gate; ``disallow_prefixes`` is the legacy projection,
     kept so pre-Allow robots tables keep working)."""
     rules = robots_rules(F.col(txt_col))
@@ -135,3 +135,29 @@ def parse_robots(
             F.filter(rules, lambda r: ~r["allow"]), lambda r: r["prefix"]
         ).alias("disallow_prefixes"),
     )
+
+
+def apply_robots(frontier: DataFrame, robots: DataFrame | None) -> DataFrame:
+    """Robots gating: drop frontier URLs blocked by their host's ``*``
+    rules; the crawl driver (streaming/driver.py) applies it to every
+    round's slice. A robots table with a ``rules`` column (the
+    ``parse_robots`` shape) gets the ``blocked_by_rules`` longest-match
+    precedence; a legacy disallow-prefix-only table falls back to
+    any-prefix blocking. The reference has no robots handling —
+    engine-side addition, None disables it (parity mode)."""
+    if robots is None:
+        return frontier
+    joined = frontier.join(F.broadcast(robots), "host", "left")
+    # a bare "https://host" URL has empty path but means "/" — normalize
+    # so Disallow "/" blocks the seed itself
+    raw_path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit(""))
+    path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
+    extra = [c for c in ("rules", "disallow_prefixes") if c in robots.columns]
+    if "rules" in robots.columns:
+        blocked = blocked_by_rules(path, F.col("rules"))
+    else:
+        blocked = F.exists(
+            F.coalesce(F.col("disallow_prefixes"), F.array()),
+            lambda p: path.startswith(p),
+        )
+    return joined.where(~blocked).drop(*extra)

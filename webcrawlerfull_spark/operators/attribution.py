@@ -25,10 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webcrawlerfull_spark.config import MAX_DEPTH
 
-def first_touch_products(
-    mentions: DataFrame, max_depth: int
-) -> DataFrame | None:
+
+def first_touch_products(mentions: DataFrame, max_depth: int) -> DataFrame:
     """The crawl products chain's specialization of ``first_touch``
     (partition (domain, url), order (queue_pos, parser_rank)) that
     compiles to a codegen'd HashAggregate instead of the SortAggregate
@@ -36,18 +36,18 @@ def first_touch_products(
     every mention partition was the products stage's dominant cost).
 
     Returns (domain, url, parser, depth) of each (domain, url)'s first
-    mention, or None when ``max_depth`` is too large for the packing or
-    the cascade has more than four parsers (parser_rank gets 2 bits; a
-    fifth rank would silently alias) — the caller then falls back to the
-    generic ``first_touch``.
+    mention. Raises ValueError when ``max_depth`` exceeds
+    ``config.MAX_DEPTH`` (``CrawlConfig`` refuses such a depth up front)
+    or the cascade has more than four parsers (parser_rank gets 2 bits;
+    a fifth rank would silently alias).
 
     Precondition: (domain, url, queue_pos) is unique in ``mentions``,
     i.e. queue_pos is dense per domain, one value per fetched page, as
     the driver writes it (a row_number over each domain's fetch order:
     the per-domain rank of the next frontier in operators/frontier.py,
-    re-derived on the scheduled slice by plans/round.py and
-    streaming/delta_frontier.py). Within one page a product url
-    appears in at most ONE parser array (config_only/ai_only/seq_arr
+    re-derived on the budgeted slice by
+    streaming/delta_frontier.schedule_slice). Within one page a product
+    url appears in at most ONE parser array (config_only/ai_only/seq_arr
     are disjoint from the earlier ranks by construction, and each array
     is distinct), so the precondition holds for every driver call —
     min over a packed bigint with
@@ -64,9 +64,13 @@ def first_touch_products(
     two can pick different rows."""
     from webcrawlerfull_spark.operators.cascade import PARSER_RANK
 
+    if max_depth > MAX_DEPTH or len(PARSER_RANK) > 4:
+        raise ValueError(
+            f"max_depth={max_depth} (at most {MAX_DEPTH}) with "
+            f"{len(PARSER_RANK)} parsers (at most 4) does not fit the "
+            "packed first-touch key"
+        )
     depth_bits = max(4, int(max_depth).bit_length() + 1)
-    if depth_bits + 2 + 45 > 63 or len(PARSER_RANK) > 4:
-        return None
     shift_rank = depth_bits
     shift_pos = depth_bits + 2
     packed = (
@@ -85,20 +89,6 @@ def first_touch_products(
     return winners.select(
         "domain", "url", parser.alias("parser"), depth.alias("depth")
     )
-
-
-def first_touch_or_packed(mentions: DataFrame, max_depth: int) -> DataFrame:
-    """(domain, url, parser, depth) of each (domain, url)'s first
-    mention in crawl order (queue_pos, parser_rank): the packed
-    ``first_touch_products`` when it fits, else the generic struct-min
-    ``first_touch``, which picks the identical row under the same
-    precondition."""
-    products = first_touch_products(mentions, max_depth)
-    if products is None:
-        products = first_touch(
-            mentions, ["queue_pos", "parser_rank"], ["domain", "url"]
-        ).select("domain", "url", "parser", "depth")
-    return products
 
 
 def first_touch(

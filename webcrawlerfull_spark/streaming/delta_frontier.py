@@ -71,7 +71,6 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from webcrawlerfull_spark import config as C
 from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.operators import bloom
-from webcrawlerfull_spark.plans.round import politeness_order
 
 CURSOR = StructType(
     [
@@ -95,12 +94,28 @@ MAX_BAND_INLIST = 128
 QUEUE_COMPACT_DIRS = 8
 
 
+def politeness_order() -> list:
+    """The per-host politeness order, (depth, priority, discovery_seq,
+    url) ascending: the rank ``assign_positions`` gives each inserted
+    row and the per-domain fetch order ``schedule_slice`` stamps as
+    queue_pos. The url tie-break: discovery_seq is unique per domain
+    only within one frontier generation; rows of different generations
+    can collide, and the ranks must be deterministic. Built per call —
+    F.col needs an active session on classic pyspark."""
+    return [
+        F.col("depth").asc(), F.col("priority").asc(),
+        F.col("discovery_seq").asc(), F.col("url").asc(),
+    ]
+
+
 def assign_positions(
     rows: DataFrame, cursor: DataFrame | None, budget: int
 ) -> DataFrame:
     """Dense per-host positions for one insertion batch: politeness-key
     rank within the batch, offset past the host's ``next_pos``. The
-    window sorts ONE round's delta only — never the backlog."""
+    window sorts ONE round's delta only — never the backlog. The
+    ``o5_politeness_budget`` gate entry runs it with no cursor and keeps
+    ``pos < budget``: each host's first slice."""
     w = Window.partitionBy("host").orderBy(*politeness_order())
     ranked = rows.withColumn("_rk", F.row_number().over(w) - 1)
     if cursor is not None:
@@ -271,7 +286,7 @@ def schedule_slice(
     been fetched since — bloom-gated exact, no false negatives), then
     stamp the dense per-domain fetch-order queue_pos every downstream
     consumer reads (first-touch attribution, floor(queue_pos/10) batch
-    visibility) — the politeness_schedule keys (plans.round).
+    visibility) — under ``politeness_order``.
 
     The keep-first dedup is the first_touch min(struct) aggregate (r7,
     VERDICT r6 finding #2): map-side partial aggregation instead of a

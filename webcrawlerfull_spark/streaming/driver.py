@@ -29,11 +29,12 @@ from pyspark.sql import functions as F
 
 from webcrawlerfull_spark import schemas
 from webcrawlerfull_spark.config import CrawlConfig
+from webcrawlerfull_spark.functions.robots import apply_robots
 from webcrawlerfull_spark.operators.bloom import (
     scheme_ok,
     update_filters,
 )
-from webcrawlerfull_spark.operators.attribution import first_touch_or_packed
+from webcrawlerfull_spark.operators.attribution import first_touch_products
 from webcrawlerfull_spark.operators.cascade import run_cascade
 from webcrawlerfull_spark.operators.textdedup import (
     check_dedup_scheme,
@@ -42,7 +43,6 @@ from webcrawlerfull_spark.operators.textdedup import (
 )
 from webcrawlerfull_spark.operators.frontier import build_next_frontier, seed_frontier
 from webcrawlerfull_spark.operators.parse_spans import fetch_and_parse
-from webcrawlerfull_spark.plans.round import apply_robots
 from webcrawlerfull_spark.sources.catalog import Catalog
 from webcrawlerfull_spark.streaming import delta_frontier as dfq
 from webcrawlerfull_spark.synthgen import World
@@ -346,7 +346,7 @@ def _products_chain(
     # runs exactly once per round (J7). Per-domain first touch (reference
     # keeps url_first_found_by per domain, tasks.py:397): a URL reachable
     # from two seed domains keeps one attributed row per domain.
-    products = first_touch_or_packed(
+    products = first_touch_products(
         catalog.read_round("mentions", round_id), cfg.max_depth
     )
     prior = catalog.read_all("products", up_to_round=round_id - 1)
