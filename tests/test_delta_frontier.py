@@ -449,10 +449,11 @@ def test_first_slice_matches_python_reference(spark, seed, budget):
 def test_o5_gate_entry_matches_oracle(spark, sf_dir, monkeypatch):
     """The o5_politeness_budget gate entry (assign_positions over the
     corpus, pos < 5) equals its DuckDB oracle_sql(), order-insensitive:
-    200 rows at sf0.001, duplicate URLs included. The corpus's
-    discovery_seq is unique, so that check cannot see the url
-    tie-break: the entry then runs on seq % 3 against the same oracle
-    with url appended to its ORDER BY."""
+    200 rows at sf0.001, duplicate URLs included. No host there has
+    more than five rows and the corpus's discovery_seq is unique, so
+    that check cannot see the url tie-break: the entry then runs with
+    seq tied at 0 and a budget of 2 against the same oracle, cut at
+    rn <= 2 with url appended to its ORDER BY."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -462,22 +463,26 @@ def test_o5_gate_entry_matches_oracle(spark, sf_dir, monkeypatch):
     con.execute(f"CREATE VIEW part AS SELECT * FROM read_parquet('{part}')")
     oracle = entry.oracle_sql()["o5_politeness_budget"]
 
-    def check(sql):
-        got = entry.queries()["o5_politeness_budget"](spark, sf_dir)
+    def check(sql, budget=5):
+        got = entry.queries()["o5_politeness_budget"](spark, sf_dir, budget)
         got = sorted(tuple(r) for r in got.collect())
         assert got == sorted(con.execute(sql).fetchall())
         return got
 
     assert len(check(oracle)) == 200
-    tied = oracle.replace("p_partkey AS seq", "p_partkey % 3 AS seq")
-    tied = tied.replace("ORDER BY priority, seq)", "ORDER BY priority, seq, url)")
-    assert tied.count("% 3 AS seq") == 1 and tied.count("seq, url)") == 1
+    tied = (
+        oracle.replace("p_partkey AS seq", "0 AS seq")
+        .replace("ORDER BY priority, seq)", "ORDER BY priority, seq, url)")
+        .replace("WHERE rn <= 5", "WHERE rn <= 2")
+    )
+    assert tied.count("0 AS seq") == 1 and tied.count("seq, url)") == 1
+    assert tied.count("rn <= 2") == 1
     corpus = entry._corpus
     monkeypatch.setattr(
         entry, "_corpus",
-        lambda s, d: corpus(s, d).withColumn("seq", F.col("seq") % 3),
+        lambda s, d: corpus(s, d).withColumn("seq", F.col("seq") * 0),
     )
-    check(tied)
+    assert len(check(tied, budget=2)) < 200
 
 
 def _queue_catalog(spark, root, budget=5):
